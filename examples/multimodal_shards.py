@@ -1,9 +1,9 @@
 """Multimodal shard-ingest example: WebDataset TARs end-to-end.
 
 Synthesizes two WebDataset shards in a temp dir (GIF/JPEG/PNG/WebP
-images — lossy VP8 and a VP8X+alpha still included — plus captions and
-MP4/MP3 sidecars; every payload built by this repo's own codec-free
-encoders), then runs the ingest chain a multimodal curation job would:
+images — an RGBA lossless WebP included — plus captions and MP4/MP3
+sidecars; every payload built by this repo's own codec-free encoders),
+then runs the ingest chain a multimodal curation job would:
 
     read_webdataset (one task per shard)
     -> image_features on real decoded pixels (GIF/JPEG/PNG/WebP)
@@ -24,12 +24,6 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# This example's lossy-WebP samples were encoded by THIS repo's own VP8
-# encoder, so the shared entropy tables round-trip them exactly — safe
-# to opt into the experimental lossy decode here. Leave this unset for
-# crawled (externally-encoded) WebP; see scale/_vp8l.py for why.
-os.environ["SPARK_TRACKINTEL_VP8_EXPERIMENTAL"] = "1"
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -43,7 +37,7 @@ from trackintel_spark.scale.multimodal import (
     video_metadata,
 )
 from trackintel_spark.scale._jpeg import encode_jpeg
-from trackintel_spark.scale._vp8 import encode_webp_lossy, encode_webp_vp8x
+from trackintel_spark.scale._vp8l import encode_webp
 from trackintel_spark.scale.text import quality_score
 from trackintel_spark.sources import read_webdataset
 
@@ -96,12 +90,10 @@ def main() -> None:
             ("000000.txt", b"a smooth two-way gradient over a blue base"),
             ("000001.gif", encode_gif(flat)),
             ("000001.txt", b"flat green card"),
-            # r11: lossy WebP (VP8 key frame) and a VP8X still with a
-            # real ALPH alpha plane — both decode in-container
-            ("000002.webp", encode_webp_lossy(rgb, qi=20)),
-            ("000002.txt", b"the gradient again, lossy webp"),
-            ("000003.webp", encode_webp_vp8x(flat, np.full((16, 16), 128, np.uint8), qi=8)),
-            ("000003.txt", b"green card with 50% alpha (vp8x)"),
+            ("000002.webp", encode_webp(rgb)),
+            ("000002.txt", b"the gradient again, lossless webp"),
+            ("000003.webp", encode_webp(np.dstack([flat, np.full((16, 16), 128, np.uint8)]))),
+            ("000003.txt", b"green card with 50% alpha (rgba webp)"),
         ]
     )
     shard1 = _shard(

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from trackintel_spark.geogr import check_planar, transform_points, transform_xy
 from trackintel_spark.functions.spatial import haversine_m
+from tests.conftest import requires_reference
 
 
 def _pts(spark, rows):
@@ -135,6 +136,7 @@ def test_distance_matrix_euclidean_on_projected(spark):
         assert abs(hav[k] - eu[k]) / hav[k] < 2e-3
 
 
+@requires_reference("geolife/geolife_staypoints.csv", "area/tsinghua.geojson")
 def test_spatial_filter_tsinghua_arcgis_golden(spark):
     """Reference geogr/test_filter.py: 13 geolife staypoints fall within
     the Tsinghua campus polygon (ArcGIS-verified). The polygon ships in
@@ -164,6 +166,7 @@ def test_spatial_filter_tsinghua_arcgis_golden(spark):
     assert intersects.count() == 13  # points: within == intersects
 
 
+@requires_reference("geolife/geolife_triplegs.csv", "area/tsinghua.geojson")
 def test_spatial_filter_triplegs_arcgis_golden(spark):
     """Reference geogr/test_filter.py tripleg goldens (ArcGIS-verified):
     within=9, intersects=20, crosses=intersects-within=11 — exercising
@@ -189,6 +192,7 @@ def test_spatial_filter_triplegs_arcgis_golden(spark):
     assert spatial_filter(tpls_utm, areas, method="crosses").count() == 11
 
 
+@requires_reference("geolife/geolife_staypoints.csv", "area/tsinghua.geojson")
 def test_spatial_filter_locations_arcgis_golden(spark):
     """Reference chain: geolife staypoints -> generate_locations(eps=10,
     num_samples=1, dataset-level) -> filter location centers by the

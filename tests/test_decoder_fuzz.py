@@ -19,7 +19,6 @@ import numpy as np
 import pytest
 
 from trackintel_spark.scale._jpeg import decode_jpeg, encode_jpeg
-from trackintel_spark.scale._vp8 import encode_webp_lossy
 from trackintel_spark.scale._vp8l import decode_webp, encode_webp
 from trackintel_spark.scale.multimodal import (
     decode_bmp,
@@ -76,17 +75,13 @@ CASES = [
     ("bmp", lambda: encode_bmp(_IMG), decode_bmp),
     ("webp_vp8l", lambda: encode_webp(_rgba(_IMG)), decode_webp),
     ("webp_anim", _mk_anim, decode_webp),
-    ("webp_vp8", lambda: encode_webp_lossy(_IMG, qi=20), decode_webp),
     ("wav", lambda: _WAV, decode_wav_pcm),
     ("ppm", lambda: b"P6\n24 24\n255\n" + _IMG.tobytes(), decode_ppm),
 ]
 
 
 @pytest.mark.parametrize("name,mk,dec", CASES, ids=[c[0] for c in CASES])
-def test_corrupt_payloads_raise_valueerror_fast(name, mk, dec, monkeypatch):
-    # lossy VP8 through the container is gated (r12) — fuzz the
-    # experimental path anyway: its hygiene contract still holds
-    monkeypatch.setenv("SPARK_TRACKINTEL_VP8_EXPERIMENTAL", "1")
+def test_corrupt_payloads_raise_valueerror_fast(name, mk, dec):
     rng = random.Random(zlib.crc32(name.encode()))  # deterministic across runs
     good = bytearray(mk())
     t0 = time.time()
@@ -121,11 +116,14 @@ def test_container_probes_corrupt_hygiene():
     mp4 = (b"\x00\x00\x00\x18ftypisom\x00\x00\x02\x00isomiso2"
            + b"\x00\x00\x00\x08free" + b"\x00" * 64)
     mp3 = b"\xff\xfb\x90\x00" + b"\x00" * 400
+    # lossy key frame: frame tag (3) + start code 9D012A + 14-bit dims
+    vp8 = b"\x00" * 3 + b"\x9d\x01\x2a" + struct.pack("<HH", 24, 24) + b"\x00" * 8
+    webp = b"RIFF" + struct.pack("<I", 12 + len(vp8)) + b"WEBPVP8 " + struct.pack("<I", len(vp8)) + vp8
     cases = [
         (probe_mp4, mp4),
         (probe_mp3, mp3),
         (probe_gif, encode_gif(_IMG)),
-        (probe_webp, encode_webp_lossy(_IMG, qi=20)),
+        (probe_webp, webp),
     ]
     rng = random.Random(3)
     for probe, good in cases:

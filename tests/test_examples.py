@@ -9,8 +9,11 @@ import os
 import subprocess
 import sys
 
+from tests.conftest import requires_reference
+
 
 @pytest.mark.slow
+@requires_reference("geolife")
 def test_preprocess_trajectories_example():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
@@ -92,6 +95,6 @@ def test_multimodal_shards_example():
     )
     assert "samples: 7 across 2 shards" in out.stdout
     assert "video: 4.0s 320x240 codecs=avc1" in out.stdout
-    # r11: the lossy-WebP and VP8X+alpha samples decode to real pixels
+    # the RGB and RGBA WebP samples decode to real pixels
     assert "image 000002: 48x32" in out.stdout
     assert "image 000003: 16x16" in out.stdout

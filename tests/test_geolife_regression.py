@@ -12,7 +12,6 @@ These tests pin THIS engine's output on the same corpus as the
 regression anchor for future rounds.
 """
 
-import os
 from datetime import datetime
 
 import pytest
@@ -20,10 +19,11 @@ from pyspark.sql import functions as F
 
 from trackintel_spark.operators import generate_staypoints, generate_triplegs
 from trackintel_spark.sources import read_geolife
+from tests.conftest import requires_reference
 
 GEOLIFE_LONG = "/root/reference/tests/data/geolife_long"
 
-pytestmark = pytest.mark.skipif(not os.path.isdir(GEOLIFE_LONG), reason="reference corpus not present")
+pytestmark = requires_reference("geolife_long")
 
 
 @pytest.fixture(scope="module")
@@ -61,6 +61,7 @@ def test_triplegs_geolife_anchor(geolife_pfs):
     assert linked >= 2 * n
 
 
+@requires_reference("geolife_modes")
 def test_geolife_modes_labels_reference_counts(spark):
     """Reference pins (tests/io/test_dataset_reader.py:141-145): users
     10 and 20 carry labels.txt with exactly 434 and 223 intervals; user
@@ -76,6 +77,7 @@ def test_geolife_modes_labels_reference_counts(spark):
     assert labels.filter(F.col("started_at").isNull()).count() == 0
 
 
+@requires_reference("geolife_modes")
 def test_geolife_modes_end_to_end_matching(spark):
     """Reference pipeline on the real geolife_modes corpus
     (tests/io/test_dataset_reader.py:20-26, :183-190): read -> staypoints

@@ -17,6 +17,7 @@ from trackintel_spark.analysis import (
 from trackintel_spark.analysis.metrics import jump_length
 from trackintel_spark.analysis.tracking_quality import split_overlaps
 from trackintel_spark.operators import merge_staypoints
+from tests.conftest import requires_reference
 
 T0 = datetime(2024, 1, 1, 8, 0, 0)
 
@@ -213,12 +214,27 @@ def test_tracking_quality_day(spark):
     assert abs(row.quality - 1800 / 86400) < 1e-12
 
 
+def test_tracking_quality_hour(spark):
+    # 10:30-12:15 on day 0 (T0 is 08:00)
+    sp = _mk_sp(spark, [(0, 1, 150, 255, 8.5, 47.4)])
+    got = {r.hour: r.quality for r in temporal_tracking_quality(sp, "hour").collect()}
+    assert got.keys() == {10, 11, 12}
+    assert abs(got[10] - 0.5) < 1e-12 and abs(got[11] - 1.0) < 1e-12 and abs(got[12] - 0.25) < 1e-12
+    # + 10:00-10:30 on day 2: hour 10 now spans days 0..2, so its
+    # extent is 3 x 3600 s while hours 11 and 12 keep one day
+    sp = _mk_sp(spark, [(0, 1, 150, 255, 8.5, 47.4), (1, 1, 2 * 1440 + 120, 2 * 1440 + 150, 8.5, 47.4)])
+    got = {r.hour: r.quality for r in temporal_tracking_quality(sp, "hour").collect()}
+    assert abs(got[10] - 3600 / (3 * 3600)) < 1e-12
+    assert abs(got[11] - 1.0) < 1e-12 and abs(got[12] - 0.25) < 1e-12
+
+
 def test_tracking_quality_bad_granularity(spark):
     sp = _mk_sp(spark, [(0, 1, 0, 30, 8.5, 47.4)])
     with pytest.raises(ValueError, match="granularity unknown"):
         temporal_tracking_quality(sp, "year")
 
 
+@requires_reference("triplegs_transport_mode_identification.csv")
 def test_predict_transport_mode_reference_fixture(spark):
     """Reference tests/analysis/test_label.py expects slow/motorized/fast
     for the first three rows of its checked-in fixture."""

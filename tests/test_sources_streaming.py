@@ -18,6 +18,7 @@ from trackintel_spark.sources import (
     write_tours_csv,
 )
 from trackintel_spark.streaming import sessionize_stream, staypoints_stream
+from tests.conftest import requires_reference
 
 T0 = datetime(2024, 1, 1, 8, 0, 0)
 
@@ -175,13 +176,9 @@ def test_staypoints_stream_streaming_mode(spark, tmp_path):
     assert len(rows2) == 1 and rows2[0].n_pfs == 3
 
 
+@requires_reference("gpx_data")
 def test_read_gpx_reference_data(spark):
-    import os
-    import pytest as _pytest
-
     path = "/root/reference/tests/data/gpx_data"
-    if not os.path.isdir(path):
-        _pytest.skip("reference gpx data not present")
     from trackintel_spark.sources import read_gpx
 
     pfs = read_gpx(spark, path)
@@ -270,6 +267,10 @@ def test_load_table_handles_every_epoch_unit(spark, tmp_path):
         assert got == "2024-05-01 12:00:00", (unit, got)
 
 
+@requires_reference(
+    *(f"{e}{m}.csv" for e in ("positionfixes", "staypoints", "triplegs", "trips", "locations")
+      for m in ("", "_mod_columns"))
+)
 def test_reference_shipped_csv_fixtures_read(spark):
     """Every CSV fixture the reference ships (tests/data/*.csv) must read
     into a validated entity frame — including the *_mod_columns variants

@@ -15,8 +15,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from trackintel_spark.operators import generate_trips
+from tests.conftest import requires_reference
 
 REF = "/root/reference/tests/data/trips"
+
+pytestmark = requires_reference(
+    *(f"trips/{t}_gaps.csv" for t in ("staypoints", "triplegs", "trips", "sp_tpls"))
+)
 
 
 def _read_semicolon(spark, path):

@@ -93,24 +93,64 @@ def test_roundtrip_flat_and_gradient():
     assert (decode_webp(encode_webp(grad))[:, :, :3] == grad).all()
 
 
-def test_container_rejects_garbage_routes_lossy(monkeypatch):
-    monkeypatch.setenv("SPARK_TRACKINTEL_VP8_EXPERIMENTAL", "1")
+def _riff(*chunks):
+    body = b"".join(
+        tag + len(c).to_bytes(4, "little") + c + (b"\x00" if len(c) & 1 else b"")
+        for tag, c in chunks
+    )
+    return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WEBP" + body
+
+
+# lossy key-frame header: frame tag (3) + start code 9D012A + 14-bit dims
+_VP8_KEYFRAME = (
+    b"\x00" * 3 + b"\x9d\x01\x2a" + (16).to_bytes(2, "little") + (16).to_bytes(2, "little")
+    + b"\x00" * 8
+)
+
+
+def test_container_rejects_garbage_routes_lossy():
     with pytest.raises(ValueError, match="not a WebP"):
         decode_webp(b"RIFFxxxxJUNK")
-    # lossy VP8 now routes to the real _vp8 decoder (r11); a truncated
-    # body is a clean ValueError, not a NotImplementedError gate
+    # lossy VP8 is not decoded: a clean per-row ValueError, whatever
+    # the body holds
     lossy = b"RIFF" + (20).to_bytes(4, "little") + b"WEBP" + b"VP8 " + (4).to_bytes(4, "little") + b"\x00" * 4
     with pytest.raises(ValueError, match="VP8"):
         decode_webp(lossy)
-    # and a real lossy stream decodes end-to-end through the container
-    import numpy as np
 
-    from trackintel_spark.scale._vp8 import encode_webp_lossy
 
-    img = np.full((16, 16, 3), 77, dtype=np.uint8)
-    out = decode_webp(encode_webp_lossy(img, qi=4))
-    assert out.shape == (16, 16, 4)
-    assert np.abs(out[..., :3].astype(int) - 77).max() <= 6
+def test_lossy_webp_fails_per_row_and_passes_resize_through(spark):
+    """Lossy WebP (a bare still, a VP8X+ALPH still, an ANMF frame) is
+    not decoded: decode_webp and the image kernel's decoder raise the
+    per-row ValueError, image_features records NULL fields, and
+    resize_images returns the payload byte for byte."""
+    from trackintel_spark.scale.multimodal import (
+        _decode_image_rgb,
+        image_features,
+        resize_images,
+    )
+
+    vp8x = bytes([0x10, 0, 0, 0]) + (15).to_bytes(3, "little") + (15).to_bytes(3, "little")
+    payloads = {
+        1: _riff((b"VP8 ", _VP8_KEYFRAME)),
+        2: _riff((b"VP8X", vp8x), (b"ALPH", bytes([0]) + b"\x80" * 256), (b"VP8 ", _VP8_KEYFRAME)),
+        3: _riff(
+            (b"VP8X", bytes([0x02]) + vp8x[1:]),
+            (b"ANIM", bytes(6)),
+            (b"ANMF", bytes(6) + vp8x[4:] + bytes(4)
+             + b"VP8 " + len(_VP8_KEYFRAME).to_bytes(4, "little") + _VP8_KEYFRAME),
+        ),
+    }
+    for payload in payloads.values():
+        with pytest.raises(ValueError, match="lossy"):
+            decode_webp(payload)
+        with pytest.raises(ValueError, match="lossy"):
+            _decode_image_rgb(payload)
+    df = spark.createDataFrame(
+        [(k, bytearray(v)) for k, v in payloads.items()], "doc_id long, payload binary"
+    )
+    assert all(r.width is None and r.mean_r is None for r in image_features(df).collect())
+    resized = {r.doc_id: bytes(r.payload) for r in resize_images(df, 4, 4).collect()}
+    assert resized == payloads
 
 
 # ---- crafted streams: features the encoder never emits ----------------------
@@ -409,102 +449,6 @@ def test_crafted_predictor_mode13_truncating_division():
     assert tuple(out[1, 0][:3]) == (4, 4, 4)
     # avg2(4,5)=4; pred = clamp(4 + trunc((4-7)/2)) = 3; +res 0
     assert tuple(out[1, 1][:3]) == (3, 3, 3)
-
-
-def test_vp8x_alph_compressed_lossless_alpha(monkeypatch):
-    monkeypatch.setenv("SPARK_TRACKINTEL_VP8_EXPERIMENTAL", "1")
-    """VP8X ALPH compression method 1: the alpha plane ships as a
-    HEADERLESS VP8L bitstream with values in the green channel. Craft
-    one by hand (no transform bits, literal trees) — a 2x2 plane with
-    distinct alpha values — wrap it with a VP8 base frame, and check
-    decode_webp stitches RGBA together."""
-    import struct as s
-
-    import numpy as np
-
-    from trackintel_spark.scale._vp8 import encode_vp8
-    from trackintel_spark.scale._vp8l import decode_alph
-
-    w = h = 2
-    alphas = [10, 200, 33, 250]  # green-channel values, raster order
-    bw = _BitWriter()
-    bw.write(0, 1)  # no transform
-    bw.write(0, 1)  # no color cache
-    bw.write(0, 1)  # no meta-huffman
-    g, r, b, a, d = _literal_trees(bw, greens=alphas, reds=[0], blues=[0], alphas=[255])
-    for v in alphas:
-        _emit(bw, g, v)
-        _emit(bw, r, 0)
-        _emit(bw, b, 0)
-    body = bytes([1]) + bw.bytes()  # header byte: compression=1, filter=0
-    got = decode_alph(body, w, h)
-    assert got.tolist() == [[10, 200], [33, 250]]
-
-    # through the full container: VP8X + ALPH(method 1) + VP8
-    rgb = np.full((2, 2, 3), 128, dtype=np.uint8)
-    payload = encode_vp8(rgb, qi=4)
-
-    def chunk(tag, body_):
-        return tag + s.pack("<I", len(body_)) + body_ + (b"\x00" if len(body_) & 1 else b"")
-
-    vp8x = bytes([0x10, 0, 0, 0]) + (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
-    inner = b"WEBP" + chunk(b"VP8X", vp8x) + chunk(b"ALPH", body) + chunk(b"VP8 ", payload)
-    out = decode_webp(b"RIFF" + s.pack("<I", len(inner)) + inner)
-    assert out.shape == (2, 2, 4)
-    assert out[:, :, 3].tolist() == [[10, 200], [33, 250]]
-
-
-def test_alph_filter_inversion_vectorized_parity_and_speed():
-    """r12 ADVICE: ALPH prediction-filter inversion must not be a
-    per-pixel Python loop. Pin the vectorized cumsum forms (and the
-    row-wise gradient loop) against an independent naive
-    implementation on random residual planes, then bound wall time on
-    a megapixel plane."""
-    import time
-
-    import numpy as np
-
-    from trackintel_spark.scale._vp8l import decode_alph
-
-    def naive(res, w, h, flt):
-        out = np.zeros((h, w), dtype=np.int64)
-        for y in range(h):
-            for x in range(w):
-                if x == 0 and y == 0:
-                    pred = 0
-                elif flt == 1:
-                    pred = out[y, x - 1] if x > 0 else out[y - 1, 0]
-                elif flt == 2:
-                    pred = out[y - 1, x] if y > 0 else out[y, x - 1]
-                else:
-                    if y == 0:
-                        pred = out[y, x - 1]
-                    elif x == 0:
-                        pred = out[y - 1, x]
-                    else:
-                        g = out[y, x - 1] + out[y - 1, x] - out[y - 1, x - 1]
-                        pred = min(255, max(0, g))
-                out[y, x] = (res[y, x] + pred) & 0xFF
-        return out.astype(np.uint8)
-
-    rng = np.random.default_rng(12)
-    for flt in (1, 2, 3):
-        for w, h in ((1, 1), (7, 1), (1, 9), (23, 17)):
-            res = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            body = bytes([flt << 2]) + res.tobytes()
-            got = decode_alph(body, w, h)
-            assert (got == naive(res.astype(np.int64), w, h, flt)).all(), (flt, w, h)
-    # cumsum filters on a 1 MP plane: the old per-pixel loop took >10 s
-    # per filter; the vectorized form is ~10 ms warm. First call pays
-    # one-time page-fault/init cost on this shared host, so warm up
-    # first and keep a noise margin under the 10x-regression bar.
-    res = rng.integers(0, 256, (1000, 1000), dtype=np.uint8)
-    for flt in (1, 2):
-        body = bytes([flt << 2]) + res.tobytes()
-        decode_alph(body, 1000, 1000)  # warm-up
-        t0 = time.time()
-        decode_alph(body, 1000, 1000)
-        assert time.time() - t0 < 2.0, f"filter {flt} not vectorized"
 
 
 # ---------------------------------------------------------------------------

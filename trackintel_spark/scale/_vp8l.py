@@ -15,8 +15,10 @@ Implements the public "WebP Lossless Bitstream Specification"
 
 Like ``_jpeg.py`` and the GIF LZW codec, this exists so the multimodal
 kernels decode real web image bytes without any codec library in the
-container. VP8 (lossy) stays env-gated — it needs a full DCT video
-intra decoder, out of scope.
+container. Lossy WebP (a ``VP8 `` chunk, still or animation frame) is
+not decoded: it raises the per-row ValueError, so ``image_features``
+records the error and ``resize_images`` passes the payload through
+unchanged.
 
 Performance envelope: correctness-first. Huffman decode and the
 predictor inverse are inherently sequential per pixel and run in plain
@@ -483,16 +485,6 @@ def decode_vp8l(payload: bytes) -> np.ndarray:
     br.read(1)  # alpha-used hint
     if br.read(3) != 0:
         raise ValueError("VP8L: unsupported version")
-    img = _decode_vp8l_body(br, w, h)
-    # internal order is (A, R, G, B) -> return RGBA
-    return img[:, :, [1, 2, 3, 0]]
-
-
-def _decode_vp8l_body(br: _BitReader, w: int, h: int) -> np.ndarray:
-    """Transforms + entropy image for a VP8L stream whose signature and
-    dimensions were already consumed (or, for a VP8X ALPH chunk, never
-    present — the WebP spec ships alpha as exactly this headerless
-    bitstream). Returns the internal (A, R, G, B) array."""
     transforms = []  # (type, data) in reading order
     xsize = w
     seen = set()
@@ -533,117 +525,29 @@ def _decode_vp8l_body(br: _BitReader, w: int, h: int) -> np.ndarray:
         else:  # predictor
             bits, sub = data
             img = _inverse_predictor(img, sub[:, :, 2], bits)
-    return img
-
-
-def decode_alph(body: bytes, w: int, h: int) -> np.ndarray:
-    """Decode a VP8X ALPH chunk to an (h, w) uint8 alpha plane.
-
-    Header byte: rsv(2) | preprocessing(2) | filter(2) | compression(2).
-    Compression 0 = raw w*h bytes, 1 = a HEADERLESS VP8L bitstream with
-    alpha in the green channel. The per-pixel prediction filter
-    (none/horizontal/vertical/gradient, same border fallbacks as the
-    spec) is inverted after decompression; the preprocessing bit is a
-    level-reduction hint with no inverse."""
-    if not body:
-        raise ValueError("ALPH: empty chunk")
-    method = body[0] & 0x3
-    flt = (body[0] >> 2) & 0x3
-    if method == 0:
-        raw = np.frombuffer(body, np.uint8, offset=1)
-        if raw.size < w * h:
-            raise ValueError("ALPH: truncated raw alpha plane")
-        a = raw[: w * h].reshape(h, w).astype(np.int64)
-    elif method == 1:
-        img = _decode_vp8l_body(_BitReader(body, 1), w, h)
-        if img.shape[0] != h or img.shape[1] != w:
-            raise ValueError("ALPH: alpha image dimension mismatch")
-        a = img[:, :, 2].astype(np.int64)  # green channel
-    else:
-        raise ValueError(f"ALPH: unknown compression method {method}")
-    if flt == 0:
-        return a.astype(np.uint8)
-    # Filter inversion is a prefix sum mod 256 (addition mod 256 is
-    # associative, so one cumsum + final mask is exact): horizontal =
-    # row-wise cumsum after chaining column 0 down (the first-column
-    # border falls back to above), vertical is the transpose case.
-    # A per-pixel Python loop here is O(w*h) interpreted ops — a
-    # multi-second-per-megapixel cliff on the ingest path (r12 ADVICE).
-    if flt == 1:  # horizontal: left (first col falls to above)
-        a[:, 0] = np.cumsum(a[:, 0])
-        return (np.cumsum(a, axis=1) & 0xFF).astype(np.uint8)
-    if flt == 2:  # vertical: above (first row falls to left)
-        a[0, :] = np.cumsum(a[0, :])
-        return (np.cumsum(a, axis=0) & 0xFF).astype(np.uint8)
-    # gradient: clamp(left + above - above_left) breaks the prefix-sum
-    # form (clamp is not associative with mod-256 addition), so rows
-    # stay sequential — but borders vectorize and the inner loop runs
-    # over Python lists (~10x numpy scalar indexing).
-    out = np.zeros((h, w), dtype=np.int64)
-    out[0, :] = np.cumsum(a[0, :]) & 0xFF  # y==0 falls back to left
-    out[:, 0] = np.cumsum(a[:, 0]) & 0xFF  # x==0 falls back to above
-    prev = out[0].tolist()
-    for y in range(1, h):
-        row_a = a[y].tolist()
-        cur = [int(out[y, 0])] + [0] * (w - 1)
-        left = cur[0]
-        for x in range(1, w):
-            g = left + prev[x] - prev[x - 1]
-            pred = 255 if g > 255 else (0 if g < 0 else g)
-            left = (row_a[x] + pred) & 0xFF
-            cur[x] = left
-        out[y] = cur
-        prev = cur
-    return out.astype(np.uint8)
+    # internal order is (A, R, G, B) -> return RGBA
+    return img[:, :, [1, 2, 3, 0]]
 
 
 _MAX_ANIM_PIXELS = 1 << 28  # frames x canvas budget (raster hygiene)
 
 
 def _decode_frame_subchunks(data: bytes, pos: int, end: int) -> np.ndarray:
-    """Walk ALPH/VP8/VP8L chunks (top-level still layout or the inside
-    of one ANMF) and return the decoded RGBA frame. Metadata chunks
-    (VP8X/ICCP/EXIF/XMP) are skipped."""
-    alpha = None  # raw ALPH body, decoded once dims are known
+    """Walk the chunks of a top-level still or of one ANMF frame and
+    return the decoded RGBA frame. VP8L carries its own alpha; metadata
+    chunks (VP8X/ICCP/EXIF/XMP) and ALPH, which only ever applies to a
+    lossy VP8 base frame, are skipped."""
     end = min(end, len(data))  # a corrupt ANMF size may claim past EOF
     while pos + 8 <= end:
         tag = data[pos : pos + 4]
         (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : min(pos + 8 + size, end)]
-        if tag == b"ALPH":
-            alpha = bytes(body)
-        elif tag == b"VP8L":
-            return decode_vp8l(body)  # VP8L carries its own alpha
-        elif tag == b"VP8 ":
-            # Lossy VP8 is EXPERIMENTAL for externally-encoded streams:
-            # the clean-room decoder's default entropy tables are only
-            # partially transcribed (see _vp8.py confidence note), and a
-            # range decoder with wrong probabilities mis-decodes
-            # SILENTLY — it cannot fail. Decoding a real libwebp file
-            # here would hand garbage pixels to image_features, and
-            # resize_images would re-encode that garbage OVER the
-            # original payload: silent data corruption. Until the
-            # tables are externally validated, external lossy WebP
-            # raises the per-row ValueError (image_features records the
-            # error, resize_images passes the payload through
-            # unchanged). Opt in via SPARK_TRACKINTEL_VP8_EXPERIMENTAL=1
-            # (set spark.executorEnv.* on a cluster); module-produced
-            # streams round-trip exactly either way via decode_vp8.
-            import os
-
-            if os.environ.get("SPARK_TRACKINTEL_VP8_EXPERIMENTAL") != "1":
-                raise ValueError(
-                    "lossy VP8 (WebP) decode is experimental: entropy "
-                    "tables not externally validated; set "
-                    "SPARK_TRACKINTEL_VP8_EXPERIMENTAL=1 to opt in"
-                )
-            from trackintel_spark.scale._vp8 import decode_vp8
-
-            rgb = decode_vp8(body)
-            h, w = rgb.shape[:2]
-            if alpha is not None:
-                return np.dstack([rgb, decode_alph(alpha, w, h)])
-            return np.dstack([rgb, np.full((h, w), 255, dtype=np.uint8)])
+        if tag == b"VP8L":
+            return decode_vp8l(data[pos + 8 : min(pos + 8 + size, end)])
+        if tag == b"VP8 ":
+            # Lossy WebP is not decoded: the per-row ValueError lets
+            # image_features record the error and resize_images pass
+            # the payload through unchanged.
+            raise ValueError("lossy VP8 WebP is not decoded (lossless VP8L only)")
         pos += 8 + size + (size & 1)
     raise ValueError("WebP: no VP8L or VP8 chunk found")
 
@@ -736,13 +640,10 @@ def decode_webp_frames(data: bytes, max_frames: int | None = None):
 
 def decode_webp(data: bytes) -> np.ndarray:
     """Decode a WebP file (RIFF/WEBP) to RGBA uint8: VP8L (lossless)
-    via :func:`decode_vp8l`, lossy VP8 key frames via the clean-room
-    :mod:`trackintel_spark.scale._vp8` decoder (experimental — see the
-    gate in :func:`_decode_frame_subchunks`), VP8X-wrapped STILLS
-    (canvas header + optional ALPH alpha plane) via the same decoders,
-    and animated VP8X (r12) as the FIRST composited canvas frame (the
-    standard still view of an animation; :func:`decode_webp_frames`
-    returns them all)."""
+    via :func:`decode_vp8l`, VP8X-wrapped VP8L stills, and animated
+    VP8X as the FIRST composited canvas frame (the standard still view
+    of an animation; :func:`decode_webp_frames` returns them all).
+    Lossy VP8 raises ValueError."""
     return decode_webp_frames(data, max_frames=1)[0][0]
 
 

@@ -361,14 +361,9 @@ def _decode_image_rgb(payload: bytes) -> np.ndarray:
     if payload is not None and payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
         from trackintel_spark.scale._vp8l import decode_webp
 
-        try:
-            # VP8L and VP8X-over-VP8L stills (incl. ALPH alpha)
-            # real-decode; lossy VP8 is gated as experimental (r12 —
-            # entropy tables not externally validated, see _vp8l.py)
-            # and animated VP8X raises — both fall to the per-row error
-            return decode_webp(payload)[:, :, :3]
-        except NotImplementedError as e:  # animation compositing
-            raise ValueError(str(e))
+        # lossless and animated WebP real-decode; lossy VP8 is not
+        # decoded and raises — it falls to the per-row error
+        return decode_webp(payload)[:, :, :3]
     img = decode_png(payload)
     c = img.shape[2]
     if c >= 3:
@@ -522,13 +517,12 @@ def resize_images(
                             out.append((pid, payload))
                             continue
                         try:
-                            # VP8L stills re-encode as VP8L; gated lossy
-                            # VP8 (r12) raises here and PASSES THROUGH
-                            # UNCHANGED — never re-encode a payload the
-                            # decoder can't faithfully read
+                            # VP8L stills re-encode as VP8L; lossy VP8
+                            # is not decoded, raises here and PASSES
+                            # THROUGH UNCHANGED
                             img = _dw(payload)[:, :, :3]
                             enc = _ew
-                        except (ValueError, NotImplementedError):
+                        except ValueError:
                             out.append((pid, payload))
                             continue
                     else:
