@@ -271,14 +271,14 @@ def test_osna_conflict_home_wins(spark):
     assert per_loc[2] == "work"
 
 
-def test_tours_session_salting_equivalence(spark, monkeypatch):
+def test_tours_session_salting_equivalence(spark):
     """Splitting a user's trip stream at > max_time gaps (with the
     previous trip seeded as a context row) must be EXACTLY the unsalted
     kernel — including the reference's quirk that a post-gap self-loop
     trip does NOT close a 1-trip tour when the stack was non-empty
     (continuation skips the scan at a location break with
     max_nr_gaps=0), and including max_nr_gaps > 0 GAP bookkeeping."""
-    import trackintel_spark.operators.staypoints as S
+    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
 
     # staypoint id i -> location; users 1 and 2 share the pattern
     pairs = []
@@ -328,13 +328,15 @@ def test_tours_session_salting_equivalence(spark, monkeypatch):
         base = sorted(map(str, base_tours.collect()))
         base_links = sorted(map(str, base_to.select("id", "tour_id").collect()))
 
-        monkeypatch.setattr(S, "_SALT_MIN_USER_ROWS", 0)
-        salted_to, salted_tours = generate_tours(
-            trips, staypoints=sp, max_nr_gaps=gaps, salt_sessions=True
-        )
+        spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")
+        try:
+            salted_to, salted_tours = generate_tours(
+                trips, staypoints=sp, max_nr_gaps=gaps, salt_sessions=True
+            )
+        finally:
+            spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
         assert sorted(map(str, salted_tours.collect())) == base, f"max_nr_gaps={gaps}"
         assert sorted(map(str, salted_to.select("id", "tour_id").collect())) == base_links
-        monkeypatch.setattr(S, "_SALT_MIN_USER_ROWS", 200_000)
         # non-vacuous: tours exist in several sessions
         assert base_tours.count() >= 6
 
@@ -344,17 +346,15 @@ def test_salt_min_user_rows_conf_knob(spark):
     from plans.partitioning: the spark.trackintel.salt.minUserRows conf
     overrides the module default; non-numeric values fall back."""
     from trackintel_spark.plans.partitioning import (
-        SALT_MIN_USER_ROWS_CONF, salt_min_user_rows,
+        DEFAULT_SALT_MIN_USER_ROWS, SALT_MIN_USER_ROWS_CONF, salt_min_user_rows,
     )
 
-    assert salt_min_user_rows(spark) == 200_000
-    assert salt_min_user_rows(spark, 7) == 7
+    assert salt_min_user_rows(spark) == DEFAULT_SALT_MIN_USER_ROWS == 200_000
     try:
         spark.conf.set(SALT_MIN_USER_ROWS_CONF, "123")
         assert salt_min_user_rows(spark) == 123
-        assert salt_min_user_rows(spark, 7) == 123  # conf wins over default
         spark.conf.set(SALT_MIN_USER_ROWS_CONF, "not-a-number")
-        assert salt_min_user_rows(spark, 7) == 7  # graceful fallback
+        assert salt_min_user_rows(spark) == 200_000  # graceful fallback
     finally:
         spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
 

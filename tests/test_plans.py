@@ -7,15 +7,47 @@ from trackintel_spark.plans.partitioning import co_partition_by_user, write_buck
 
 
 def test_dense_id_matches_global_row_number(spark):
-    data = [(u, t) for u in (3, 1, 7) for t in range(5)]
-    df = spark.createDataFrame(data, "user_id long, t long")
-    out = dense_id_by_user(df, order_by=["t"], id_col="id")
-    got = sorted((r.user_id, r.t, r.id) for r in out.collect())
-    # expected: ids dense over (user_id, t) global ordering
-    expected_order = sorted(data)
-    expected = {pair: i for i, pair in enumerate(expected_order)}
-    for u, t, i in got:
-        assert i == expected[(u, t)]
+    small = [(u, t) for u in (3, 1, 7) for t in range(5)]
+    # more input partitions than defaultParallelism, the same
+    # timestamps repeated across users, uneven per-user row counts
+    p = spark.sparkContext.defaultParallelism
+    big = [(u, t) for u in range(40) for t in range(0, 3 * (u % 7) + 5, 3)]
+    for data, n_parts in ((small, None), (big, 4 * p + 1)):
+        df = spark.createDataFrame(data, "user_id long, t long")
+        df = df.repartition(n_parts) if n_parts else df
+        out = dense_id_by_user(df, order_by=["t"], id_col="id")
+        got = {(r.user_id, r.t): r.id for r in out.collect()}
+        # expected: ids dense over (user_id, t) global ordering
+        assert got == {pair: i for i, pair in enumerate(sorted(data))}
+
+
+def test_release_id_caches_frees_everything_the_chain_cached(spark):
+    """Every cache the generate-operators leave behind is registered:
+    after the outputs are collected, release_id_caches() returns the
+    session to the persisted-RDD count it had before the chain."""
+    from tests.test_accessors import _walkers
+    from trackintel_spark.analysis import create_activity_flag
+    from trackintel_spark.operators import (
+        generate_locations, generate_staypoints, generate_tours, generate_trips, generate_triplegs,
+    )
+    from trackintel_spark.plans.ids import release_id_caches
+
+    release_id_caches()
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    before = pinned().size()
+
+    pfs, sp = generate_staypoints(_walkers(spark), dist_threshold=150, time_threshold=20, gap_threshold=600)
+    pfs, tpls = generate_triplegs(pfs, sp)
+    sp, tpls, trips = generate_trips(create_activity_flag(sp, time_threshold=15), tpls, gap_threshold=15)
+    trips, tours = generate_tours(trips, max_dist=5000)
+    sp, locs = generate_locations(sp, epsilon=100, num_samples=1)
+    for out in (pfs, sp, tpls, trips, tours, locs):
+        out.collect()
+    assert trips.count() >= 2
+    assert pinned().size() > before
+
+    assert release_id_caches() > 0
+    assert pinned().size() == before
 
 
 def test_dense_id_partition_invariance(spark):

@@ -143,11 +143,11 @@ def test_session_salting_equivalence(spark):
     assert a.count() == 3
 
 
-def test_salting_gate_equivalence(spark, monkeypatch):
+def test_salting_gate_equivalence(spark):
     """The mega-user gate only changes the GROUPING, never the output:
     forcing every user through per-session splitting must equal the
     gated (single-group) path row for row."""
-    import trackintel_spark.operators.staypoints as S
+    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
 
     rows = []
     i = 0
@@ -159,8 +159,11 @@ def test_salting_gate_equivalence(spark, monkeypatch):
     pfs = make_pfs(spark, rows)
 
     _, gated = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
-    monkeypatch.setattr(S, "_SALT_MIN_USER_ROWS", 0)  # every user splits
-    _, split = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
+    spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")  # every user splits
+    try:
+        _, split = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
+    finally:
+        spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
 
     cols = ["user_id", "started_at", "finished_at"]
     assert sorted(map(tuple, gated.select(*cols).collect())) == sorted(

@@ -88,6 +88,21 @@ def test_dbscan_distributed_matches_local(spark):
     assert got[pid] is None  # noise
 
 
+def test_dbscan_distributed_inherits_session_into_threads(spark):
+    """The two concurrent checkpoint jobs run in pool threads wrapped
+    with the session, so PySpark carries the caller's job tags along
+    and does not warn that they are lost."""
+    import warnings
+
+    pts = [(i, 8.5 + (i % 5) * 1e-4, 47.4) for i in range(20)]
+    df = spark.createDataFrame(pts, "id long, lon double, lat double")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = dbscan_distributed(df, epsilon_m=150, min_samples=2).collect()
+    assert len(out) == len(pts)
+    assert not [w for w in caught if "Spark session is not provided" in str(w.message)]
+
+
 def test_dbscan_distributed_partition_invariance(spark):
     pts = [(i, 8.5 + (i % 5) * 1e-4, 47.4) for i in range(50)]
     df = spark.createDataFrame(pts, "id long, lon double, lat double")

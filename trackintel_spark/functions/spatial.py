@@ -96,17 +96,3 @@ def meters_to_decimal_degrees(meters: Column, latitude: Column) -> Column:
     """meters -> degrees of longitude at given latitude
     (geogr/distances.py:188-210: m / (111320 * cos(lat)))."""
     return meters / (F.lit(111.32 * 1000) * F.cos(F.radians(latitude)))
-
-
-def bbox_expr(vertices: Column) -> Column:
-    """min/max lon/lat bounding box of an array<point> — the pushdown-
-    friendly prefilter replacing the reference's R-tree
-    (geogr/filter.py:45-54)."""
-    lons = F.transform(vertices, lambda p: p["lon"])
-    lats = F.transform(vertices, lambda p: p["lat"])
-    return F.struct(
-        F.array_min(lons).alias("min_lon"),
-        F.array_min(lats).alias("min_lat"),
-        F.array_max(lons).alias("max_lon"),
-        F.array_max(lats).alias("max_lat"),
-    )

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trackintel_spark.plans.ids import persist_owned
+
 
 def _pair_cost(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Great-circle cost matrix between vertex arrays (n,2) and (m,2),
@@ -443,9 +445,10 @@ def trajectory_similarity_join(
     # the flattened input is referenced THREE times (own-cell side,
     # probe side, array refine) — persist it or a derived input's whole
     # upstream pipeline re-executes per reference (plan-audit finding;
-    # trajectory_topk does the same). ContextCleaner reclaims the cache
-    # once the returned frame is unreachable.
-    flat = flat.persist(StorageLevel.MEMORY_AND_DISK)
+    # trajectory_topk does the same). The returned plan reads the cache,
+    # so it is registered for release_id_caches(): Spark's CacheManager
+    # holds it until unpersisted, ContextCleaner never reclaims it.
+    flat = persist_owned(flat, StorageLevel.MEMORY_AND_DISK)
 
     ends = flat.select(
         "__tid",

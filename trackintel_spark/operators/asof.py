@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trackintel_spark.plans.ids import persist_owned
+
 _SIDE_L, _SIDE_R = 0, 1
 
 # secondary-rank composite scale: |r1| <= 2 and r2 = row_number (int32),
@@ -287,7 +289,7 @@ def _asof_one(
                 t0.alias("r0"), r1.alias("r1"), F.col("__rk").alias("r2")
             )
             rank_sec = r1.cast("double") * F.lit(_SEC_SCALE) + F.col("__rk").cast("double")
-        u = u.persist()  # feeds the quantile pass, the boundary collect, and the result
+        u = persist_owned(u)  # feeds the quantile pass, the boundary collect, and the result
         n_buckets = _shuffle_partitions(u.sparkSession)
         bucket_on, cuts = _bucket_cuts(u, rank0, rank_sec, n_buckets)
         matched = _global_scan_last(u, bucket_on, rank, "__r", "__m", cuts)
@@ -439,7 +441,7 @@ def asof_join(
         rank_f = F.struct(
             (-t0).alias("r0"), (-F.col("__ord")).alias("r1"), (-F.col("__rk")).alias("r2")
         )
-        u = u.persist()  # feeds the quantile pass, two boundary collects, the result
+        u = persist_owned(u)  # feeds the quantile pass, two boundary collects, the result
         n_buckets = _shuffle_partitions(u.sparkSession)
         # the forward scan's order is the exact negation of the backward
         # scan's (rank_f == -rank_b componentwise), so ONE cut pass

@@ -68,6 +68,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trackintel_spark.functions.spatial import EARTH_RADIUS_M, haversine_m
+from trackintel_spark.plans.ids import persist_owned
 
 # meters per degree of latitude under the haversine_m sphere — exact
 # for the meridional axis, and the per-degree-longitude factor is this
@@ -403,20 +404,18 @@ def dbscan_distributed(
     # the second job's tasks back-fill the first job's straggler tail
     # (guide §2.6) instead of paying two full sequential job latencies.
     # inheritable_thread_target carries the caller's JVM thread-locals
-    # (job group/description, scheduler pool) into the pool threads,
-    # which plain threads drop under the default pinned-thread mode —
-    # without it a caller's cancelJobGroup would not cover these jobs
+    # (job group/description, scheduler pool) and, given the session,
+    # its job tags into the pool threads, which plain threads drop under
+    # the default pinned-thread mode — without it a caller's
+    # cancelJobGroup / cancelJobsWithTag would not cover these jobs
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(crossf_lazy.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f1 = _pool.submit(
-            inheritable_thread_target(lambda: crossf_lazy.localCheckpoint(eager=True))
-        )
-        _f2 = _pool.submit(
-            inheritable_thread_target(lambda: pfullf_lazy.localCheckpoint(eager=True))
-        )
+        _f1 = _pool.submit(inherit(lambda: crossf_lazy.localCheckpoint(eager=True)))
+        _f2 = _pool.submit(inherit(lambda: pfullf_lazy.localCheckpoint(eager=True)))
         crossf, pfullf = _f1.result(), _f2.result()
     edges_part = (
         crossf.filter(F.col("a_core") & F.col("b_core"))
@@ -505,7 +504,7 @@ def dbscan_distributed(
     # persisted: the label densification's counting job and the final
     # join both consume it — without the cache the whole labeling DAG
     # would run twice
-    all_labels = core_labeled.unionByName(border).persist()
+    all_labels = persist_owned(core_labeled.unionByName(border))
 
     # densify labels 0..k-1 by min-core-member order; two-phase
     # range-partitioned rank so a huge cluster count never funnels

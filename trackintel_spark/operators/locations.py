@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
+from trackintel_spark.plans.ids import persist_owned
 
 _LABEL_SCHEMA = T.StructType(
     [
@@ -189,11 +190,10 @@ def generate_locations(
     from trackintel_spark.plans.partitioning import kernel_partitions
 
     if agg_level == "user":
-        labeled = (
+        labeled = persist_owned(
             pts_ordered.repartition(kernel_partitions(pts_ordered), "user_id")
             .groupBy("user_id")
             .applyInPandas(_label_sorted, schema=_LABEL_SCHEMA)
-            .persist()
         )
         # per-user label offsetting (:119-137): base = running sum of
         # (max label + 1) over users in user_id order. The offset table

@@ -45,15 +45,6 @@ from trackintel_spark.model.schemas import validate
 from trackintel_spark.plans.ids import dense_id_by_user
 from trackintel_spark.plans.literals import sql_double
 
-# users below this row count run the sliding kernel as ONE group; above
-# it, their stream splits at recording gaps so no single task serializes
-# a mega-user. 200k rows ≈ well under a second of kernel time per task.
-# Module-level for monkeypatching in tests; cluster operators override
-# per-session via the spark.trackintel.salt.minUserRows conf (read by
-# plans.partitioning.salt_min_user_rows at plan time, shared with the
-# tours kernel).
-_SALT_MIN_USER_ROWS = 200_000
-
 _KERNEL_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -260,7 +251,7 @@ def generate_staypoints(
         )
 
     if salt_sessions and not include_last:
-        salt_rows = salt_min_user_rows(kernel_in.sparkSession, _SALT_MIN_USER_ROWS)
+        salt_rows = salt_min_user_rows(kernel_in.sparkSession)
         # salting only pays off for mega-users: every applyInPandas
         # group costs a fixed Arrow dispatch (~1 ms), so splitting
         # ordinary users at their gaps multiplies overhead for zero
@@ -298,15 +289,9 @@ def generate_staypoints(
         # the kernel groups — no further shuffle.
         group_cols = ["user_id"]
 
-    raw_sp = (
-        kernel_in.groupBy(*group_cols)
-        .applyInPandas(_run, schema=_KERNEL_SCHEMA)
-    )
-    # the kernel output is small (staypoints << pfs) but expensive to
-    # recompute: persist so the sp and link-back branches (and every
-    # downstream operator) run the sliding scan once.
-    raw_sp = raw_sp.persist()
-
+    raw_sp = kernel_in.groupBy(*group_cols).applyInPandas(_run, schema=_KERNEL_SCHEMA)
+    # the id helper caches its sorted input, so the sp and link-back
+    # branches (and every downstream operator) run the sliding scan once
     sp = dense_id_by_user(raw_sp, order_by=["started_at"], id_col="id")
 
     # link staypoint_id back onto pfs: explode the member-id list and join

@@ -359,7 +359,6 @@ def generate_tours(
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         return _tours_kernel(pdf, use_locations, max_dist, max_time_s, max_nr_gaps)
 
-    from trackintel_spark.operators import staypoints as _sp_mod
     from trackintel_spark.plans.partitioning import kernel_partitions, salt_min_user_rows
 
     if salt_sessions and max_nr_gaps > 0:
@@ -369,9 +368,8 @@ def generate_tours(
         salt_sessions = False
 
     if salt_sessions:
-        # same gate as the staypoints sliding kernel: the module constant
-        # (monkeypatchable) overridden by spark.trackintel.salt.minUserRows
-        salt_rows = salt_min_user_rows(kin.sparkSession, _sp_mod._SALT_MIN_USER_ROWS)
+        # same gate as the staypoints sliding kernel
+        salt_rows = salt_min_user_rows(kin.sparkSession)
         base_cols = list(kin.columns)
         _WG = "OVER (PARTITION BY user_id ORDER BY started_at, id)"
         flagged = kin.selectExpr(
@@ -415,7 +413,6 @@ def generate_tours(
         kin2.repartition(kernel_partitions(kin2), *group_cols)
         .groupBy(*group_cols)
         .applyInPandas(_run, schema=schema)
-        .persist()
     )
     tours = dense_id_by_user(raw, order_by=order_by, id_col="id").drop(
         *(["seq", "__session"] if salt_sessions else ["seq"])

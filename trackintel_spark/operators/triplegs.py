@@ -185,10 +185,6 @@ def generate_triplegs(
     # reference order (arange at :376, invalid rows dropped at :398) —
     # surviving ids keep their numbers, so the sequence may have holes.
     legs = dense_id_by_user(legs, order_by=["started_at"], id_col="id")
-    # legs are small (aggregated) but their lineage spans two windows
-    # over the full pfs table; downstream operators (generate_trips)
-    # join the tpls branch several times — persist to evaluate once.
-    legs = legs.persist()
     # zero-extent LineStrings are invalid (shapely is_valid=False,
     # _drop_invalid_triplegs :582-619): need >=2 distinct vertices.
     legs = legs.filter(F.col("__distinct_pts") >= 2)

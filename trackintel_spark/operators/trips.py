@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user
+from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
 from trackintel_spark.plans.literals import sql_double
 
 _PT_T = "struct<lon:double,lat:double>"
@@ -140,9 +140,6 @@ def generate_trips(
     # them BEFORE the id assignment so they never cross its exchange
     trips_raw = trips_raw.filter(F.size("tpls") > 0).drop("__sps", "__tpls")
     trips_raw = dense_id_by_user(trips_raw, order_by=["__temp_trip"], id_col="id")
-    # trips_raw feeds the interleave, endpoint-geometry joins, and both
-    # link-backs — persist so its (window-heavy) lineage runs once.
-    trips_raw = trips_raw.persist()
 
     # interleave trips + activity staypoints + gap buffers (:126-146)
     trip_rows = trips_raw.selectExpr(
@@ -174,7 +171,7 @@ def generate_trips(
     )
     inter = trip_rows.unionByName(act_rows).unionByName(gap_rows)
 
-    inter = inter.persist()
+    inter = persist_owned(inter)
     inter = inter.selectExpr(
         "*",
         f"lag(sp_tpls_id) {_W} AS origin_staypoint_id",
@@ -239,7 +236,7 @@ def generate_trips(
 
     # trips feeds the final projection plus the tpls/sp link-backs —
     # persist the finished (small) trips table once.
-    trips = trips.persist()
+    trips = persist_owned(trips)
 
     trips_out_cols = ["id", "user_id", "started_at", "finished_at", "origin_staypoint_id", "destination_staypoint_id"]
     if add_geometry:

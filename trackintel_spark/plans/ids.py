@@ -4,8 +4,8 @@ Every trackintel generate-operator assigns fresh int64 ids 0..n-1 in
 (user_id, time) order (e.g. preprocessing/positionfixes.py:162-164).
 A naive ``row_number() OVER (ORDER BY ...)`` funnels the whole table
 through ONE task — unacceptable at 100 TB. Instead both helpers use
-the ``zipWithIndex`` scheme: range-partition on the sort key,
-row-number within partitions, and add per-PARTITION base offsets
+the ``zipWithIndex`` scheme: range-partition on the sort key, number
+rows within partitions, and add per-PARTITION base offsets
 (<= defaultParallelism longs) collected to the driver and folded back
 as a literal map lookup on ``spark_partition_id()``.
 
@@ -20,9 +20,10 @@ and cache the shuffled input for the main query to reuse.
 
 The cache is LOAD-BEARING: the collected bases describe the cached
 partitioning, so the eager helpers must not unpersist under their own
-output. Long sessions chaining many operators accumulate one cached
-copy per call — call :func:`release_id_caches` after the consuming
-action (write/collect) to free them all.
+output. Every cache the library keeps past its call (these, and the
+operators' own) is registered here; long sessions chaining many
+operators accumulate them — call :func:`release_id_caches` after the
+consuming action (write/collect) to free them all.
 """
 
 from __future__ import annotations
@@ -33,10 +34,21 @@ from pyspark.sql import functions as F
 _ID_CACHES: list[DataFrame] = []
 
 
-def release_id_caches() -> int:
-    """Unpersist every cache the eager id helpers created this session.
+def persist_owned(df: DataFrame, *args) -> DataFrame:
+    """``df.persist(*args)``, registered so :func:`release_id_caches`
+    frees it. For caches that outlive the call that made them (the
+    returned plan reads them)."""
+    df = df.persist(*args)
+    _ID_CACHES.append(df)
+    return df
 
-    Safe once the ids have been materialized (written/collected):
+
+def release_id_caches() -> int:
+    """Unpersist every cache the library created this session: the
+    eager id helpers' shuffled inputs and the operators' own caches
+    (all registered through :func:`persist_owned`).
+
+    Safe once the outputs have been materialized (written/collected):
     recomputation after release would re-sample range boundaries, so
     only call between pipelines, not under a pending lazy plan. Returns
     the number of caches released.
@@ -49,6 +61,20 @@ def release_id_caches() -> int:
         except Exception:  # session torn down — nothing to free
             pass
     return n
+
+
+def _partition_bases(totals: DataFrame) -> Column:
+    """Collect ``totals`` (one ``(__p, __n)`` row per non-empty
+    partition) and return the exclusive prefix sum of ``__n`` in
+    partition order as a literal map lookup on ``__p``."""
+    counts = {r["__p"]: r["__n"] for r in totals.collect()}
+    bases: list[str] = []
+    acc = 0
+    for pid in sorted(counts):
+        bases.extend([str(pid), str(acc)])
+        acc += int(counts[pid] or 0)
+    # ONE SQL string instead of 2p F.lit py4j round trips (r12)
+    return F.expr(f"coalesce(element_at(map({', '.join(bases)}), __p), 0)") if bases else F.lit(0)
 
 
 def exclusive_prefix_sum(
@@ -101,23 +127,8 @@ def exclusive_prefix_sum(
             .withColumn(out_col, (F.col("__base") + run).cast("long"))
             .drop("__p", "__base")
         )
-    d = d.persist()
-    _ID_CACHES.append(d)
-    totals = {
-        r["__p"]: r["__t"]
-        for r in d.groupBy("__p").agg(F.sum(val_col).alias("__t")).collect()
-    }
-    bases: list[str] = []
-    acc = 0
-    for pid in sorted(totals):
-        bases.extend([str(pid), str(acc)])
-        acc += int(totals[pid] or 0)
-    # ONE SQL string instead of 2p F.lit py4j round trips (r12)
-    base = (
-        F.expr(f"coalesce(element_at(map({', '.join(bases)}), __p), 0)")
-        if bases
-        else F.lit(0)
-    )
+    d = persist_owned(d)
+    base = _partition_bases(d.groupBy("__p").agg(F.sum(val_col).alias("__n")))
     return d.withColumn(out_col, (base + run).cast("long")).drop("__p")
 
 
@@ -131,33 +142,28 @@ def dense_id_by_user(
 
     Equivalent to ``row_number() over (order by user, *order_by) - 1``
     but with the zipWithIndex scheme: ONE range shuffle on the sort
-    key, per-partition row_number, driver-collected per-partition
-    bases (<= defaultParallelism longs) added as a literal map lookup.
-    No global sort task, no join, and the input lineage appears in the
-    output plan exactly once — chains of generate-operators plan in
-    linear, not exponential, tree size. Range partitioning keeps equal
-    keys together, so ids are deterministic wherever the sort key is.
+    key, and each row's position within its sorted partition taken in
+    that same pass — ``monotonically_increasing_id()`` minus
+    ``__p << 33``, a per-partition counter in the sorted order — then
+    cached with the rows. Driver-collected per-partition bases
+    (<= defaultParallelism longs) are added as a literal map lookup, so
+    the id is a narrow projection of the cache: no window, no second
+    exchange, no global sort task, no join, and the input lineage
+    appears in the output plan exactly once — chains of
+    generate-operators plan in linear, not exponential, tree size.
+    Range partitioning keeps equal keys together, so ids are
+    deterministic wherever the sort key is.
     """
     p = df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in [user_col, *order_by]]
-    d = (
+    d = persist_owned(
         df.repartitionByRange(p, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("__p", F.spark_partition_id())
-        .persist()
+        .withColumn("__pos", F.monotonically_increasing_id() - F.shiftleft(F.col("__p").cast("long"), 33))
     )
-    _ID_CACHES.append(d)
-    counts = {r["__p"]: r["__n"] for r in d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")).collect()}
-    bases: list[str] = []
-    acc = 0
-    for pid in sorted(counts):
-        bases.extend([str(pid), str(acc)])
-        acc += int(counts[pid])
-    # ONE SQL string instead of 2p F.lit py4j round trips (r12): the
-    # literal map is identical, building it is ~60 fewer JVM calls.
-    base = f"coalesce(element_at(map({', '.join(bases)}), __p), 0)" if bases else "0"
-    w = Window.partitionBy("__p").orderBy(*cols)
-    return d.withColumn(id_col, (F.expr(base) + F.row_number().over(w) - 1).cast("long")).drop("__p")
+    base = _partition_bases(d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")))
+    return d.withColumn(id_col, (base + F.col("__pos")).cast("long")).drop("__p", "__pos")
 
 
 def dense_rank_ordered(df: DataFrame, order_col: str, out_col: str = "dense_id") -> DataFrame:

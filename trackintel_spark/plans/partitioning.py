@@ -99,14 +99,13 @@ SALT_MIN_USER_ROWS_CONF = "spark.trackintel.salt.minUserRows"
 DEFAULT_SALT_MIN_USER_ROWS = 200_000
 
 
-def salt_min_user_rows(spark, default: int | None = None) -> int:
+def salt_min_user_rows(spark) -> int:
     """The per-user row threshold above which sequential kernels
     (generate_staypoints' sliding window, generate_tours' stack scan)
     split a user's stream at natural gaps. Reads
     ``spark.trackintel.salt.minUserRows`` when set; falls back to
-    ``default`` (or the module default) on absent/non-numeric values."""
-    base = DEFAULT_SALT_MIN_USER_ROWS if default is None else default
+    :data:`DEFAULT_SALT_MIN_USER_ROWS` on absent/non-numeric values."""
     try:
-        return int(spark.conf.get(SALT_MIN_USER_ROWS_CONF, str(base)))
+        return int(spark.conf.get(SALT_MIN_USER_ROWS_CONF, str(DEFAULT_SALT_MIN_USER_ROWS)))
     except (TypeError, ValueError):
-        return base
+        return DEFAULT_SALT_MIN_USER_ROWS

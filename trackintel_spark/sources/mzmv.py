@@ -38,7 +38,7 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trackintel_spark.plans.ids import dense_id_by_user
+from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
 
 MZMV_ENCODING = "iso-8859-1"  # = the reference's "latin1" (Spark charset name)
 
@@ -265,7 +265,7 @@ def read_mzmv(
     # block, mirroring the reference's concat order (:652). The Z-block
     # offset (= S-block row count) stays in-plan as a broadcast 1-row
     # aggregate — no driver action.
-    sp = sp.persist()
+    sp = persist_owned(sp)
     sp_s = dense_id_by_user(sp.filter(F.col("__block") == 0), order_by=["ETNR"], id_col="id")
     n_start = sp_s.agg(F.count(F.lit(1)).alias("__n0"))
     sp_z = dense_id_by_user(sp.filter(F.col("__block") == 1), order_by=["ETNR"], id_col="id")
