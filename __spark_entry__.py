@@ -199,7 +199,7 @@ def _sessions(spark: SparkSession, sf_dir: str, gap_min: float = 30.0) -> DataFr
     started_at, finished_at, geom=centroid, n_pfs)."""
     pfs = _pfs(spark, sf_dir)
     # one selectExpr per layer — the Column-chain form cost dozens of
-    # py4j round trips per bench cell (see trips.py r12 note)
+    # py4j round trips per bench cell
     _W = "OVER (PARTITION BY user_id ORDER BY tracked_at, id)"
     seg = pfs.selectExpr(
         "*",
@@ -3364,8 +3364,9 @@ def oracle_sql() -> dict[str, str]:
         FROM sp LEFT JOIN labeled USING (id)
     """
 
-    # full trips-segmentation oracle: mirrors operators/trips.py
-    # (reference preprocessing/triplegs.py:12-232) — union, last-activity
+    # full trips-segmentation oracle: the reference rules that
+    # operators/trips.py implements (reference
+    # preprocessing/triplegs.py:12-232), in SQL — union, last-activity
     # / gap / user-change triggers, running-sum temp ids, empty-trip drop,
     # dense re-id, origin/destination via lag/lead over the interleaved
     # trips + activities + gap-buffer sequence. Kept in a local so the

@@ -21,10 +21,17 @@ def test_dense_id_matches_global_row_number(spark):
         assert got == {pair: i for i, pair in enumerate(sorted(data))}
 
 
+def _pinned_ids(spark) -> set:
+    """Ids of the session's persisted RDDs. Compared as sets: local
+    checkpoints left by earlier tests are freed by the context cleaner
+    at GC time, which can happen in the middle of a test."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 def test_release_id_caches_frees_everything_the_chain_cached(spark):
     """Every cache the generate-operators leave behind is registered:
-    after the outputs are collected, release_id_caches() returns the
-    session to the persisted-RDD count it had before the chain."""
+    after the outputs are collected, release_id_caches() leaves no RDD
+    pinned that the chain pinned."""
     from tests.test_accessors import _walkers
     from trackintel_spark.analysis import create_activity_flag
     from trackintel_spark.operators import (
@@ -33,8 +40,7 @@ def test_release_id_caches_frees_everything_the_chain_cached(spark):
     from trackintel_spark.plans.ids import release_id_caches
 
     release_id_caches()
-    pinned = spark.sparkContext._jsc.getPersistentRDDs
-    before = pinned().size()
+    before = _pinned_ids(spark)
 
     pfs, sp = generate_staypoints(_walkers(spark), dist_threshold=150, time_threshold=20, gap_threshold=600)
     pfs, tpls = generate_triplegs(pfs, sp)
@@ -44,10 +50,91 @@ def test_release_id_caches_frees_everything_the_chain_cached(spark):
     for out in (pfs, sp, tpls, trips, tours, locs):
         out.collect()
     assert trips.count() >= 2
-    assert pinned().size() > before
+    assert _pinned_ids(spark) - before
 
     assert release_id_caches() > 0
-    assert pinned().size() == before
+    assert _pinned_ids(spark) <= before
+
+
+def test_repeated_call_keeps_one_registry_entry(spark):
+    from trackintel_spark.plans import ids
+
+    ids.release_id_caches()
+    df = spark.createDataFrame([(u, t) for u in (1, 2) for t in range(5)], "user_id long, t long")
+    a = dense_id_by_user(df, order_by=["t"], id_col="id")
+    b = dense_id_by_user(df, order_by=["t"], id_col="id")
+    assert sorted(a.collect()) == sorted(b.collect())
+    assert len(ids._ID_CACHES) == 1
+    assert ids.release_id_caches() == 1
+
+
+def test_registry_dedupes_under_thread_contention(spark):
+    """More threads than cores persist one shared plan and one plan of
+    their own: the shared plan keeps exactly one entry."""
+    import sys
+    import threading
+
+    from trackintel_spark.plans import ids
+
+    ids.release_id_caches()
+    n = 2 * spark.sparkContext.defaultParallelism
+    shared = spark.range(10).selectExpr("id * 2 AS v")
+    start = threading.Barrier(n)
+
+    def work(i):
+        start.wait(timeout=60)
+        ids.persist_owned(shared)
+        ids.persist_owned(spark.range(10).selectExpr(f"id + {i} AS v"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(ids._ID_CACHES) == n + 1
+    assert ids.release_id_caches() == n + 1
+
+
+def test_concurrent_generate_trips_then_release(spark):
+    """Two threads register caches and release them concurrently; the
+    registry stays consistent and nothing stays pinned."""
+    import threading
+
+    from tests.test_trips import _basic
+    from trackintel_spark.operators import generate_trips
+    from trackintel_spark.plans import ids
+
+    ids.release_id_caches()
+    before = _pinned_ids(spark)
+    sp, tpls = _basic(spark)
+    done = threading.Barrier(2)
+    results, errors = [], []
+
+    def work(gap):
+        try:
+            outs = generate_trips(sp, tpls, gap_threshold=gap)
+            results.append([o.count() for o in outs])
+            done.wait(timeout=300)
+            ids.release_id_caches()
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(g,)) for g in (15, 60)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(results) == 2
+    assert ids._ID_CACHES == []
+    assert _pinned_ids(spark) <= before
 
 
 def test_dense_id_partition_invariance(spark):

@@ -88,6 +88,19 @@ def test_geometry_imputation_at_gaps(spark):
     assert got[0].geom.origin.lon == 8.50 and got[0].geom.dest.lon == 8.60
 
 
+def _assert_links_match_endpoints(sp_o, trips):
+    """An activity staypoint's prev/next trip is the trip whose
+    destination/origin it is; every other staypoint has neither."""
+    trips = trips.collect()
+    arriving = {t.destination_staypoint_id: t.id for t in trips}
+    leaving = {t.origin_staypoint_id: t.id for t in trips}
+    for r in sp_o.collect():
+        assert r.prev_trip_id == arriving.get(r.id), r
+        assert r.next_trip_id == leaving.get(r.id), r
+        if not r.is_activity:
+            assert r.prev_trip_id is None and r.next_trip_id is None
+
+
 def test_linkage_columns(spark):
     sp, tpls = _basic(spark)
     sp_o, tpls_o, trips = generate_trips(sp, tpls, gap_threshold=15)
@@ -100,6 +113,116 @@ def test_linkage_columns(spark):
     assert sp_rows[0].prev_trip_id is None and sp_rows[0].next_trip_id == 0
     assert sp_rows[2].prev_trip_id == 0 and sp_rows[2].next_trip_id == 1
     assert sp_rows[3].prev_trip_id == 2 and sp_rows[3].next_trip_id is None
+    _assert_links_match_endpoints(sp_o, trips)
+
+    # activity A, lone non-activity staypoint (its trip has no tripleg
+    # and is dropped), activity B, leg, activity C, leg, gap, leg,
+    # activity D
+    sp = _mk_sp(
+        spark,
+        [
+            (0, 1, 0, 30, True, 8.50, 47.40),
+            (1, 1, 31, 40, False, 8.52, 47.41),
+            (2, 1, 41, 90, True, 8.55, 47.42),
+            (3, 1, 101, 150, True, 8.60, 47.45),
+            (4, 1, 200, 240, True, 8.80, 47.55),
+        ],
+    )
+    tpls = _mk_tpls(
+        spark,
+        [
+            (0, 1, 91, 100, [(8.55, 47.42), (8.60, 47.45)]),
+            (1, 1, 151, 155, [(8.60, 47.45), (8.65, 47.47)]),
+            (2, 1, 185, 199, [(8.75, 47.52), (8.80, 47.55)]),
+        ],
+    )
+    sp_o, tpls_o, trips = generate_trips(sp, tpls, gap_threshold=15)
+    got = [(t.id, t.origin_staypoint_id, t.destination_staypoint_id) for t in trips.orderBy("id").collect()]
+    assert got == [(0, 2, 3), (1, 3, None), (2, None, 4)]
+    sp_rows = {r.id: r for r in sp_o.collect()}
+    # A and B border only the dropped trip
+    assert sp_rows[0].next_trip_id is None and sp_rows[2].prev_trip_id is None
+    assert sp_rows[1].trip_id is None
+    _assert_links_match_endpoints(sp_o, trips)
+
+
+def test_empty_inputs(spark):
+    sp_o, tpls_o, trips = generate_trips(_mk_sp(spark, []), _mk_tpls(spark, []), gap_threshold=15)
+    assert (sp_o.count(), tpls_o.count(), trips.count()) == (0, 0, 0)
+    assert sp_o.columns == [
+        "id", "user_id", "started_at", "finished_at", "is_activity", "geom",
+        "trip_id", "prev_trip_id", "next_trip_id",
+    ]
+    assert tpls_o.columns == ["id", "user_id", "started_at", "finished_at", "geom", "trip_id"]
+    assert trips.dtypes == [
+        ("id", "bigint"), ("user_id", "bigint"), ("started_at", "timestamp"), ("finished_at", "timestamp"),
+        ("origin_staypoint_id", "bigint"), ("destination_staypoint_id", "bigint"),
+        ("geom", "struct<origin:struct<lon:double,lat:double>,dest:struct<lon:double,lat:double>>"),
+    ]
+
+
+def test_user_with_triplegs_only(spark):
+    # user 1 has two back-to-back legs and no staypoint; user 2 keeps
+    # the staypoint input non-empty
+    sp = _mk_sp(spark, [(0, 2, 0, 30, True, 1.0, 1.0)])
+    tpls = _mk_tpls(
+        spark,
+        [
+            (0, 1, 0, 10, [(8.50, 47.40), (8.55, 47.42)]),
+            (1, 1, 12, 20, [(8.55, 47.42), (8.60, 47.45)]),
+        ],
+    )
+    sp_o, tpls_o, trips = generate_trips(sp, tpls, gap_threshold=15)
+    (t,) = trips.collect()
+    assert (t.id, t.user_id, t.origin_staypoint_id, t.destination_staypoint_id) == (0, 1, None, None)
+    assert (t.started_at, t.finished_at) == (T0 + timedelta(minutes=0), T0 + timedelta(minutes=20))
+    # both endpoints imputed from the legs: first fix of the first,
+    # last fix of the last
+    assert (t.geom.origin.lon, t.geom.origin.lat) == (8.50, 47.40)
+    assert (t.geom.dest.lon, t.geom.dest.lat) == (8.60, 47.45)
+    assert {r.id: r.trip_id for r in tpls_o.collect()} == {0: 0, 1: 0}
+    (s,) = sp_o.collect()
+    assert (s.trip_id, s.prev_trip_id, s.next_trip_id) == (None, None, None)
+
+
+def test_user_with_only_activities(spark):
+    sp = _mk_sp(
+        spark,
+        [
+            (0, 1, 0, 30, True, 8.5, 47.4),
+            (1, 1, 31, 60, True, 8.6, 47.5),
+            (2, 1, 200, 260, True, 8.7, 47.6),
+        ],
+    )
+    tpls = _mk_tpls(spark, [(0, 2, 0, 10, [(1.0, 1.0), (1.1, 1.1)])])
+    sp_o, tpls_o, trips = generate_trips(sp, tpls, gap_threshold=15)
+    assert [t.user_id for t in trips.collect()] == [2]
+    for r in sp_o.collect():
+        assert (r.trip_id, r.prev_trip_id, r.next_trip_id) == (None, None, None)
+
+
+def test_null_is_activity_counts_as_false(spark):
+    rows = [
+        (0, 1, 0, 30, True, 8.50, 47.40),
+        (1, 1, 41, 45, None, 8.55, 47.42),
+        (2, 1, 61, 120, True, 8.60, 47.45),
+    ]
+    tpls = _mk_tpls(
+        spark,
+        [
+            (0, 1, 31, 40, [(8.50, 47.40), (8.55, 47.42)]),
+            (1, 1, 46, 60, [(8.55, 47.42), (8.60, 47.45)]),
+        ],
+    )
+    sp_null, _, trips_null = generate_trips(_mk_sp(spark, rows), tpls, gap_threshold=15)
+    rows[1] = (1, 1, 41, 45, False, 8.55, 47.42)
+    sp_false, _, trips_false = generate_trips(_mk_sp(spark, rows), tpls, gap_threshold=15)
+    (t,) = trips_null.collect()
+    assert (t.id, t.origin_staypoint_id, t.destination_staypoint_id) == (0, 0, 2)
+    assert trips_null.collect() == trips_false.collect()
+    links = {r.id: (r.trip_id, r.prev_trip_id, r.next_trip_id) for r in sp_null.collect()}
+    assert links == {0: (None, None, 0), 1: (0, None, None), 2: (None, 0, None)}
+    assert links == {r.id: (r.trip_id, r.prev_trip_id, r.next_trip_id) for r in sp_false.collect()}
 
 
 def test_trip_without_triplegs_dropped(spark):
@@ -145,7 +268,7 @@ def test_generate_trips_randomized_duckdb_fuzz(spark):
     interleavings (consecutive sp/sp and tpl/tpl runs included), and
     inter-unit spacings chosen to straddle every threshold in the
     sweep — the tours fuzz pattern (which caught a real salting
-    defect in r6) applied to the trickiest vectorized port."""
+    defect) applied to trip assembly."""
     import random
 
     import duckdb

@@ -2,49 +2,147 @@
 
 Reference: trackintel ``generate_trips`` (preprocessing/triplegs.py:12-232)
 with ``_concat_staypoints_triplegs`` (:235-291) and
-``_get_activity_masks`` (:294-315). Fully vectorized in the reference
-(shift/ffill over an interleaved frame); here it is pure DataFrame ops —
-unionByName + per-user windows + running sums. No Python kernel.
-
-Driver-cost note (r12): expression construction is batched — each
-projection layer is ONE ``selectExpr``/``withColumns`` call with SQL
-strings instead of dozens of Column-object py4j round trips. Profiling
-showed ~2,500 py4j commands (≈1.5 s of socket latency + eager
-re-analysis) per call in the Column-chain form; the operator's logic
-and output are unchanged (oracle-pinned).
+``_get_activity_masks`` (:294-315). The reference is one per-user pass
+over the interleaved staypoints and triplegs; here that pass is ONE
+side-effect-free step, :func:`_assembly_step`, which the batch operator
+runs per user (``groupBy("user_id").applyInPandas``) and
+``streaming/trips_state.py::trips_stream_exact`` runs from its state —
+the pattern ``operators/tours.py::_scan_step`` uses for tours. The two
+modes are equal by construction and differ only at the end of input:
+batch flushes the last open trip with a NULL destination, as the
+reference does; the stream holds it until its closing evidence arrives.
 
 Semantics reproduced:
-* sp_tpls = staypoints ∪ triplegs per user ordered by started_at
-  (:73, :290); staypoints must carry ``is_activity`` (:256-257);
-* a new trip starts at: user change, the LAST activity of a consecutive
-  activity block (:80, :294-315), or the row after a recording gap
-  (started_at(next) - finished_at > gap_threshold, :84-85);
-* trips aggregate the non-activity rows of each segment (:97-103);
-  trips with no triplegs are dropped (:119) and ids re-counted densely
-  (:122-123) in (user, time) order;
-* origin/destination staypoint ids come from lag/lead over the
-  interleaved sequence of trips + activity staypoints + synthetic gap
-  buffer rows (:126-151). The reference also inserts user-change
-  buffers; per-user windows make those redundant (lag/lead are NULL at
-  partition boundaries by construction);
-* trips that start/end at a gap get NULL origin/destination and, when
-  ``add_geometry``, their endpoint imputed from the first/last
-  coordinate of their first/last tripleg (:196-208); trip geometry is
-  the (origin, destination) point pair (:210-212);
-* staypoints receive ``trip_id``/``prev_trip_id``/``next_trip_id``,
-  triplegs receive ``trip_id`` (:179-191).
+* units = staypoints ∪ triplegs per user, ordered by (started_at,
+  type, id) with staypoints first at equal starts (:73, :290);
+  staypoints must carry ``is_activity`` (:256-257), NULL counts as
+  false;
+* a trip is a maximal run of non-activity units; boundaries are
+  activities and recording gaps (next started_at − previous
+  finished_at > gap_threshold, :77-87); it spans the min started_at to
+  the max finished_at of its run (:97-103);
+* origin = the activity right before the run, destination = the one
+  right after it; NULL across a gap and at the ends of a user's input
+  (:126-151);
+* trips without triplegs are dropped (:119) and ids are dense in
+  (user, time) order (:122-123);
+* with ``add_geometry``, a missing endpoint is imputed from the
+  first/last coordinate of the trip's first/last tripleg (:196-208);
+  trip geometry is the (origin, destination) point pair (:210-212);
+* staypoints receive ``trip_id`` (run members) and
+  ``prev_trip_id``/``next_trip_id`` (the trips they are the
+  destination/origin of); triplegs receive ``trip_id`` (:179-191).
 """
 
 from __future__ import annotations
 
+import math
+from typing import NamedTuple
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
-from trackintel_spark.plans.literals import sql_double
+from trackintel_spark.plans.ids import dense_id_by_user
 
-_PT_T = "struct<lon:double,lat:double>"
+_SP, _TPL = 1, 2  # unit kinds, in the (started_at, type) tie order
+
+
+class _Unit(NamedTuple):
+    """One staypoint or tripleg. ``lon0/lat0`` and ``lon1/lat1`` are
+    its first and last coordinate (equal for a staypoint), NaN when
+    unknown."""
+
+    start_us: int
+    end_us: int
+    kind: int
+    id: int | None = None
+    is_activity: bool = False
+    lon0: float = math.nan
+    lat0: float = math.nan
+    lon1: float = math.nan
+    lat1: float = math.nan
+
+
+class _Trip(NamedTuple):
+    members: list  # the run's non-activity units, in order
+    origin: _Unit | None
+    dest: _Unit | None
+
+    @property
+    def start_us(self) -> int:
+        return self.members[0].start_us
+
+    @property
+    def end_us(self) -> int:
+        return max(u.end_us for u in self.members)
+
+
+def _close(run: list, origin: _Unit | None, dest: _Unit | None, out: list) -> None:
+    """Append ``run`` to ``out`` as a trip unless it has no tripleg."""
+    if any(u.kind == _TPL for u in run):
+        out.append(_Trip(run, origin, dest))
+
+
+def _assembly_step(
+    units: list, run: list, origin: _Unit | None, gap_s: float
+) -> tuple[list, list, _Unit | None]:
+    """Advance trip assembly over time-ordered ``units``.
+
+    ``run`` holds the open trip's units and ``origin`` the activity it
+    left from (None at the start or after a gap). Returns the trips
+    these units close plus the new ``(run, origin)``; the arguments are
+    not modified.
+    """
+    out: list = []
+    run = list(run)
+    for u in units:
+        prev = run[-1] if run else origin
+        if prev is not None and (u.start_us - prev.end_us) / 1e6 > gap_s:
+            _close(run, origin, None, out)
+            run, origin = [], None
+        if u.is_activity:
+            _close(run, origin, u, out)
+            run, origin = [], u
+        else:
+            run.append(u)
+    return out, run, origin
+
+
+def _trip_row(seq: int, t: _Trip) -> tuple:
+    legs = [u for u in t.members if u.kind == _TPL]
+    o = t.origin if t.origin is not None and not math.isnan(t.origin.lon0) else legs[0]
+    d = t.dest if t.dest is not None and not math.isnan(t.dest.lon1) else legs[-1]
+    return (
+        seq,
+        t.start_us,
+        t.end_us,
+        t.origin.id if t.origin is not None else None,
+        t.dest.id if t.dest is not None else None,
+        o.lon0, o.lat0, d.lon1, d.lat1,
+        [u.id for u in t.members if u.kind == _SP],
+        [u.id for u in legs],
+    )
+
+
+_TRIP_COLS = [
+    "seq", "start_us", "end_us", "origin_staypoint_id", "destination_staypoint_id",
+    "o_lon", "o_lat", "d_lon", "d_lat", "sps", "tpls",
+]
+
+
+def _trips_kernel(pdf: pd.DataFrame, gap_s: float) -> pd.DataFrame:
+    pdf = pdf.sort_values(["start_us", "kind", "id"], kind="stable")
+    units = [_Unit(*r) for r in pdf[list(_Unit._fields)].itertuples(index=False, name=None)]
+    trips, run, origin = _assembly_step(units, [], None, gap_s)
+    _close(run, origin, None, trips)  # end of input: the open trip ends at a gap
+    res = pd.DataFrame([_trip_row(i, t) for i, t in enumerate(trips)], columns=_TRIP_COLS)
+    # nullable ids stay integers, not NaN-carrying floats
+    res = res.astype({"origin_staypoint_id": "Int64", "destination_staypoint_id": "Int64"})
+    res.insert(0, "user_id", pdf["user_id"].iloc[0])
+    return res
 
 
 def generate_trips(
@@ -59,14 +157,13 @@ def generate_trips(
     if "is_activity" not in staypoints.columns:
         raise AttributeError("staypoints need the column 'is_activity' to be able to generate trips")
 
-    gap_s = gap_threshold * 60.0
-
-    # size-aware lineage boundary: this operator embeds each input in
-    # several branches, so a chained upstream plan multiplies through —
+    # size-aware lineage boundary: each input feeds the kernel and its
+    # own link-back, so a chained upstream plan is scanned twice —
     # truncate exactly when the duplicated re-scans outweigh one
     # materialization (plans/checkpoint.py; conf-tunable, no-op at
-    # bench scale, pays off at probe/cluster scale like dbscan's flip).
+    # bench scale).
     from trackintel_spark.plans.checkpoint import truncate_if_rescan_heavy
+    from trackintel_spark.plans.partitioning import kernel_partitions
 
     staypoints = truncate_if_rescan_heavy(staypoints)
     triplegs = truncate_if_rescan_heavy(triplegs)
@@ -74,183 +171,66 @@ def generate_trips(
     sp_base = staypoints.drop(*[c for c in ("trip_id", "prev_trip_id", "next_trip_id") if c in staypoints.columns])
     tpls_base = triplegs.drop(*[c for c in ("trip_id",) if c in triplegs.columns])
 
-    sp_part = sp_base.selectExpr(
-        "user_id",
-        "started_at",
-        "finished_at",
-        "'staypoint' AS type",
-        "coalesce(is_activity, false) AS is_activity",
-        "id AS sp_tpls_id",
-        ("geom AS pt" if add_geometry else f"CAST(NULL AS {_PT_T}) AS pt"),
-    )
-    tpls_part = tpls_base.selectExpr(
-        "user_id",
-        "started_at",
-        "finished_at",
-        "'tripleg' AS type",
-        "false AS is_activity",
-        "id AS sp_tpls_id",
-        f"CAST(NULL AS {_PT_T}) AS pt",
-    )
-    sp_tpls = sp_part.unionByName(tpls_part)
-
-    # one ordered per-user window shared by every signal below
-    _W = "OVER (PARTITION BY user_id ORDER BY started_at, type, sp_tpls_id)"
-
-    staged = sp_tpls.selectExpr(
-        "*",
-        f"row_number() {_W} = 1 AS __first",
-        f"lead(is_activity) {_W} AS __next_act",
-        f"coalesce(CAST(lead(started_at) {_W} AS double) - CAST(finished_at AS double) > {sql_double(gap_s)}, false) AS __gap",
-        f"row_number() {_W} AS __pos",
-    ).selectExpr(
-        "*",
-        f"coalesce(lag(__gap) {_W}, false) AS __prev_gap",
-    ).selectExpr(
-        "*",
-        # new-trip trigger (reference :77-87): user change | last activity
-        # of a block | first row after a gap.
-        "__first OR (is_activity AND NOT coalesce(__next_act, false)) OR __prev_gap AS __new_trip",
-    ).selectExpr(
-        "*",
-        f"sum(CAST(__new_trip AS long)) {_W} AS __temp_trip",
-    )
-
-    # aggregate non-activity members per temp trip (:97-116)
-    members = staged.filter("NOT is_activity")
-    trips_raw = members.groupBy("user_id", "__temp_trip").agg(
-        F.expr("min(started_at) AS started_at"),
-        F.expr("max(finished_at) AS finished_at"),
-        F.expr(
-            "array_sort(collect_list(CASE WHEN type = 'staypoint'"
-            " THEN struct(__pos AS o, sp_tpls_id AS i) END)) AS __sps"
-        ),
-        F.expr(
-            "array_sort(collect_list(CASE WHEN type = 'tripleg'"
-            " THEN struct(__pos AS o, sp_tpls_id AS i) END)) AS __tpls"
-        ),
-    ).withColumns(
-        {
-            "sps": F.expr("transform(__sps, s -> s.i)"),
-            "tpls": F.expr("transform(__tpls, s -> s.i)"),
-        }
-    )
-    # drop trips without triplegs (:119) and assign dense ids (:122-123);
-    # the ordered member structs are consumed by sps/tpls above — drop
-    # them BEFORE the id assignment so they never cross its exchange
-    trips_raw = trips_raw.filter(F.size("tpls") > 0).drop("__sps", "__tpls")
-    trips_raw = dense_id_by_user(trips_raw, order_by=["__temp_trip"], id_col="id")
-
-    # interleave trips + activity staypoints + gap buffers (:126-146)
-    trip_rows = trips_raw.selectExpr(
-        "user_id",
-        "started_at",
-        "'trip' AS type",
-        "CAST(NULL AS long) AS sp_tpls_id",
-        "id AS trip_id",
-        "false AS is_activity",
-        f"CAST(NULL AS {_PT_T}) AS pt",
-    )
-    act_rows = staged.filter("is_activity AND type = 'staypoint'").selectExpr(
-        "user_id",
-        "started_at",
-        "'staypoint' AS type",
-        "sp_tpls_id",
-        "CAST(NULL AS long) AS trip_id",
-        "true AS is_activity",
-        "pt",
-    )
-    gap_rows = staged.filter("__gap").selectExpr(
-        "user_id",
-        f"timestamp_seconds(CAST(finished_at AS double) + {sql_double(gap_s / 2.0)}) AS started_at",
-        "'gap' AS type",
-        "CAST(NULL AS long) AS sp_tpls_id",
-        "CAST(NULL AS long) AS trip_id",
-        "true AS is_activity",
-        f"CAST(NULL AS {_PT_T}) AS pt",
-    )
-    inter = trip_rows.unionByName(act_rows).unionByName(gap_rows)
-
-    inter = persist_owned(inter)
-    inter = inter.selectExpr(
-        "*",
-        f"lag(sp_tpls_id) {_W} AS origin_staypoint_id",
-        f"lead(sp_tpls_id) {_W} AS destination_staypoint_id",
-        f"lag(pt) {_W} AS origin_pt",
-        f"lead(pt) {_W} AS destination_pt",
-        f"lag(trip_id) {_W} AS prev_trip_id",
-        f"lead(trip_id) {_W} AS next_trip_id",
-    )
-
-    trips = (
-        inter.filter("type = 'trip'")
-        .selectExpr(
-            "trip_id AS id",
-            "user_id",
-            "origin_staypoint_id",
-            "destination_staypoint_id",
-            "origin_pt",
-            "destination_pt",
-        )
-        .join(
-            trips_raw.select("id", "started_at", "finished_at", "sps", "tpls"),
-            on="id",
-            how="inner",
-        )
-    )
-
     if add_geometry:
-        # impute missing endpoints from the first/last tripleg coordinate
-        # (:196-208). ONE join against the tripleg geometry: each trip
-        # probes with its first and its last member leg id (two exploded
-        # probe rows), and the group-back picks the matching endpoint —
-        # the tripleg table is scanned/joined once instead of twice.
-        probes = trips.selectExpr(
-            "id AS __tid",
-            "explode(array(struct(true AS f, element_at(tpls, 1) AS g),"
-            " struct(false AS f, element_at(tpls, -1) AS g))) AS __p",
-        ).selectExpr("__tid", "__p.f AS __f", "__p.g AS __gid")
-        tg = tpls_base.selectExpr("id AS __gid", "geom AS __tgeom")
-        ends = (
-            probes.join(tg, on="__gid", how="left")
-            .groupBy("__tid")
-            .agg(
-                F.expr("max(CASE WHEN __f THEN element_at(__tgeom, 1) END) AS __first_pt"),
-                F.expr("max(CASE WHEN NOT __f THEN element_at(__tgeom, -1) END) AS __last_pt"),
-            )
-        )
-        trips = (
-            trips.join(ends, trips["id"] == ends["__tid"], "left")
-            .withColumns(
-                {
-                    "origin_pt": F.expr("coalesce(origin_pt, __first_pt)"),
-                    "destination_pt": F.expr("coalesce(destination_pt, __last_pt)"),
-                }
-            )
-            .withColumn(
-                "geom",
-                F.expr("struct(origin_pt AS origin, destination_pt AS dest)"),
-            )
-            .drop("__tid", "__first_pt", "__last_pt")
+        sp_pt = ["geom.lon", "geom.lat"] * 2
+        tpl_pt = [f"element_at(geom, {i}).{c}" for i in (1, -1) for c in ("lon", "lat")]
+    else:
+        sp_pt = tpl_pt = ["CAST(NULL AS double)"] * 4
+
+    def _units(df: DataFrame, kind: int, is_activity: str, pts: list) -> DataFrame:
+        return df.selectExpr(
+            "user_id", "unix_micros(started_at) AS start_us", "unix_micros(finished_at) AS end_us",
+            f"{kind} AS kind", "id", f"{is_activity} AS is_activity",
+            *[f"{e} AS {n}" for e, n in zip(pts, ("lon0", "lat0", "lon1", "lat1"))],
         )
 
-    # trips feeds the final projection plus the tpls/sp link-backs —
-    # persist the finished (small) trips table once.
-    trips = persist_owned(trips)
+    units = _units(sp_base, _SP, "coalesce(is_activity, false)", sp_pt).unionByName(
+        _units(tpls_base, _TPL, "false", tpl_pt)
+    )
+    # trip endpoints and members keep the input id type
+    id_t = units.schema["id"].dataType
+    types = [T.LongType()] * 3 + [id_t] * 2 + [T.DoubleType()] * 4 + [T.ArrayType(id_t)] * 2
+    schema = T.StructType([units.schema["user_id"], *map(T.StructField, _TRIP_COLS, types)])
+    gap_s = gap_threshold * 60.0
 
-    trips_out_cols = ["id", "user_id", "started_at", "finished_at", "origin_staypoint_id", "destination_staypoint_id"]
-    if add_geometry:
-        trips_out_cols.append("geom")
-    trips_out = trips.select(*trips_out_cols)
+    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _trips_kernel(pdf, gap_s)
 
-    # link back: tpls.trip_id (:181), sp.trip_id + prev/next (:183-191)
+    raw = units.repartition(kernel_partitions(units), "user_id").groupBy("user_id").applyInPandas(_run, schema=schema)
+    # the id helper caches its sorted input: the three outputs below
+    # are projections of that one table
+    trips = dense_id_by_user(raw, order_by=["seq"], id_col="id")
+
+    trips_out = trips.selectExpr(
+        "id", "user_id", "timestamp_micros(start_us) AS started_at", "timestamp_micros(end_us) AS finished_at",
+        "origin_staypoint_id", "destination_staypoint_id",
+        *(
+            ["struct(IF(o_lon IS NULL, NULL, struct(o_lon AS lon, o_lat AS lat)) AS origin,"
+             " IF(d_lon IS NULL, NULL, struct(d_lon AS lon, d_lat AS lat)) AS dest) AS geom"]
+            if add_geometry
+            else []
+        ),
+    )
+
     tpl_links = trips.selectExpr("id AS trip_id", "explode(tpls) AS id")
     tpls_out = tpls_base.join(tpl_links, on="id", how="left")
 
-    sp_links = trips.selectExpr("id AS trip_id", "explode(sps) AS id")
-    act_links = inter.filter("type = 'staypoint'").selectExpr(
-        "sp_tpls_id AS id", "prev_trip_id", "next_trip_id"
+    # a staypoint is a member of at most one trip (role 0), the origin
+    # of at most one (role 1) and the destination of at most one (2)
+    sp_links = (
+        trips.selectExpr(
+            "id AS __t",
+            "inline(concat(transform(sps, s -> struct(s AS id, 0 AS role)),"
+            " array(struct(origin_staypoint_id AS id, 1 AS role),"
+            " struct(destination_staypoint_id AS id, 2 AS role))))",
+        )
+        .groupBy("id")
+        .agg(
+            F.expr("max(IF(role = 0, __t, NULL)) AS trip_id"),
+            F.expr("max(IF(role = 2, __t, NULL)) AS prev_trip_id"),
+            F.expr("max(IF(role = 1, __t, NULL)) AS next_trip_id"),
+        )
     )
-    sp_out = sp_base.join(sp_links, on="id", how="left").join(act_links, on="id", how="left")
+    sp_out = sp_base.join(sp_links, on="id", how="left")
 
     return sp_out, tpls_out, trips_out

@@ -28,18 +28,25 @@ consuming action (write/collect) to free them all.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_ID_CACHES: list[DataFrame] = []
+_ID_CACHES: list[tuple[int, DataFrame]] = []  # (semanticHash, handle)
+_ID_CACHES_LOCK = threading.Lock()
 
 
 def persist_owned(df: DataFrame, *args) -> DataFrame:
     """``df.persist(*args)``, registered so :func:`release_id_caches`
     frees it. For caches that outlive the call that made them (the
-    returned plan reads them)."""
+    returned plan reads them). A plan that is already registered (the
+    same operator re-run on the same input) keeps its one entry."""
     df = df.persist(*args)
-    _ID_CACHES.append(df)
+    key = df.semanticHash()
+    with _ID_CACHES_LOCK:
+        if not any(k == key and h.sameSemantics(df) for k, h in _ID_CACHES):
+            _ID_CACHES.append((key, df))
     return df
 
 
@@ -53,10 +60,13 @@ def release_id_caches() -> int:
     only call between pipelines, not under a pending lazy plan. Returns
     the number of caches released.
     """
+    with _ID_CACHES_LOCK:
+        handles = _ID_CACHES[:]
+        _ID_CACHES.clear()
     n = 0
-    while _ID_CACHES:
+    for _, h in handles:
         try:
-            _ID_CACHES.pop().unpersist()
+            h.unpersist()
             n += 1
         except Exception:  # session torn down — nothing to free
             pass
@@ -73,7 +83,7 @@ def _partition_bases(totals: DataFrame) -> Column:
     for pid in sorted(counts):
         bases.extend([str(pid), str(acc)])
         acc += int(counts[pid] or 0)
-    # ONE SQL string instead of 2p F.lit py4j round trips (r12)
+    # ONE SQL string instead of 2p F.lit py4j round trips
     return F.expr(f"coalesce(element_at(map({', '.join(bases)}), __p), 0)") if bases else F.lit(0)
 
 

@@ -2,24 +2,19 @@
 
 ``trips_stream_exact`` completes the streaming mobility chain
 (staypoints_stream_exact → triplegs_stream_exact → this): one stateful
-operator over the raw positionfix stream that runs the staypoint scan,
-classifies activities, and assembles TRIPS with the batch
-``generate_trips`` boundary semantics (operators/trips.py; reference
-preprocessing/triplegs.py:12-232):
+operator over the raw positionfix stream that runs the staypoint scan
+(``triplegs_state._ingest_and_settle``), flags activities, and
+assembles TRIPS with the batch operator's own step,
+``operators/trips.py::_assembly_step`` (its docstring states the
+boundary, origin/destination and drop rules):
 
 * units = the settled staypoints and triplegs of the scan, in time
   order; staypoints are activities when duration > activity_threshold
   (create_activity_flag rule);
-* a trip is a maximal run of NON-activity units between boundaries;
-  boundaries are activities and tracking gaps
-  (next.started_at − prev.finished_at > gap_threshold);
-* origin = the last activity before the run (NULL after a gap or at
-  stream start), destination = the first activity after it (NULL at a
-  gap); trips containing no tripleg are dropped — all exactly the
-  batch rules;
-* a trip EMITS (append semantics) once its closing evidence — the
-  destination activity, or a gap proven by the next settled fix — has
-  arrived; open trips wait in state.
+* where batch flushes the last open trip at end of input, the stream
+  holds it: a trip EMITS (append semantics) once its closing evidence
+  — the destination activity, or a gap proven by the next settled fix
+  — has arrived; open trips wait in state.
 
 State per user = the scan state of triplegs_stream_exact (candidate
 window + open travel buffer) + the open trip's units + the current
@@ -42,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
+from trackintel_spark.operators.trips import _SP, _TPL, _assembly_step, _close, _Trip, _Unit
 from trackintel_spark.streaming.triplegs_state import _ingest_and_settle
 from trackintel_spark.streaming.reorder import apply_with_reorder
 
@@ -66,7 +62,7 @@ _STATE_SCHEMA = T.StructType(
         T.StructField("lats", T.ArrayType(T.DoubleType())),
         T.StructField("n_travel", T.IntegerType()),
         # open-trip assembly: pending non-activity units
-        T.StructField("u_kind", T.ArrayType(T.IntegerType())),  # 1 sp, 2 tripleg
+        T.StructField("u_kind", T.ArrayType(T.IntegerType())),  # _SP / _TPL
         T.StructField("u_start_us", T.ArrayType(T.LongType())),
         T.StructField("u_end_us", T.ArrayType(T.LongType())),
         # current origin activity (-1 = none / gap)
@@ -77,7 +73,18 @@ _STATE_SCHEMA = T.StructType(
     ]
 )
 
-_SP, _TPL = 1, 2
+
+def _out_row(user_id, t: _Trip) -> tuple:
+    n_tpl = sum(1 for u in t.members if u.kind == _TPL)
+    return (
+        user_id,
+        pd.Timestamp(t.start_us, unit="us"),
+        pd.Timestamp(t.end_us, unit="us"),
+        pd.Timestamp(t.origin.start_us, unit="us") if t.origin else None,
+        pd.Timestamp(t.dest.start_us, unit="us") if t.dest else None,
+        n_tpl,
+        len(t.members) - n_tpl,
+    )
 
 
 def trips_stream_exact(
@@ -138,53 +145,21 @@ def trips_stream_exact(
             user_id, scan_state, _wm_filter(batches), dist_threshold, time_s, gap_s
         )
 
-        # ---- build new closed units, time-ordered -----------------------
-        units = []  # (start_us, end_us, kind, is_activity)
+        # ---- new closed units, time-ordered -------------------------------
+        ts_all = full["tracked_at"].to_numpy().astype("int64")
+        units = []
         for _, sp in sps.iterrows():
             s = int(pd.Timestamp(sp["started_at"]).value // 1000)
             e = int(pd.Timestamp(sp["finished_at"]).value // 1000)
-            units.append((s, e, _SP, (e - s) / 1e6 > act_s))
-        ts_all = full["tracked_at"].to_numpy().astype("int64")
+            units.append(_Unit(s, e, _SP, is_activity=(e - s) / 1e6 > act_s))
         for run in closed_runs:
-            s = int(ts_all[run[0]] // 1000)
-            e = int(ts_all[run[-1]] // 1000)
-            units.append((s, e, _TPL, False))
-        units.sort()
+            units.append(_Unit(int(ts_all[run[0]] // 1000), int(ts_all[run[-1]] // 1000), _TPL))
+        units.sort(key=lambda u: u[:3])
 
-        # ---- trip assembly (batch generate_trips boundary rules) --------
-        pend = list(zip(u_kind, u_start, u_end))  # (kind, start, end)
-        origin = (origin_start, origin_end) if origin_start >= 0 else None
-        out_rows = []
-
-        def close_run(dest_start_us):
-            nonlocal pend
-            n_tpl = sum(1 for k, _, _ in pend if k == _TPL)
-            if n_tpl:
-                out_rows.append(
-                    (
-                        user_id,
-                        pd.Timestamp(pend[0][1], unit="us"),
-                        pd.Timestamp(pend[-1][2], unit="us"),
-                        pd.Timestamp(origin[0], unit="us") if origin else None,
-                        pd.Timestamp(dest_start_us, unit="us")
-                        if dest_start_us is not None
-                        else None,
-                        n_tpl,
-                        len(pend) - n_tpl,
-                    )
-                )
-            pend = []
-
-        for s, e, kind, is_act in units:
-            prev_end = pend[-1][2] if pend else (origin[1] if origin else None)
-            if prev_end is not None and (s - prev_end) / 1e6 > gap_s:
-                close_run(None)
-                origin = None
-            if is_act:
-                close_run(s)
-                origin = (s, e)
-            else:
-                pend.append((kind, s, e))
+        # ---- trip assembly: the batch generate_trips step -----------------
+        pend = [_Unit(s, e, k) for k, s, e in zip(u_kind, u_start, u_end)]
+        origin = _Unit(origin_start, origin_end, _SP, is_activity=True) if origin_start >= 0 else None
+        trips, pend, origin = _assembly_step(units, pend, origin, gap_s)
 
         # ---- end-of-batch: close on a PROVEN future gap ------------------
         # earliest possible start of any future unit = the open travel
@@ -194,31 +169,27 @@ def trips_stream_exact(
             nxt_floor_us = int(ts_all[open_run[0]] // 1000)
         elif len(new_scan_state[1]) > new_scan_state[4]:
             nxt_floor_us = int(new_scan_state[1][new_scan_state[4]])
-        last_end = pend[-1][2] if pend else (origin[1] if origin else None)
-        if (
-            nxt_floor_us is not None
-            and last_end is not None
-            and (nxt_floor_us - last_end) / 1e6 > gap_s
-        ):
-            close_run(None)
-            origin = None
+        last = pend[-1] if pend else origin
+        if nxt_floor_us is not None and last is not None and (nxt_floor_us - last.end_us) / 1e6 > gap_s:
+            _close(pend, origin, None, trips)
+            pend, origin = [], None
 
         new_wm = wm_us
         if units:
-            new_wm = max(new_wm, units[-1][1])
+            new_wm = max(new_wm, units[-1].end_us)
         state.update(
             (
                 *new_scan_state,
-                [int(k) for k, _, _ in pend],
-                [int(s) for _, s, _ in pend],
-                [int(e) for _, _, e in pend],
-                int(origin[0]) if origin else -1,
-                int(origin[1]) if origin else -1,
+                [int(u.kind) for u in pend],
+                [int(u.start_us) for u in pend],
+                [int(u.end_us) for u in pend],
+                int(origin.start_us) if origin else -1,
+                int(origin.end_us) if origin else -1,
                 int(new_wm),
             )
         )
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=[f.name for f in _OUT_SCHEMA.fields])
+        if trips:
+            yield pd.DataFrame([_out_row(user_id, t) for t in trips], columns=_OUT_SCHEMA.fieldNames())
 
     return apply_with_reorder(
         pfs, ("user_id",), fn, _OUT_SCHEMA, _STATE_SCHEMA,
