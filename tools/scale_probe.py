@@ -5,14 +5,17 @@ Generates inputs with ``spark.range`` (pure compute, no IO) and times
 
 * the full mobility chain: generate_staypoints -> generate_triplegs ->
   generate_trips -> generate_tours;
-* distributed dataset DBSCAN on a 2000-hotspot point cloud.
+* distributed dataset DBSCAN on a 2000-hotspot point cloud;
+* ``generate_trips`` alone on ONE user with many staypoint/tripleg
+  units (the mega-user case of its per-user kernel).
 
 Usage::
 
-    python tools/scale_probe.py [chain_rows ...] [--dbscan rows ...]
+    python tools/scale_probe.py [chain_rows ...] [--dbscan rows ...] [--trips-user units ...]
 
-Defaults: chain at 1M and 10M positionfixes, DBSCAN at 1M and 4M
-points. Results go to SCALE.md's measured-scaling rows.
+Only the named cases run; with no arguments, the chain at 1M and 10M
+positionfixes and DBSCAN at 1M and 4M points. Results go to SCALE.md's
+measured-scaling rows.
 """
 
 from __future__ import annotations
@@ -121,6 +124,48 @@ def run_chain(spark, n: int) -> dict:
     }
     pfs.unpersist()
     return out
+
+
+def trips_user_input(spark, n: int):
+    """``n`` alternating staypoint/tripleg units of ONE user, 10 min
+    apart: every other staypoint is an activity, so each trip is
+    tripleg, staypoint, tripleg; a 2-hour recording gap follows every
+    1000 units. Returns (staypoints with is_activity, triplegs)."""
+    j = F.col("id")
+    start = F.lit(1700000000) + j * 600 + (j / 1000).cast("long") * 7200
+    pt = lambda k: F.struct((8.0 + (k % 7) * 1e-3).alias("lon"), (47.0 + (k % 5) * 1e-3).alias("lat"))
+    units = spark.range(n).select(
+        (j / 2).cast("long").alias("id"),
+        F.lit(0).cast("long").alias("user_id"),
+        F.timestamp_seconds(start).alias("started_at"),
+        F.timestamp_seconds(start + 300).alias("finished_at"),
+        j.alias("j"),
+    )
+    sp = units.filter(j % 2 == 0).select(
+        "id", "user_id", "started_at", "finished_at", pt(j).alias("geom"), (j % 4 == 0).alias("is_activity")
+    )
+    tpls = units.filter(j % 2 == 1).select(
+        "id", "user_id", "started_at", "finished_at", F.array(pt(j - 1), pt(j + 1)).alias("geom")
+    )
+    return sp, tpls
+
+
+def run_trips_user(spark, n: int) -> dict:
+    """``generate_trips`` over :func:`trips_user_input` with all three
+    outputs written to the noop sink; inputs are materialized first so
+    the wall is the operator alone."""
+    from trackintel_spark.operators.trips import generate_trips
+    from trackintel_spark.plans.ids import release_id_caches
+
+    sp, tpls = (d.localCheckpoint() for d in trips_user_input(spark, n))
+    t0 = time.time()
+    sp2, tpls2, trips = generate_trips(sp, tpls, gap_threshold=60)
+    for d in (trips, sp2, tpls2):
+        d.write.format("noop").mode("overwrite").save()
+    wall = time.time() - t0
+    n_trips = trips.count()
+    release_id_caches()
+    return {"units": n, "wall_s": round(wall, 1), "trips": n_trips}
 
 
 def run_dbscan(spark, n: int) -> dict:
@@ -336,14 +381,15 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
 def main():
     from trackintel_spark import get_spark
 
-    args = sys.argv[1:]
-    if "--dbscan" in args:
-        k = args.index("--dbscan")
-        chain_ns = [int(x) for x in args[:k]] or [1_000_000, 10_000_000]
-        db_ns = [int(x) for x in args[k + 1 :]] or [1_000_000, 4_000_000]
-    else:
-        chain_ns = [int(x) for x in args] or [1_000_000, 10_000_000]
-        db_ns = [1_000_000, 4_000_000]
+    groups, key = {"chain": [], "--dbscan": [], "--trips-user": []}, "chain"
+    for a in sys.argv[1:]:
+        if a in groups:
+            key = a
+        else:
+            groups[key].append(int(a))
+    if len(sys.argv) == 1:
+        groups.update({"chain": [1_000_000, 10_000_000], "--dbscan": [1_000_000, 4_000_000]})
+    chain_ns, db_ns, trips_ns = groups["chain"], groups["--dbscan"], groups["--trips-user"]
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -351,6 +397,8 @@ def main():
         print("chain", run_chain(spark, n), flush=True)
     for n in db_ns:
         print("dbscan", run_dbscan(spark, n), flush=True)
+    for n in trips_ns:
+        print("trips_user", run_trips_user(spark, n), flush=True)
 
 
 def run_trajectory_join(spark, n: int, leg_len: int = 2, n_sites: int = 20000) -> dict:

@@ -4,8 +4,10 @@ Reference: trackintel ``generate_trips`` (preprocessing/triplegs.py:12-232)
 with ``_concat_staypoints_triplegs`` (:235-291) and
 ``_get_activity_masks`` (:294-315). The reference is one per-user pass
 over the interleaved staypoints and triplegs; here that pass is ONE
-side-effect-free step, :func:`_assembly_step`, which the batch operator
-runs per user (``groupBy("user_id").applyInPandas``) and
+side-effect-free step, :func:`_assembly_step`, vectorized over a
+user's units (numpy arrays, no Python object per unit: SCALE.md has
+the single-user case), which the batch operator runs per user
+(``groupBy("user_id").applyInPandas``) and
 ``streaming/trips_state.py::trips_stream_exact`` runs from its state —
 the pattern ``operators/tours.py::_scan_step`` uses for tours. The two
 modes are equal by construction and differ only at the end of input:
@@ -36,94 +38,122 @@ Semantics reproduced:
 
 from __future__ import annotations
 
-import math
-from typing import NamedTuple
-
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user
+from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
 
 _SP, _TPL = 1, 2  # unit kinds, in the (started_at, type) tie order
 
-
-class _Unit(NamedTuple):
-    """One staypoint or tripleg. ``lon0/lat0`` and ``lon1/lat1`` are
-    its first and last coordinate (equal for a staypoint), NaN when
-    unknown."""
-
-    start_us: int
-    end_us: int
-    kind: int
-    id: int | None = None
-    is_activity: bool = False
-    lon0: float = math.nan
-    lat0: float = math.nan
-    lon1: float = math.nan
-    lat1: float = math.nan
+#: a unit is one staypoint or tripleg; ``lon0/lat0`` and ``lon1/lat1``
+#: are its first and last coordinate (equal for a staypoint), NaN when
+#: unknown. A unit table maps each of these names to a numpy array.
+_UNIT_COLS = ["start_us", "end_us", "kind", "id", "is_activity", "lon0", "lat0", "lon1", "lat1"]
 
 
-class _Trip(NamedTuple):
-    members: list  # the run's non-activity units, in order
-    origin: _Unit | None
-    dest: _Unit | None
-
-    @property
-    def start_us(self) -> int:
-        return self.members[0].start_us
-
-    @property
-    def end_us(self) -> int:
-        return max(u.end_us for u in self.members)
-
-
-def _close(run: list, origin: _Unit | None, dest: _Unit | None, out: list) -> None:
-    """Append ``run`` to ``out`` as a trip unless it has no tripleg."""
-    if any(u.kind == _TPL for u in run):
-        out.append(_Trip(run, origin, dest))
+def _take(units: dict, rows) -> dict:
+    """The ``rows`` (index array or slice) of a unit table."""
+    return {c: a[rows] for c, a in units.items()}
 
 
 def _assembly_step(
-    units: list, run: list, origin: _Unit | None, gap_s: float
-) -> tuple[list, list, _Unit | None]:
+    units: dict, run: dict, origin: dict, gap_s: float, flush: bool = False
+) -> tuple[dict, dict, dict, dict]:
     """Advance trip assembly over time-ordered ``units``.
 
-    ``run`` holds the open trip's units and ``origin`` the activity it
-    left from (None at the start or after a gap). Returns the trips
-    these units close plus the new ``(run, origin)``; the arguments are
-    not modified.
+    ``units``, ``run`` and ``origin`` are unit tables
+    (:data:`_UNIT_COLS`): ``run`` holds the open trip's units and
+    ``origin`` (at most one row) the activity it left from, empty at
+    the start or after a gap. ``flush`` closes the open trip at the end
+    as a gap does (no destination). Vectorized over the units, so a
+    user's whole history is one call.
+
+    Returns ``(seq, trips, run, origin)``: ``seq`` is origin, run and
+    units as one table; ``trips`` maps to one entry per trip these
+    units close — its members are ``seq`` rows ``lo`` to ``hi - 1``,
+    ``o`` and ``d`` are the ``seq`` rows of its origin and destination
+    (-1: none), plus ``start_us``, ``end_us`` and ``n_tpl``; then the
+    new open run and origin. The arguments are not modified.
     """
-    out: list = []
-    run = list(run)
-    for u in units:
-        prev = run[-1] if run else origin
-        if prev is not None and (u.start_us - prev.end_us) / 1e6 > gap_s:
-            _close(run, origin, None, out)
-            run, origin = [], None
-        if u.is_activity:
-            _close(run, origin, u, out)
-            run, origin = [], u
-        else:
-            run.append(u)
-    return out, run, origin
+    seq = {c: np.concatenate([origin[c], run[c], units[c]]) for c in _UNIT_COLS}
+    start, end = seq["start_us"].astype("int64"), seq["end_us"].astype("int64")
+    act = seq["is_activity"].astype(bool)
+    n = len(start)
+    gap = np.zeros(n, bool)
+    gap[1:] = (start[1:] - end[:-1]) / 1e6 > gap_s
+    # a run starts at every activity (its origin) and after every gap
+    # (no origin); the first one also at row 0
+    first = np.flatnonzero(gap | act)
+    if n and (not first.size or first[0]):
+        first = np.r_[0, first]
+    lo = first + act[first]
+    hi = np.r_[first[1:], n][: len(first)]
+    o = np.where(act[first], first, -1)
+    # the row that starts the next run is the destination unless a gap
+    # precedes it; the last run (hi == n) has none and stays open
+    # unless flushed
+    d = np.where(np.r_[act & ~gap, False][hi], hi, -1)
+    n_closed = len(first) - (len(first) > 0 and not flush)
+    tpl_before = np.r_[0, np.cumsum(seq["kind"] == _TPL)]
+    n_tpl = tpl_before[hi] - tpl_before[lo]
+    keep = np.flatnonzero(n_tpl[:n_closed] > 0)  # trips without triplegs are dropped
+    lo, hi = lo[keep], hi[keep]
+    # max end over each member range (a sentinel keeps hi == n in range)
+    bounds = np.column_stack([lo, hi]).ravel()
+    end_max = np.maximum.reduceat(np.r_[end, 0], bounds)[::2] if len(keep) else end[:0]
+    trips = {"lo": lo, "hi": hi, "o": o[keep], "d": d[keep], "start_us": start[lo], "end_us": end_max, "n_tpl": n_tpl[keep]}
+    if flush or not n:
+        return seq, trips, _take(seq, slice(0, 0)), _take(seq, slice(0, 0))
+    k = first[-1]  # the open run: its origin row (if any), then its members
+    m = k + act[k]
+    return seq, trips, _take(seq, slice(m, None)), _take(seq, slice(k, m))
 
 
-def _trip_row(seq: int, t: _Trip) -> tuple:
-    legs = [u for u in t.members if u.kind == _TPL]
-    o = t.origin if t.origin is not None and not math.isnan(t.origin.lon0) else legs[0]
-    d = t.dest if t.dest is not None and not math.isnan(t.dest.lon1) else legs[-1]
-    return (
-        seq,
-        t.start_us,
-        t.end_us,
-        t.origin.id if t.origin is not None else None,
-        t.dest.id if t.dest is not None else None,
-        o.lon0, o.lat0, d.lon1, d.lat1,
-        [u.id for u in t.members if u.kind == _SP],
-        [u.id for u in legs],
+def _trips_kernel(pdf: pd.DataFrame, gap_s: float) -> pd.DataFrame:
+    """One user's trips: the assembly step over all their units, with
+    the open trip flushed at the end of input."""
+    order = np.lexsort((pdf["id"], pdf["kind"], pdf["start_us"]))
+    units = {c: pdf[c].to_numpy()[order] for c in _UNIT_COLS}
+    none = _take(units, slice(0, 0))
+    seq, t, _, _ = _assembly_step(units, none, none, gap_s, flush=True)
+    kind, ids = seq["kind"], seq["id"]
+    lon0, lat0, lon1, lat1 = (seq[c].astype(float) for c in ("lon0", "lat0", "lon1", "lat1"))
+    lo, hi, o, d = t["lo"], t["hi"], t["o"], t["d"]
+
+    def members(k: int) -> pd.Series:
+        # each trip's members of one kind are one slice of that kind's ids
+        of_kind, before = ids[kind == k], np.r_[0, np.cumsum(kind == k)]
+        return pd.Series([of_kind[i:j] for i, j in zip(before[lo], before[hi])], dtype=object)
+
+    # a missing endpoint is imputed from the first/last tripleg
+    tpl_at = np.flatnonzero(kind == _TPL)
+    leg0 = tpl_at[np.searchsorted(tpl_at, lo)]
+    leg1 = tpl_at[np.searchsorted(tpl_at, hi) - 1]
+    oi = np.where((o >= 0) & ~np.isnan(lon0[np.maximum(o, 0)]), o, leg0)
+    di = np.where((d >= 0) & ~np.isnan(lon1[np.maximum(d, 0)]), d, leg1)
+
+    def end_id(i: np.ndarray) -> pd.api.extensions.ExtensionArray:
+        # nullable ids stay integers, not NaN-carrying floats
+        out = pd.array(ids[np.maximum(i, 0)], dtype="Int64")
+        out[i < 0] = pd.NA
+        return out
+
+    return pd.DataFrame(
+        {
+            "user_id": pdf["user_id"].iloc[0],
+            "seq": np.arange(len(lo)),
+            "start_us": t["start_us"],
+            "end_us": t["end_us"],
+            "origin_staypoint_id": end_id(o),
+            "destination_staypoint_id": end_id(d),
+            "o_lon": lon0[oi], "o_lat": lat0[oi], "d_lon": lon1[di], "d_lat": lat1[di],
+            "sps": members(_SP),
+            "tpls": members(_TPL),
+        }
     )
 
 
@@ -131,18 +161,6 @@ _TRIP_COLS = [
     "seq", "start_us", "end_us", "origin_staypoint_id", "destination_staypoint_id",
     "o_lon", "o_lat", "d_lon", "d_lat", "sps", "tpls",
 ]
-
-
-def _trips_kernel(pdf: pd.DataFrame, gap_s: float) -> pd.DataFrame:
-    pdf = pdf.sort_values(["start_us", "kind", "id"], kind="stable")
-    units = [_Unit(*r) for r in pdf[list(_Unit._fields)].itertuples(index=False, name=None)]
-    trips, run, origin = _assembly_step(units, [], None, gap_s)
-    _close(run, origin, None, trips)  # end of input: the open trip ends at a gap
-    res = pd.DataFrame([_trip_row(i, t) for i, t in enumerate(trips)], columns=_TRIP_COLS)
-    # nullable ids stay integers, not NaN-carrying floats
-    res = res.astype({"origin_staypoint_id": "Int64", "destination_staypoint_id": "Int64"})
-    res.insert(0, "user_id", pdf["user_id"].iloc[0])
-    return res
 
 
 def generate_trips(
@@ -197,9 +215,10 @@ def generate_trips(
         return _trips_kernel(pdf, gap_s)
 
     raw = units.repartition(kernel_partitions(units), "user_id").groupBy("user_id").applyInPandas(_run, schema=schema)
-    # the id helper caches its sorted input: the three outputs below
-    # are projections of that one table
-    trips = dense_id_by_user(raw, order_by=["seq"], id_col="id")
+    # the id pass reads its input twice (range sampling, then the sorted
+    # shuffle): cached, the kernel runs once. The id helper caches its
+    # sorted output, and the three outputs below are projections of it.
+    trips = dense_id_by_user(persist_owned(raw), order_by=["seq"], id_col="id")
 
     trips_out = trips.selectExpr(
         "id", "user_id", "timestamp_micros(start_us) AS started_at", "timestamp_micros(end_us) AS finished_at",

@@ -32,12 +32,13 @@ from __future__ import annotations
 
 from typing import Any, Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
-from trackintel_spark.operators.trips import _SP, _TPL, _assembly_step, _close, _Trip, _Unit
+from trackintel_spark.operators.trips import _SP, _TPL, _assembly_step, _take
 from trackintel_spark.streaming.triplegs_state import _ingest_and_settle
 from trackintel_spark.streaming.reorder import apply_with_reorder
 
@@ -74,16 +75,37 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _out_row(user_id, t: _Trip) -> tuple:
-    n_tpl = sum(1 for u in t.members if u.kind == _TPL)
-    return (
-        user_id,
-        pd.Timestamp(t.start_us, unit="us"),
-        pd.Timestamp(t.end_us, unit="us"),
-        pd.Timestamp(t.origin.start_us, unit="us") if t.origin else None,
-        pd.Timestamp(t.dest.start_us, unit="us") if t.dest else None,
-        n_tpl,
-        len(t.members) - n_tpl,
+def _units(start_us, end_us, kind, is_activity) -> dict:
+    """A unit table without ids or coordinates: the stream emits neither."""
+    n = len(start_us)
+    return {
+        "start_us": np.asarray(start_us, "int64"),
+        "end_us": np.asarray(end_us, "int64"),
+        "kind": np.asarray(kind, "int64"),
+        "id": np.full(n, -1),
+        "is_activity": np.asarray(is_activity, bool),
+        **{c: np.full(n, np.nan) for c in ("lon0", "lat0", "lon1", "lat1")},
+    }
+
+
+def _us(ts: pd.Series) -> np.ndarray:
+    return ts.to_numpy("datetime64[ns]").astype("int64") // 1000
+
+
+def _out_rows(user_id, seq: dict, trips: dict) -> pd.DataFrame:
+    def start_of(i: np.ndarray) -> pd.Series:  # -1: none
+        return pd.Series(pd.to_datetime(seq["start_us"][np.maximum(i, 0)], unit="us")).where(i >= 0)
+
+    return pd.DataFrame(
+        {
+            "user_id": user_id,
+            "started_at": pd.to_datetime(trips["start_us"], unit="us"),
+            "finished_at": pd.to_datetime(trips["end_us"], unit="us"),
+            "origin_started_at": start_of(trips["o"]),
+            "destination_started_at": start_of(trips["d"]),
+            "n_triplegs": trips["n_tpl"].astype("int32"),
+            "n_staypoints": (trips["hi"] - trips["lo"] - trips["n_tpl"]).astype("int32"),
+        }
     )
 
 
@@ -147,19 +169,17 @@ def trips_stream_exact(
 
         # ---- new closed units, time-ordered -------------------------------
         ts_all = full["tracked_at"].to_numpy().astype("int64")
-        units = []
-        for _, sp in sps.iterrows():
-            s = int(pd.Timestamp(sp["started_at"]).value // 1000)
-            e = int(pd.Timestamp(sp["finished_at"]).value // 1000)
-            units.append(_Unit(s, e, _SP, is_activity=(e - s) / 1e6 > act_s))
-        for run in closed_runs:
-            units.append(_Unit(int(ts_all[run[0]] // 1000), int(ts_all[run[-1]] // 1000), _TPL))
-        units.sort(key=lambda u: u[:3])
-
-        # ---- trip assembly: the batch generate_trips step -----------------
-        pend = [_Unit(s, e, k) for k, s, e in zip(u_kind, u_start, u_end)]
-        origin = _Unit(origin_start, origin_end, _SP, is_activity=True) if origin_start >= 0 else None
-        trips, pend, origin = _assembly_step(units, pend, origin, gap_s)
+        sp_s, sp_e = (_us(sps[c]) if len(sps) else np.empty(0, "int64") for c in ("started_at", "finished_at"))
+        legs = np.array([(ts_all[r[0]], ts_all[r[-1]]) for r in closed_runs], "int64").reshape(-1, 2) // 1000
+        units = _units(
+            np.r_[sp_s, legs[:, 0]],
+            np.r_[sp_e, legs[:, 1]],
+            np.r_[np.full(len(sp_s), _SP), np.full(len(legs), _TPL)],
+            np.r_[(sp_e - sp_s) / 1e6 > act_s, np.zeros(len(legs), bool)],
+        )
+        units = _take(units, np.lexsort((units["kind"], units["end_us"], units["start_us"])))
+        run = _units(u_start, u_end, u_kind, np.zeros(len(u_kind), bool))
+        origin = _units(*([origin_start], [origin_end], [_SP], [True]) if origin_start >= 0 else ([],) * 4)
 
         # ---- end-of-batch: close on a PROVEN future gap ------------------
         # earliest possible start of any future unit = the open travel
@@ -169,27 +189,28 @@ def trips_stream_exact(
             nxt_floor_us = int(ts_all[open_run[0]] // 1000)
         elif len(new_scan_state[1]) > new_scan_state[4]:
             nxt_floor_us = int(new_scan_state[1][new_scan_state[4]])
-        last = pend[-1] if pend else origin
-        if nxt_floor_us is not None and last is not None and (nxt_floor_us - last.end_us) / 1e6 > gap_s:
-            _close(pend, origin, None, trips)
-            pend, origin = [], None
+        last = next((t["end_us"][-1] for t in (units, run, origin) if len(t["end_us"])), None)
+        flush = nxt_floor_us is not None and last is not None and (nxt_floor_us - int(last)) / 1e6 > gap_s
+
+        # ---- trip assembly: the batch generate_trips step -----------------
+        seq, trips, run, origin = _assembly_step(units, run, origin, gap_s, flush=flush)
 
         new_wm = wm_us
-        if units:
-            new_wm = max(new_wm, units[-1].end_us)
+        if len(units["end_us"]):
+            new_wm = max(new_wm, int(units["end_us"][-1]))
         state.update(
             (
                 *new_scan_state,
-                [int(u.kind) for u in pend],
-                [int(u.start_us) for u in pend],
-                [int(u.end_us) for u in pend],
-                int(origin.start_us) if origin else -1,
-                int(origin.end_us) if origin else -1,
+                run["kind"].astype("int64").tolist(),
+                run["start_us"].astype("int64").tolist(),
+                run["end_us"].astype("int64").tolist(),
+                int(origin["start_us"][0]) if len(origin["start_us"]) else -1,
+                int(origin["end_us"][0]) if len(origin["end_us"]) else -1,
                 int(new_wm),
             )
         )
-        if trips:
-            yield pd.DataFrame([_out_row(user_id, t) for t in trips], columns=_OUT_SCHEMA.fieldNames())
+        if len(trips["lo"]):
+            yield _out_rows(user_id, seq, trips)
 
     return apply_with_reorder(
         pfs, ("user_id",), fn, _OUT_SCHEMA, _STATE_SCHEMA,
