@@ -93,14 +93,19 @@ def _us(ts: pd.Series) -> np.ndarray:
 
 
 def _out_rows(user_id, seq: dict, trips: dict) -> pd.DataFrame:
-    def start_of(i: np.ndarray) -> pd.Series:  # -1: none
-        return pd.Series(pd.to_datetime(seq["start_us"][np.maximum(i, 0)], unit="us")).where(i >= 0)
+    def ts(us: np.ndarray) -> np.ndarray:
+        return us.astype("datetime64[us]").astype("datetime64[ns]")
+
+    def start_of(i: np.ndarray) -> np.ndarray:  # -1: none
+        out = ts(seq["start_us"][np.maximum(i, 0)])
+        out[i < 0] = np.datetime64("NaT")
+        return out
 
     return pd.DataFrame(
         {
             "user_id": user_id,
-            "started_at": pd.to_datetime(trips["start_us"], unit="us"),
-            "finished_at": pd.to_datetime(trips["end_us"], unit="us"),
+            "started_at": ts(trips["start_us"]),
+            "finished_at": ts(trips["end_us"]),
             "origin_started_at": start_of(trips["o"]),
             "destination_started_at": start_of(trips["d"]),
             "n_triplegs": trips["n_tpl"].astype("int32"),
