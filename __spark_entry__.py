@@ -1483,12 +1483,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         from trackintel_spark.plans.ids import dense_id_by_user
 
-        # NOT checkpointed: an eager materialization of sp/mv/trips at
-        # sf0.1 costs more wall time per bench run than the big (~700
-        # scan) plan tree costs to analyze on a warm JVM — measured
-        # 2.6 s lazy vs 9.5 s checkpointed. dbscan_distributed keeps its
-        # internal checkpoints because those intermediates were
-        # persisted (materialized) anyway; here they were not.
         mv = dense_id_by_user(mv, order_by=["started_at"], id_col="id")
         _, _, trips = generate_trips(sp, mv, gap_threshold=720, add_geometry=False)
         _, tours = generate_tours(trips, staypoints=sp, max_time=1440)

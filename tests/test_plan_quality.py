@@ -261,6 +261,35 @@ def test_dense_id_by_user_offsets_are_range_partitioned(spark):
     assert "rangepartitioning" in exchanges.pop().replace(" ", "").lower()
 
 
+def test_lazy_chain_is_cache_backed_and_grows_linearly(spark, tmp_path):
+    """pfs -> staypoints -> triplegs -> activity flag -> trips -> tours,
+    fully lazy over one Parquet scan: each operator input references at
+    most one more leaf than the one before it, and every leaf of the
+    trips and tours outputs, once caches are substituted, is a cache."""
+    from tools.scale_probe import mobility_input
+    from trackintel_spark.analysis import create_activity_flag
+    from trackintel_spark.operators import generate_staypoints, generate_tours, generate_trips, generate_triplegs
+
+    mobility_input(spark, 4000, pfs_per_user=1000).write.parquet(str(tmp_path / "pfs"))
+    pfs, sp = generate_staypoints(
+        spark.read.parquet(str(tmp_path / "pfs")), dist_threshold=100, time_threshold=5, gap_threshold=120
+    )
+    _, tpls = generate_triplegs(pfs, sp)
+    sp = create_activity_flag(sp, time_threshold=15)
+    sp_t, tpls_t, trips = generate_trips(sp, tpls, gap_threshold=60)
+    trips_t, tours = generate_tours(trips)
+
+    def leaves(df, phase="analyzed"):
+        ls = getattr(df._jdf.queryExecution(), phase)().collectLeaves()
+        return [ls.apply(i).nodeName() for i in range(ls.size())]
+
+    # the trips inputs (staypoints, triplegs) and the tours input (trips)
+    assert [len(leaves(d)) for d in (sp, tpls, trips)] == [1, 2, 3]
+    for out in (sp_t, tpls_t, trips, trips_t, tours):
+        assert set(leaves(out, "withCachedData")) == {"InMemoryRelation"}
+    assert tours.count() > 0
+
+
 def test_dedup_exact_shuffles_on_digest_not_text(spark):
     """The exchange key must be md5(text), never the document text —
     multi-KB shuffle keys cost ~100x in hash/sort work."""

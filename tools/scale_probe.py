@@ -20,10 +20,15 @@ measured-scaling rows.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 from pyspark.sql import functions as F
+
+# perfbench's staged-pipeline helpers: local checkpoints it can free
+sys.path.append(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+from workloads import _materialise, _unpersist  # noqa: E402
 
 
 def mobility_input(spark, n: int, pfs_per_user: int = 2000):
@@ -85,26 +90,29 @@ def run_chain(spark, n: int) -> dict:
     vs 41 s staged), so lazy chaining UNDERSTATES the engine; staging
     is both the recommended usage and what a warehouse run does.
     Per-stage walls are reported so a kernel regression names its
-    stage."""
+    stage. The checkpoints and the library's caches are freed before it
+    returns, so the next size starts from an empty block store."""
     from trackintel_spark.operators import generate_staypoints, generate_triplegs
     from trackintel_spark.operators.tours import generate_tours
     from trackintel_spark.operators.trips import generate_trips
+    from trackintel_spark.plans.ids import release_id_caches
 
+    owned: list = []
     pfs = mobility_input(spark, n).persist()
     pfs.count()
     t0 = time.time()
     pfs_sp, sp = generate_staypoints(
         pfs, dist_threshold=100, time_threshold=5, gap_threshold=120
     )
-    pfs_sp, sp = pfs_sp.localCheckpoint(), sp.localCheckpoint()
+    pfs_sp, sp = _materialise(pfs_sp, owned), _materialise(sp, owned)
     t1 = time.time()
     dur = F.col("finished_at").cast("double") - F.col("started_at").cast("double")
     sp = sp.withColumn("is_activity", dur >= 15 * 60)
     pfs_t, tpls = generate_triplegs(pfs_sp, sp)
-    tpls = tpls.localCheckpoint()
+    tpls = _materialise(tpls, owned)
     t2 = time.time()
     sp2, tpls2, trips = generate_trips(sp, tpls, gap_threshold=60)
-    sp2, trips = sp2.localCheckpoint(), trips.localCheckpoint()
+    sp2, trips = _materialise(sp2, owned), _materialise(trips, owned)
     t3 = time.time()
     # location = 100 m grid cell of the staypoint: users cycle through 6
     # spots, so every cycle closes tours (id%k never revisits -> 0 tours)
@@ -122,6 +130,8 @@ def run_chain(spark, n: int) -> dict:
         "staypoints_s": round(t1 - t0, 1), "triplegs_s": round(t2 - t1, 1),
         "trips_s": round(t3 - t2, 1), "tours_s": round(t4 - t3, 1),
     }
+    _unpersist(owned)
+    release_id_caches()
     pfs.unpersist()
     return out
 

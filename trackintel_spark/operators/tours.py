@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user
+from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
 from trackintel_spark.plans.literals import sql_double
 
 _TOUR_SCHEMA = T.StructType(
@@ -294,10 +294,6 @@ def generate_tours(
     ``max_nr_gaps > 0`` (found by the randomized fuzz test).
     """
     validate(trips, "trips")
-    # size-aware lineage boundary — see generate_trips / plans/checkpoint.py
-    from trackintel_spark.plans.checkpoint import truncate_if_rescan_heavy
-
-    trips = truncate_if_rescan_heavy(trips)
     use_locations = staypoints is not None
     if use_locations:
         if "location_id" not in staypoints.columns:
@@ -414,7 +410,8 @@ def generate_tours(
         .groupBy(*group_cols)
         .applyInPandas(_run, schema=schema)
     )
-    tours = dense_id_by_user(raw, order_by=order_by, id_col="id").drop(
+    # cached for the id pass (see dense_id_by_user): the kernel runs once
+    tours = dense_id_by_user(persist_owned(raw), order_by=order_by, id_col="id").drop(
         *(["seq", "__session"] if salt_sessions else ["seq"])
     )
 

@@ -175,16 +175,7 @@ def generate_trips(
     if "is_activity" not in staypoints.columns:
         raise AttributeError("staypoints need the column 'is_activity' to be able to generate trips")
 
-    # size-aware lineage boundary: each input feeds the kernel and its
-    # own link-back, so a chained upstream plan is scanned twice —
-    # truncate exactly when the duplicated re-scans outweigh one
-    # materialization (plans/checkpoint.py; conf-tunable, no-op at
-    # bench scale).
-    from trackintel_spark.plans.checkpoint import truncate_if_rescan_heavy
     from trackintel_spark.plans.partitioning import kernel_partitions
-
-    staypoints = truncate_if_rescan_heavy(staypoints)
-    triplegs = truncate_if_rescan_heavy(triplegs)
 
     sp_base = staypoints.drop(*[c for c in ("trip_id", "prev_trip_id", "next_trip_id") if c in staypoints.columns])
     tpls_base = triplegs.drop(*[c for c in ("trip_id",) if c in triplegs.columns])
@@ -215,9 +206,9 @@ def generate_trips(
         return _trips_kernel(pdf, gap_s)
 
     raw = units.repartition(kernel_partitions(units), "user_id").groupBy("user_id").applyInPandas(_run, schema=schema)
-    # the id pass reads its input twice (range sampling, then the sorted
-    # shuffle): cached, the kernel runs once. The id helper caches its
-    # sorted output, and the three outputs below are projections of it.
+    # cached for the id pass (see dense_id_by_user): the kernel runs
+    # once. The id helper caches its sorted output, and the three
+    # outputs below are projections of it.
     trips = dense_id_by_user(persist_owned(raw), order_by=["seq"], id_col="id")
 
     trips_out = trips.selectExpr(

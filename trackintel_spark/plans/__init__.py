@@ -1,4 +1,3 @@
-from trackintel_spark.plans.checkpoint import redundant_scan_bytes, truncate_if_rescan_heavy
 from trackintel_spark.plans.ids import dense_id_by_user
 from trackintel_spark.plans.literals import sql_double
 from trackintel_spark.plans.partitioning import co_partition_by_user, write_bucketed_by_user
@@ -7,7 +6,5 @@ __all__ = [
     "dense_id_by_user",
     "co_partition_by_user",
     "write_bucketed_by_user",
-    "redundant_scan_bytes",
-    "truncate_if_rescan_heavy",
     "sql_double",
 ]

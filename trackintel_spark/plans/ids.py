@@ -20,10 +20,10 @@ and cache the shuffled input for the main query to reuse.
 
 The cache is LOAD-BEARING: the collected bases describe the cached
 partitioning, so the eager helpers must not unpersist under their own
-output. Every cache the library keeps past its call (these, and the
+output. Every persist the library keeps past its call (these, and the
 operators' own) is registered here; long sessions chaining many
 operators accumulate them — call :func:`release_id_caches` after the
-consuming action (write/collect) to free them all.
+consuming action (write/collect) to free them.
 """
 
 from __future__ import annotations
@@ -51,9 +51,14 @@ def persist_owned(df: DataFrame, *args) -> DataFrame:
 
 
 def release_id_caches() -> int:
-    """Unpersist every cache the library created this session: the
-    eager id helpers' shuffled inputs and the operators' own caches
-    (all registered through :func:`persist_owned`).
+    """Unpersist the registered persists: every cache made through
+    :func:`persist_owned` (the eager id helpers' shuffled inputs and
+    the operators' own caches).
+
+    The lineage checkpoints of iterative operators (dbscan rounds,
+    graph connected components, rollup levels, privacy, dedup) are not
+    registered: they stay with the context cleaner, which frees them
+    once their DataFrames are garbage-collected.
 
     Safe once the outputs have been materialized (written/collected):
     recomputation after release would re-sample range boundaries, so
@@ -163,6 +168,11 @@ def dense_id_by_user(
     generate-operators plan in linear, not exponential, tree size.
     Range partitioning keeps equal keys together, so ids are
     deterministic wherever the sort key is.
+
+    The range shuffle reads ``df`` twice: once to sample the range
+    bounds (its own job), once to shuffle. A caller whose ``df`` is
+    costly to compute (a Python kernel's output) passes it through
+    :func:`persist_owned` first, so it is computed once.
     """
     p = df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in [user_col, *order_by]]
