@@ -58,13 +58,15 @@ def test_release_id_caches_frees_everything_the_chain_cached(spark):
 
 def test_python_kernels_run_once_per_group(spark, monkeypatch):
     """The id pass reads its input twice (range sampling, then the
-    sorted shuffle), so the staypoint and tour kernels feeding it run
-    from a cache: one kernel call per user group, not one per read."""
+    sorted shuffle), so the staypoint, tripleg and tour kernels feeding
+    it run from a cache: one kernel call per user group, not one per
+    read."""
     from tests.test_accessors import _walkers
     from trackintel_spark.analysis import create_activity_flag
     from trackintel_spark.operators import generate_staypoints, generate_tours, generate_trips, generate_triplegs
     from trackintel_spark.operators import staypoints as sp_mod
     from trackintel_spark.operators import tours as tours_mod
+    from trackintel_spark.operators import triplegs as tpl_mod
 
     def counted(module, name):
         kernel, calls = getattr(module, name), spark.sparkContext.accumulator(0)
@@ -78,15 +80,18 @@ def test_python_kernels_run_once_per_group(spark, monkeypatch):
 
     sp_calls = counted(sp_mod, "_sliding_kernel")
     tour_calls = counted(tours_mod, "_tours_kernel")
+    tpl_calls = counted(tpl_mod, "_triplegs_kernel")
     pfs, sp = generate_staypoints(_walkers(spark), dist_threshold=150, time_threshold=20, gap_threshold=600)
     sp.collect()
     assert sp_calls.value == 2  # two users, one group each
     pfs, tpls = generate_triplegs(pfs, sp)
+    tpls.collect()
+    assert tpl_calls.value == 2
     _, _, trips = generate_trips(create_activity_flag(sp, time_threshold=15), tpls, gap_threshold=15)
     _, tours = generate_tours(trips, max_dist=5000)
     tours.collect()
     assert tour_calls.value == trips.select("user_id").distinct().count() == 2
-    assert sp_calls.value == 2  # the downstream operators read the staypoint cache
+    assert sp_calls.value == tpl_calls.value == 2  # the downstream operators read the caches
 
 
 def test_repeated_call_keeps_one_registry_entry(spark):

@@ -134,3 +134,95 @@ def test_overlap_staypoints_requires_inputs(spark):
         generate_triplegs(pfs_sp, method="overlap_staypoints")
     with pytest.raises(TypeError, match="staypoint_id column"):
         generate_triplegs(pfs_sp.drop("staypoint_id"), staypoints=sp, method="overlap_staypoints")
+
+
+def _pin_fixture(spark):
+    """Two users with staypoint_id set by hand (gap_threshold 15 min).
+
+    user 1: leg 0 (0-2 min) | gap | sp 0, sp 1 back to back | leg 1 |
+    sp 2 | a 1-pf run | sp 3 | a zero-extent 2-pf run (id 2, dropped) |
+    sp 4 | gap | leg 3.
+    user 2 starts inside sp 5 | leg 4 | sp 6 of ONE pf | leg 5 | sp 7.
+    Staypoint geometries differ from their members' coordinates.
+    """
+    # (id, user, minute, lon, lat, staypoint_id)
+    u1 = [
+        (0, 0, 8.50, None), (1, 1, 8.51, None), (2, 2, 8.52, None),
+        (3, 30, 8.55, 0), (4, 32, 8.55, 0), (5, 34, 8.57, 1), (6, 36, 8.57, 1),
+        (7, 38, 8.60, None), (8, 39, 8.61, None),
+        (9, 40, 8.65, 2), (10, 42, 8.65, 2),
+        (11, 44, 8.70, None),
+        (12, 46, 8.75, 3), (13, 48, 8.75, 3),
+        (14, 50, 8.80, None), (15, 51, 8.80, None),
+        (16, 52, 8.85, 4), (17, 54, 8.85, 4),
+        (18, 80, 8.90, None), (19, 81, 8.91, None), (20, 82, 8.92, None),
+    ]
+    u2 = [
+        (21, 0, 9.50, 5), (22, 2, 9.50, 5),
+        (23, 4, 9.52, None), (24, 5, 9.53, None),
+        (25, 6, 9.55, 6),
+        (26, 7, 9.57, None), (27, 8, 9.58, None),
+        (28, 9, 9.60, 7), (29, 11, 9.60, 7),
+    ]
+    rows = [(i, 1, m, lon, 47.4, s) for i, m, lon, s in u1] + [(i, 2, m, lon, 47.6, s) for i, m, lon, s in u2]
+    pfs = make_pfs(spark, [(i, u, _ts(m), lon, lat) for i, u, m, lon, lat, _ in rows])
+    sp_of = spark.createDataFrame([(r[0], r[5]) for r in rows], "id long, staypoint_id long")
+    pfs = pfs.join(sp_of, on="id")
+    # [started_at, finished_at): finished_at is the first pf outside
+    spans = [(0, 1, 30, 34), (1, 1, 34, 38), (2, 1, 40, 44), (3, 1, 46, 50), (4, 1, 52, 80),
+             (5, 2, 0, 4), (6, 2, 6, 7), (7, 2, 9, 12)]
+    sp = spark.createDataFrame(
+        [(i, u, _ts(a), _ts(b), 10.0 + i, 50.0) for i, u, a, b in spans],
+        "id long, user_id long, started_at string, finished_at string, lon double, lat double",
+    ).select(
+        "id", "user_id", F.to_timestamp("started_at").alias("started_at"),
+        F.to_timestamp("finished_at").alias("finished_at"), F.struct("lon", "lat").alias("geom"),
+    )
+    return pfs, sp
+
+
+def _pinned(pfs_out, tpls):
+    legs = [
+        (r.id, r.user_id, r.started_at, r.finished_at, [(p.lon, p.lat) for p in r.geom])
+        for r in tpls.orderBy("id").collect()
+    ]
+    links = {r.id: r.tripleg_id for r in pfs_out.collect()}
+    return legs, [links[i] for i in range(30)]
+
+
+def test_overlap_and_case2_pinned_rows(spark):
+    """Full leg rows and pf links for both methods and the case-2 form,
+    checked by hand against the overlap rules: a staypoint's first pf
+    joins the leg before it (time and geometry) unless a gap precedes
+    it; its last pf joins the leg after it (geometry only, as the
+    staypoint's point) unless a gap follows or it already joined the
+    leg before; dropped legs (1 pf, zero extent) extend nothing."""
+    pfs, sp = _pin_fixture(spark)
+    m = lambda k: T0 + timedelta(minutes=k)  # noqa: E731
+    s = lambda i: (10.0 + i, 50.0)  # noqa: E731 — staypoint i's point
+    between = [
+        (0, 1, m(0), m(2), [(8.50, 47.4), (8.51, 47.4), (8.52, 47.4)]),
+        (1, 1, m(38), m(39), [(8.60, 47.4), (8.61, 47.4)]),
+        # id 2 is the zero-extent leg: dropped after numbering
+        (3, 1, m(80), m(82), [(8.90, 47.4), (8.91, 47.4), (8.92, 47.4)]),
+        (4, 2, m(4), m(5), [(9.52, 47.6), (9.53, 47.6)]),
+        (5, 2, m(7), m(8), [(9.57, 47.6), (9.58, 47.6)]),
+    ]
+    between_links = [0, 0, 0] + [None] * 4 + [1, 1] + [None] * 9 + [3, 3, 3] + [None] * 2 + [4, 4, None, 5, 5, None, None]
+    overlap = [
+        (0, 1, m(0), m(2), between[0][4]),
+        (1, 1, m(38), m(40), [s(1), (8.60, 47.4), (8.61, 47.4), s(2)]),
+        (3, 1, m(80), m(82), between[2][4]),
+        (4, 2, m(4), m(6), [s(5), (9.52, 47.6), (9.53, 47.6), s(6)]),
+        (5, 2, m(7), m(9), [(9.57, 47.6), (9.58, 47.6), s(7)]),
+    ]
+    overlap_links = [0, 0, 0] + [None] * 3 + [1, 1, 1, 1] + [None] * 8 + [3, 3, 3] + [None, 4, 4, 4, 4, 5, 5, 5, None]
+
+    got_b = _pinned(*generate_triplegs(pfs, gap_threshold=15))
+    assert got_b == (between, between_links)
+    pfs_o, tpls_o = generate_triplegs(pfs, staypoints=sp, method="overlap_staypoints", gap_threshold=15)
+    assert _pinned(pfs_o, tpls_o) == (overlap, overlap_links)
+    pfs_2, tpls_2 = generate_triplegs(pfs.drop("staypoint_id"), staypoints=sp, gap_threshold=15)
+    assert _pinned(pfs_2, tpls_2) == (between, between_links)
+    assert pfs_2.columns == ["id", "user_id", "tracked_at", "geom", "tripleg_id"]
+    assert pfs_o.columns == pfs.columns + ["tripleg_id"]

@@ -7,11 +7,14 @@ Generates inputs with ``spark.range`` (pure compute, no IO) and times
   generate_trips -> generate_tours;
 * distributed dataset DBSCAN on a 2000-hotspot point cloud;
 * ``generate_trips`` alone on ONE user with many staypoint/tripleg
-  units (the mega-user case of its per-user kernel).
+  units (the mega-user case of its per-user kernel);
+* ``generate_triplegs`` alone on ONE user with many positionfixes (the
+  mega-user case of its per-user kernel).
 
 Usage::
 
     python tools/scale_probe.py [chain_rows ...] [--dbscan rows ...] [--trips-user units ...]
+        [--triplegs-user fixes ...]
 
 Only the named cases run; with no arguments, the chain at 1M and 10M
 positionfixes and DBSCAN at 1M and 4M points. Results go to SCALE.md's
@@ -26,8 +29,12 @@ import time
 
 from pyspark.sql import functions as F
 
+# the library is imported from this checkout (main() points Spark's
+# Python workers at it too)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # perfbench's staged-pipeline helpers: local checkpoints it can free
-sys.path.append(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+sys.path.append(os.path.join(ROOT, "perfbench"))
 from workloads import _materialise, _unpersist  # noqa: E402
 
 
@@ -176,6 +183,41 @@ def run_trips_user(spark, n: int) -> dict:
     n_trips = trips.count()
     release_id_caches()
     return {"units": n, "wall_s": round(wall, 1), "trips": n_trips}
+
+
+def triplegs_user_input(spark, n: int):
+    """``n`` positionfixes of ONE user, 30 s apart, carrying
+    ``staypoint_id``: each 40-fix block is a 30-fix dwell (one
+    staypoint) then 10 travel fixes toward the next spot, and a 2-hour
+    recording gap follows every 1000 fixes."""
+    j = F.col("id")
+    blk, k = (j / 40).cast("long"), j % 40
+    step = F.when(k >= 30, (k - 29).cast("double") * 1e-3).otherwise(0.0)
+    return spark.range(n).select(
+        j.alias("id"),
+        F.lit(0).cast("long").alias("user_id"),
+        F.timestamp_seconds(F.lit(1700000000) + j * 30 + (j / 1000).cast("long") * 7200).alias("tracked_at"),
+        F.struct((8.0 + (blk % 7) * 1e-2 + step).alias("lon"), (47.0 + (blk % 5) * 1e-2 + step).alias("lat")).alias("geom"),
+        F.when(k < 30, blk).alias("staypoint_id"),
+    )
+
+
+def run_triplegs_user(spark, n: int) -> dict:
+    """``generate_triplegs`` over :func:`triplegs_user_input` with both
+    outputs written to the noop sink; the input is materialized first
+    so the wall is the operator alone."""
+    from trackintel_spark.operators import generate_triplegs
+    from trackintel_spark.plans.ids import release_id_caches
+
+    pfs = triplegs_user_input(spark, n).localCheckpoint()
+    t0 = time.time()
+    pfs2, tpls = generate_triplegs(pfs, gap_threshold=60)
+    for d in (tpls, pfs2):
+        d.write.format("noop").mode("overwrite").save()
+    wall = time.time() - t0
+    n_tpls = tpls.count()
+    release_id_caches()
+    return {"fixes": n, "wall_s": round(wall, 1), "triplegs": n_tpls}
 
 
 def run_dbscan(spark, n: int) -> dict:
@@ -391,7 +433,7 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
 def main():
     from trackintel_spark import get_spark
 
-    groups, key = {"chain": [], "--dbscan": [], "--trips-user": []}, "chain"
+    groups, key = {"chain": [], "--dbscan": [], "--trips-user": [], "--triplegs-user": []}, "chain"
     for a in sys.argv[1:]:
         if a in groups:
             key = a
@@ -399,8 +441,9 @@ def main():
             groups[key].append(int(a))
     if len(sys.argv) == 1:
         groups.update({"chain": [1_000_000, 10_000_000], "--dbscan": [1_000_000, 4_000_000]})
-    chain_ns, db_ns, trips_ns = groups["chain"], groups["--dbscan"], groups["--trips-user"]
+    chain_ns, db_ns, trips_ns, tpl_ns = (groups[k] for k in ("chain", "--dbscan", "--trips-user", "--triplegs-user"))
 
+    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     for n in chain_ns:
@@ -409,6 +452,8 @@ def main():
         print("dbscan", run_dbscan(spark, n), flush=True)
     for n in trips_ns:
         print("trips_user", run_trips_user(spark, n), flush=True)
+    for n in tpl_ns:
+        print("triplegs_user", run_triplegs_user(spark, n), flush=True)
 
 
 def run_trajectory_join(spark, n: int, leg_len: int = 2, n_sites: int = 20000) -> dict:

@@ -1,83 +1,153 @@
 """generate_triplegs — segment positionfixes between staypoints into legs.
 
 Reference: trackintel ``generate_triplegs`` (preprocessing/
-positionfixes.py:187-414). Unlike staypoint detection, this is fully
-vectorizable: the reference uses shift/ffill/searchsorted; we use lag()
-+ running-sum window segmentation — zero Python, whole-stage codegen,
-one shuffle on user_id.
-
-Driver-cost note (r12): projection layers are batched into single
-``selectExpr`` calls (SQL strings) — the Column-object form cost
-hundreds of py4j round trips per call, which dominated the operator's
-wall time at bench scale (see trips.py note). Logic and output are
-unchanged (oracle-pinned).
+positionfixes.py:187-414) with its overlap-staypoints variant
+(:417-475). The reference is one per-user pass over the time-ordered
+positionfixes; here its segmentation is ONE side-effect-free step,
+:func:`_run_split`, vectorized over a user's fixes (numpy arrays, no
+Python object per fix), which the batch operator runs per user
+(``groupBy("user_id").applyInPandas``) and
+``streaming/triplegs_state.py::_ingest_and_settle`` runs from its state
+for ``triplegs_stream_exact`` and ``trips_stream_exact`` — the pattern
+``operators/trips.py::_assembly_step`` uses for trips. The modes differ
+only at the end of input and in what they keep: batch closes the last
+run and applies the reference's >=2-pf and zero-extent rules; the
+stream holds the open run until a staypoint or a gap closes it and
+emits every closed run.
 
 Semantics reproduced:
-* new-leg triggers (reference :307-330): user change, temporal gap >
-  gap_threshold, staypoint-membership change — all masked to rows that
-  are not inside a staypoint;
+* a leg is a maximal run of consecutive pfs (per user, in
+  (tracked_at, id) order) outside any staypoint; a temporal gap >
+  gap_threshold between neighbours splits it (:307-330);
 * legs with <2 positionfixes are invalid: their pfs get NULL tripleg_id
   and no leg row is emitted (:368-372);
 * a leg's geometry is the time-ordered LineString of its member pfs
-  (:386-391); ``started_at``/``finished_at`` = min/max tracked_at;
+  (:386-391); ``started_at``/``finished_at`` = first/last tracked_at;
 * geometrically invalid legs (all vertices identical — zero-extent
   LineString) are dropped and their pfs unlinked (:398,
   ``_drop_invalid_triplegs`` :582-619);
 * leg ids are dense 0..n-1 in (user_id, started_at) order (:376 over
-  the (user_id, tracked_at)-sorted frame);
-* case 2 (staypoints given but pfs lack ``staypoint_id``): member pfs
-  are matched into staypoint [started_at, finished_at) intervals via an
-  interval join (:268-300).
+  the (user_id, tracked_at)-sorted frame), assigned before the
+  zero-extent drop, so surviving ids keep their numbers;
+* case 2 (staypoints given but pfs lack ``staypoint_id``): a pf is a
+  staypoint member when its tracked_at falls in one of its user's
+  staypoint [started_at, finished_at) intervals (:268-300);
+* ``overlap_staypoints`` (:417-475): a staypoint's FIRST pf joins the
+  valid leg right before it unless a gap sits between, which extends
+  that leg's ``finished_at`` (:449-455); its LAST pf joins the valid
+  leg right after it unless a gap sits between, it is the user's first
+  pf, or it already joined the leg before (:457-462). Joined pfs are
+  linked to the leg and contribute the staypoint's point to its
+  geometry (:464-468); dropped legs extend nothing.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user
-from trackintel_spark.plans.literals import sql_double
+from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
+
+_PF, _SP = 0, 1  # kernel row kinds: a positionfix, a staypoint
+
+_KERNEL_SCHEMA = (
+    "user_id long, start_us long, end_us long, lons array<double>, lats array<double>,"
+    " pfs_ids array<long>, valid boolean"
+)
 
 
-def _match_pfs_to_staypoint_intervals(pfs: DataFrame, sp: DataFrame) -> DataFrame:
-    """Case-2 preprocessing (preprocessing/positionfixes.py:268-300):
-    tag pfs whose tracked_at falls in a staypoint's [started_at,
-    finished_at) with that staypoint's id, per user.
+def _run_split(ts_us: np.ndarray, in_sp: np.ndarray, gap_s: float) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Split time-ordered fixes into travel runs.
 
-    Implemented as a time-bucketed interval join: both sides are binned
-    to coarse buckets so the join is an equi-join on (user_id, bucket)
-    plus a residual range predicate — avoids the O(n_pfs * n_sp)
-    cross product a naive theta-join would produce.
+    ``ts_us`` are the fixes' times (int64 µs) and ``in_sp`` marks the
+    staypoint members. A run is a maximal sequence of consecutive fixes
+    outside staypoints with no gap (> ``gap_s`` seconds) between
+    neighbours; every run, the last one included, is closed.
+
+    Returns ``(gap, lo, hi)``: ``gap[i]`` marks a gap between fix
+    ``i - 1`` and fix ``i``, and run ``k`` is fixes ``lo[k]`` to
+    ``hi[k] - 1``. The arguments are not modified.
     """
-    bucket_s = 6 * 3600  # 6h buckets: staypoints are minutes-to-hours long
-    b = lambda c: (c.cast("long") / bucket_s).cast("long")  # noqa: E731
+    t = ts_us / 1e6  # seconds, as Spark casts a timestamp to double
+    n = len(t)
+    gap = np.zeros(n, bool)
+    gap[1:] = np.diff(t) > gap_s
+    # cut[i]: no run spans fixes i - 1 and i (cut[0], cut[n]: the ends)
+    cut = np.ones(n + 1, bool)
+    cut[1:n] = in_sp[:-1] | in_sp[1:] | gap[1:]
+    travel = ~in_sp
+    return gap, np.flatnonzero(travel & cut[:-1]), np.flatnonzero(travel & cut[1:]) + 1
 
-    sp_i = sp.select(
-        F.col("user_id").alias("__sp_user"),
-        F.col("id").alias("__sp_id"),
-        F.col("started_at").alias("__sp_start"),
-        F.col("finished_at").alias("__sp_end"),
-        F.explode(F.sequence(b(F.col("started_at")), b(F.col("finished_at")))).alias("__bucket"),
-    )
-    pfs_b = pfs.withColumn("__bucket", b(F.col("tracked_at")))
-    joined = pfs_b.join(
-        sp_i,
-        on=(
-            (pfs_b["user_id"] == sp_i["__sp_user"])
-            & (pfs_b["__bucket"] == sp_i["__bucket"])
-            & (pfs_b["tracked_at"] >= sp_i["__sp_start"])
-            & (pfs_b["tracked_at"] < sp_i["__sp_end"])
-        ),
-        how="left",
-    )
-    # a pf can only fall into one staypoint of its user (non-overlapping
-    # by construction) — but guard with min() for safety.
-    keys = [c for c in pfs.columns]
-    return (
-        joined.groupBy(*keys)
-        .agg(F.min("__sp_id").alias("staypoint_id"))
-        .select(*keys, "staypoint_id")
+
+def _same(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Elementwise equality with NaN equal to NaN, as Spark compares doubles."""
+    return (a == b) | (np.isnan(a) & np.isnan(b))
+
+
+def _triplegs_kernel(pdf: pd.DataFrame, gap_s: float, match: bool, overlap: bool) -> pd.DataFrame:
+    """One user's legs of >=2 pfs: the run split over all their fixes.
+
+    ``valid`` is false for zero-extent legs, which the caller numbers
+    and then drops. ``match`` derives staypoint membership from the
+    user's staypoint rows (case 2); ``overlap`` extends each valid leg
+    into its bounding staypoints."""
+    is_pf = pdf["kind"].to_numpy() == _PF
+    pf, sp = pdf[is_pf], pdf[~is_pf]
+    pf = pf.iloc[np.lexsort((pf["id"].to_numpy(), pf["t_us"].to_numpy()))]
+    ts, ids = pf["t_us"].to_numpy("int64"), pf["id"].to_numpy("int64")
+    lon, lat = pf["lon"].to_numpy("float64"), pf["lat"].to_numpy("float64")
+    in_sp = pf["in_sp"].to_numpy(bool)
+    n = len(ts)
+    if match:
+        # a fix inside any [started_at, finished_at) of the user's staypoints
+        a = np.searchsorted(ts, sp["t_us"].to_numpy("int64"))
+        b = np.maximum(a, np.searchsorted(ts, sp["end_us"].to_numpy("int64")))
+        cover = np.zeros(n + 1, "int64")
+        np.add.at(cover, a, 1)
+        np.add.at(cover, b, -1)
+        in_sp = np.cumsum(cover[:n]) > 0
+
+    gap, lo, hi = _run_split(ts, in_sp, gap_s)
+    two = hi - lo >= 2
+    lo, hi = lo[two], hi[two]
+    # >=2 distinct vertices: some vertex differs from its predecessor
+    moved = np.zeros(n, bool)
+    moved[1:] = ~(_same(lon[1:], lon[:-1]) & _same(lat[1:], lat[:-1]))
+    n_moved = np.cumsum(moved)
+    valid = n_moved[hi - 1] > n_moved[lo]
+
+    first, end, last = lo, hi, hi - 1  # member fixes first..end-1; finished_at at last
+    if overlap:
+        # without a gap, the fix after a run is a staypoint's first fix
+        # and joins it; the fix before it is a staypoint's last fix and
+        # joins it unless that is the user's first fix or joined the
+        # leg before
+        nxt = valid & (hi < n) & ~gap[np.minimum(hi, n - 1)]
+        taken = np.zeros(n, bool)
+        taken[hi[nxt]] = True
+        prv = valid & (lo >= 2) & ~gap[lo] & ~taken[np.maximum(lo - 1, 0)]
+        first, end, last = lo - prv, hi + nxt, hi - 1 + nxt
+        # joined staypoint fixes contribute the staypoint's point
+        edge = np.r_[lo[prv] - 1, hi[nxt]]
+        at = sp.drop_duplicates("id").set_index("id").reindex(pf["sp_id"].to_numpy()[edge])
+        lon, lat = lon.copy(), lat.copy()
+        lon[edge], lat[edge] = at["lon"].to_numpy(), at["lat"].to_numpy()
+
+    def members(a: np.ndarray) -> pd.Series:
+        return pd.Series([a[i:j] for i, j in zip(first, end)], dtype=object)
+
+    return pd.DataFrame(
+        {
+            "user_id": pdf["user_id"].iloc[0],
+            "start_us": ts[lo],
+            "end_us": ts[last],
+            "lons": members(lon),
+            "lats": members(lat),
+            "pfs_ids": members(ids),
+            "valid": valid,
+        }
     )
 
 
@@ -94,189 +164,57 @@ def generate_triplegs(
             f"Method unknown. We only support 'between_staypoints' and 'overlap_staypoints'. You passed {method}"
         )
 
-    staypoints_exist = "staypoint_id" in pfs.columns
-    if method == "overlap_staypoints":
+    match = "staypoint_id" not in pfs.columns
+    overlap = method == "overlap_staypoints"
+    if overlap:
         # reference preconditions (:254-258)
         if staypoints is None:
             raise TypeError("staypoints input must be provided for overlap_staypoints method.")
-        if not staypoints_exist:
+        if match:
             raise TypeError("positionfixes must contain a staypoint_id column for overlap_staypoints method.")
-    if not staypoints_exist:
-        if staypoints is None:
-            raise TypeError("staypoints input must be provided for pfs without staypoint_id column.")
-        validate(staypoints, "staypoints")
-        pfs = _match_pfs_to_staypoint_intervals(pfs, staypoints)
+    if match and staypoints is None:
+        raise TypeError("staypoints input must be provided for pfs without staypoint_id column.")
+
+    from trackintel_spark.plans.partitioning import kernel_partitions
 
     if "tripleg_id" in pfs.columns:
         pfs = pfs.drop("tripleg_id")
-
-    _W = "OVER (PARTITION BY user_id ORDER BY tracked_at, id)"
-    gap_sql = f"CAST(tracked_at AS double) - CAST(__prev_ts AS double) > {sql_double(gap_threshold * 60.0)}"
-
-    # stage 1: lag-based raw signals (window functions can't nest, so
-    # materialize these before the running sum); stage 2: triggers +
-    # boundary; stage 3: running sum — each ONE selectExpr layer.
-    seg = pfs.selectExpr(
-        "*",
-        f"lag(tracked_at) {_W} AS __prev_ts",
-        f"lag(staypoint_id) {_W} AS __prev_sp",
-        f"row_number() {_W} = 1 AS __first",
-    ).selectExpr(
-        "*",
-        # staypoint-membership change: NULL-safe inequality with the
-        # previous row (reference cond_stp via the +1/fillna(0) diff
-        # trick, :316-320 — true on the first row of each user).
-        "NOT (staypoint_id <=> __prev_sp) OR __first AS __sp_change",
-        f"coalesce({gap_sql}, false) AS __gap",
-    ).selectExpr(
-        "*",
-        # leg trigger & segment boundary: a leg start OR entering a (new)
-        # staypoint — the running sum of boundaries gives each leg /
-        # staypoint-block its own segment id, which bounds leg length
-        # exactly like the reference's searchsorted bookkeeping (:332-366).
-        "(__first OR __gap OR __sp_change) AND staypoint_id IS NULL AS __leg_trigger",
-    ).selectExpr(
-        "*",
-        "__leg_trigger OR (staypoint_id IS NOT NULL AND __sp_change) AS __boundary",
-    ).selectExpr(
-        "*",
-        f"sum(CAST(__boundary AS long)) {_W} AS __seg",
-    ).drop("__prev_ts", "__prev_sp", "__first", "__sp_change", "__boundary")
-
-    # per-segment stats land in the SAME aggregation that builds the leg
-    # geometry (r12): the previous shape computed them with an unordered
-    # window over (user_id, __seg) — a second full sort of the pfs table
-    # (sorted (user, time) does not satisfy (user, seg) for Spark even
-    # though __seg is monotone in it). A segment is homogeneous by
-    # construction — every staypoint-membership change is a __boundary —
-    # so the row-level ~is_sp of the old __valid_leg is a per-segment
-    # constant and the filter moves after the aggregation unchanged;
-    # staypoint blocks contribute NULL to the conditional collect_list
-    # (collect_list skips NULLs), so geometry arrays only materialize
-    # for leg segments.
-    legs = (
-        seg.groupBy("user_id", "__seg")
-        .agg(
-            F.expr("min(tracked_at) AS started_at"),
-            F.expr("max(tracked_at) AS finished_at"),
-            F.expr("count(1) AS __seg_n"),
-            F.expr("max(CAST(__leg_trigger AS int)) AS __is_leg_i"),
-            F.expr("max(CASE WHEN staypoint_id IS NULL THEN 0 ELSE 1 END) AS __has_sp"),
-            F.expr(
-                "array_sort(collect_list(CASE WHEN staypoint_id IS NULL"
-                " THEN struct(tracked_at AS t, id AS i, geom AS p) END)) AS __pts"
-            ),
+    # ONE user_id exchange: the kernel groupBy and the link-back join's
+    # pfs side both reuse it (see generate_staypoints)
+    kp = kernel_partitions(pfs)
+    pfs = pfs.repartition(kp, "user_id")
+    units = pfs.selectExpr(
+        "user_id", f"{_PF} AS kind", "id", "unix_micros(tracked_at) AS t_us", "CAST(0 AS long) AS end_us",
+        "geom.lon AS lon", "geom.lat AS lat",
+        "false AS in_sp" if match else "staypoint_id IS NOT NULL AS in_sp",
+        "CAST(coalesce(staypoint_id, 0) AS long) AS sp_id" if overlap else "CAST(0 AS long) AS sp_id",
+    )
+    if match or overlap:
+        validate(staypoints, "staypoints")
+        # the user's staypoints ride in their kernel group; the union
+        # keeps the pfs side's partitioning
+        units = units.unionByName(
+            staypoints.selectExpr(
+                "user_id", f"{_SP} AS kind", "id", "unix_micros(started_at) AS t_us",
+                "unix_micros(finished_at) AS end_us", "geom.lon AS lon", "geom.lat AS lat",
+                "false AS in_sp", "CAST(0 AS long) AS sp_id",
+            ).repartition(kp, "user_id")
         )
-        # valid legs have >=2 member pfs (:368-372)
-        .filter("__is_leg_i = 1 AND __seg_n >= 2 AND __has_sp = 0")
-        .drop("__seg_n", "__is_leg_i", "__has_sp")
-        .selectExpr(
-            "*",
-            "transform(__pts, s -> s.p) AS geom",
-        )
-        .selectExpr("*", "size(array_distinct(geom)) AS __distinct_pts")
-        # __pts is consumed above; dropping it here keeps the member
-        # struct array (t, i, p per pf) out of the id-assignment
-        # exchange and the legs cache — geom alone is half the bytes
-        .drop("__pts")
+    gap_s = gap_threshold * 60.0
+
+    def _run(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _triplegs_kernel(pdf, gap_s, match, overlap)
+
+    raw = units.groupBy("user_id").applyInPandas(_run, schema=_KERNEL_SCHEMA)
+    # cached for the id pass (see dense_id_by_user): the kernel runs
+    # once. Ids are assigned before the zero-extent drop (reference
+    # :376 then :398), so the sequence may have holes.
+    legs = dense_id_by_user(persist_owned(raw), order_by=["start_us"], id_col="id").filter("valid")
+
+    tpls = legs.selectExpr(
+        "id", "user_id", "timestamp_micros(start_us) AS started_at", "timestamp_micros(end_us) AS finished_at",
+        "zip_with(lons, lats, (x, y) -> struct(x AS lon, y AS lat)) AS geom",
     )
-
-    # ids are assigned BEFORE the geometric-validity drop, matching the
-    # reference order (arange at :376, invalid rows dropped at :398) —
-    # surviving ids keep their numbers, so the sequence may have holes.
-    legs = dense_id_by_user(legs, order_by=["started_at"], id_col="id")
-    # zero-extent LineStrings are invalid (shapely is_valid=False,
-    # _drop_invalid_triplegs :582-619): need >=2 distinct vertices.
-    legs = legs.filter(F.col("__distinct_pts") >= 2)
-
-    tpls = legs.select("id", "user_id", "started_at", "finished_at", "geom")
-
-    link = legs.selectExpr("user_id AS __lu", "__seg", "id AS tripleg_id")
-    pfs_out = (
-        seg.join(
-            link,
-            on=((seg["user_id"] == link["__lu"]) & (seg["__seg"] == link["__seg"])),
-            how="left",
-        )
-        .drop("__lu", "__seg", "__leg_trigger", "__seg_n", "__is_leg", "__valid_leg")
-    )
-
-    if method == "overlap_staypoints":
-        return _overlap_staypoints(pfs_out, staypoints)
-
-    pfs_out = pfs_out.drop("__gap")
-    if not staypoints_exist:
-        pfs_out = pfs_out.drop("staypoint_id")
-
-    return pfs_out, tpls
-
-
-def _overlap_staypoints(pfs_between: DataFrame, staypoints: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """overlap_staypoints variant (reference
-    _generate_triplegs_overlap_staypoints, preprocessing/
-    positionfixes.py:417-475): triplegs share endpoint coordinates with
-    their bounding staypoints.
-
-    * temporal extension (:449-455): a staypoint's FIRST pf joins the
-      PRECEDING leg unless a recording gap sits between — so
-      ``finished_at`` = first pf of the following staypoint;
-      ``started_at`` stays the first pf after the previous staypoint;
-    * spatial extension (:457-462): a staypoint's pf also joins the
-      FOLLOWING leg (when no gap follows) so geometries overlap; member
-      pfs inside staypoints contribute the STAYPOINT geometry (:464-468).
-    """
-    w = Window.partitionBy("user_id").orderBy("tracked_at", "id")
-    x = (
-        pfs_between.withColumn("__prev_tpl", F.lag("tripleg_id").over(w))
-        .withColumn("__next_tpl", F.lead("tripleg_id").over(w))
-        .withColumn("__first", F.row_number().over(w) == 1)
-        .withColumn("__next_gap", F.coalesce(F.lead("__gap").over(w), F.lit(False)))
-    )
-    is_sp = F.col("staypoint_id").isNotNull()
-    overlap = ~F.col("__first") & is_sp
-
-    tpl_time = F.when(
-        overlap & ~F.col("__gap") & F.col("tripleg_id").isNull(), F.col("__prev_tpl")
-    ).otherwise(F.col("tripleg_id"))
-    x = x.withColumn("__tpl_time", tpl_time)
-    tpl_geom = F.when(F.col("__tpl_time").isNotNull(), F.col("__tpl_time")).when(
-        overlap & ~F.col("__next_gap"), F.col("__next_tpl")
-    )
-    x = x.withColumn("__tpl_geom", tpl_geom)
-
-    times = (
-        x.filter(F.col("__tpl_time").isNotNull())
-        .groupBy("__tpl_time")
-        .agg(
-            F.first("user_id").alias("user_id"),
-            F.min("tracked_at").alias("started_at"),
-            F.max("tracked_at").alias("finished_at"),
-        )
-        .withColumnRenamed("__tpl_time", "id")
-    )
-
-    # member pfs inside staypoints contribute the staypoint geometry
-    sp_geom = staypoints.select(F.col("id").alias("staypoint_id"), F.col("geom").alias("__sp_geom"))
-    geoms = (
-        x.filter(F.col("__tpl_geom").isNotNull())
-        .join(sp_geom, on="staypoint_id", how="left")
-        .withColumn("__pt", F.when(is_sp, F.col("__sp_geom")).otherwise(F.col("geom")))
-        .groupBy("__tpl_geom")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("tracked_at").alias("t"), F.col("id").alias("i"), F.col("__pt").alias("p")))
-            ).alias("__pts")
-        )
-        .select(
-            F.col("__tpl_geom").alias("id"),
-            F.transform("__pts", lambda s: s["p"]).alias("geom"),
-        )
-    )
-    tpls = times.join(geoms, on="id", how="inner").filter(
-        F.size(F.array_distinct("geom")) >= 2
-    ).select("id", "user_id", "started_at", "finished_at", "geom")
-
-    pfs_out = x.withColumn("tripleg_id", F.col("__tpl_geom")).drop(
-        "__prev_tpl", "__next_tpl", "__first", "__next_gap", "__tpl_time", "__tpl_geom", "__gap"
-    )
+    links = legs.selectExpr("user_id", "id AS tripleg_id", "explode(pfs_ids) AS id")
+    pfs_out = pfs.join(links, on=["user_id", "id"], how="left").select(*pfs.columns, "tripleg_id")
     return pfs_out, tpls

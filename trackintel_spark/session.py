@@ -51,22 +51,6 @@ def get_spark(
         # cover sessions we didn't build).
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        # collect_list/collect_set aggregations (leg geometry, trip
-        # member lists, tour links) run as ObjectHashAggregate, whose
-        # sort-based fallback triggers after only 128 distinct keys per
-        # partition (Spark default) — i.e. every such aggregation was
-        # silently a full sort. Segment/trip groups are numerous and
-        # small, so a realistic in-memory budget keeps them hash-based;
-        # state is bounded by the partition's own bytes either way, and
-        # the fallback still guards pathological single-partition group
-        # counts beyond this (r12, guide §2.4/§5). MEMORY WATCH (ADVICE
-        # r12): this applies to EVERY collect_list/collect_set agg in
-        # the session — for wide-payload aggregations fed by exchanges
-        # larger than a scan split, up to 500k group buffers stay on
-        # the executor heap before the spillable sort fallback. If an
-        # aggregation OOMs at high SF, scope this down (set/reset
-        # around the kernel aggs) before raising executor memory.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "500000")
         # parquet scan defaults: 128 MiB splits keep partitions memory-safe
         # at high SF while still parallelizing small local files.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
 from trackintel_spark.operators.staypoints import _is_time_id_sorted, _sliding_kernel
+from trackintel_spark.operators.triplegs import _run_split
 from trackintel_spark.streaming.reorder import apply_with_reorder
 
 _OUT_SCHEMA = T.StructType(
@@ -79,17 +80,16 @@ def _ingest_and_settle(
     """Shared settlement step for the stateful tripleg AND trip
     operators: merge state rows with new fixes (watermark floor = the
     candidate-window start), run the staypoint scan, split the settled
-    prefix into closed staypoints / closed travel runs / the trailing
-    open travel run.
+    prefix into closed staypoints / closed travel runs (the batch
+    operator's run split, ``operators/triplegs.py::_run_split``) / the
+    trailing open travel run.
 
-    Returns ``(full, sps, closed_runs, open_run, new_scan_state)``:
+    Returns ``(full, sps, (lo, hi), open_run, new_scan_state)``:
     ``full`` the sorted per-user frame, ``sps`` the kernel's CLOSED
-    staypoints, ``closed_runs``/``open_run`` position arrays into
-    ``full``, and the scan-state tuple to persist
-    (ids, ts_us, lons, lats, n_travel).
+    staypoints, closed run ``k`` = ``full`` rows ``lo[k]`` to
+    ``hi[k] - 1``, ``open_run`` a position array into ``full``, and
+    the scan-state tuple to persist (ids, ts_us, lons, lats, n_travel).
     """
-    import numpy as np
-
     if scan_state is not None:
         ids, ts_us, lons, lats, n_travel = scan_state
     else:
@@ -150,54 +150,35 @@ def _ingest_and_settle(
     )
     anchor = n_travel + (tail[0] if tail else 0)
 
-    n_settled = anchor
-    ids_arr = full["id"].to_numpy()[:n_settled]
-    ts_arr = full["tracked_at"].to_numpy()[:n_settled].astype("int64") / 1e9
     # membership of the settled prefix in ANY closed staypoint —
     # np.isin handles duplicate needle values, so the flat concat of
     # the pfs_ids lists replaces the former per-row python set build
     sp_id_lists = sps["pfs_ids"].to_list() if len(sps) else []
     sp_mask = (
-        np.isin(ids_arr, np.concatenate([np.asarray(a, dtype="int64") for a in sp_id_lists]))
+        np.isin(full["id"].to_numpy()[:anchor], np.concatenate([np.asarray(a, dtype="int64") for a in sp_id_lists]))
         if sp_id_lists
-        else np.zeros(n_settled, dtype=bool)
+        else np.zeros(anchor, dtype=bool)
     )
-    travel_pos = np.flatnonzero(~sp_mask)
-    closed_runs: list[np.ndarray] = []
+    t_us = full["tracked_at"].to_numpy().astype("int64") // 1000
+    _, lo, hi = _run_split(t_us[:anchor], sp_mask, gap_s)
+    # the batch step closes every run; the stream holds the last one
+    # while it reaches the scan anchor and no gap to the next fix
+    # proves it closed
     open_run = np.empty(0, dtype="int64")
-    if len(travel_pos):
-        sp_before = np.cumsum(sp_mask)
-        tp, tt = travel_pos, ts_arr[travel_pos]
-        brk = np.zeros(len(tp), dtype=bool)
-        if len(tp) > 1:
-            brk[1:] = (sp_before[tp[1:]] != sp_before[tp[:-1]]) | (tt[1:] - tt[:-1] > gap_s)
-        starts = np.flatnonzero(np.concatenate(([True], brk[1:])))
-        ends = np.append(starts[1:], len(tp))
-        last_closed = bool(sp_mask[tp[-1] + 1:].any()) or (
-            anchor < len(full)
-            and (full["tracked_at"].to_numpy()[anchor].astype("int64") / 1e9 - tt[-1]) > gap_s
-        )
-        n_runs = len(starts)
-        for r in range(n_runs):
-            run = tp[starts[r]:ends[r]]
-            if r == n_runs - 1 and not last_closed:
-                open_run = run
-            else:
-                closed_runs.append(run)
+    if len(hi) and hi[-1] == anchor and not (
+        anchor < len(full) and t_us[anchor] / 1e6 - t_us[anchor - 1] / 1e6 > gap_s
+    ):
+        open_run, lo, hi = np.arange(lo[-1], anchor), lo[:-1], hi[:-1]
 
-    keep_idx = np.concatenate(
-        [np.asarray(open_run, dtype="int64"), np.arange(anchor, len(full), dtype="int64")]
-    )
-    keep = full.iloc[keep_idx]
-    # vectorized state extraction (M8[ns] int64 // 1000 ≡ .value // 1000)
+    keep = np.r_[open_run, anchor:len(full)]
     new_scan_state = (
-        keep["id"].to_numpy(dtype="int64").tolist(),
-        (keep["tracked_at"].to_numpy().astype("int64") // 1000).tolist(),
-        keep["lon"].to_numpy(dtype="float64").tolist(),
-        keep["lat"].to_numpy(dtype="float64").tolist(),
+        full["id"].to_numpy(dtype="int64")[keep].tolist(),
+        t_us[keep].tolist(),
+        full["lon"].to_numpy(dtype="float64")[keep].tolist(),
+        full["lat"].to_numpy(dtype="float64")[keep].tolist(),
         len(open_run),
     )
-    return full, sps, closed_runs, open_run, new_scan_state
+    return full, sps, (lo, hi), open_run, new_scan_state
 
 
 def triplegs_stream_exact(
@@ -229,7 +210,7 @@ def triplegs_stream_exact(
         # candidate-window floor, run the staypoint scan (which never
         # sees the travel buffer), split the settled prefix into closed
         # staypoints / closed travel runs / the trailing open run
-        full, _sps, closed_runs, _open_run, new_scan_state = _ingest_and_settle(
+        full, _sps, (lo, hi), _open_run, new_scan_state = _ingest_and_settle(
             user_id,
             state.get if state.exists else None,
             batches,
@@ -238,8 +219,8 @@ def triplegs_stream_exact(
             gap_s,
         )
         out_rows = []
-        for run in closed_runs:
-            seg = full.iloc[run]
+        for i, j in zip(lo, hi):
+            seg = full.iloc[i:j]
             out_rows.append(
                 (
                     user_id,

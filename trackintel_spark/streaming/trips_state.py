@@ -168,14 +168,14 @@ def trips_stream_exact(
                     pdf = pdf[pdf["tracked_at"] >= floor]
                 yield pdf
 
-        full, sps, closed_runs, open_run, new_scan_state = _ingest_and_settle(
+        full, sps, (lo, hi), open_run, new_scan_state = _ingest_and_settle(
             user_id, scan_state, _wm_filter(batches), dist_threshold, time_s, gap_s
         )
 
         # ---- new closed units, time-ordered -------------------------------
         ts_all = full["tracked_at"].to_numpy().astype("int64")
         sp_s, sp_e = (_us(sps[c]) if len(sps) else np.empty(0, "int64") for c in ("started_at", "finished_at"))
-        legs = np.array([(ts_all[r[0]], ts_all[r[-1]]) for r in closed_runs], "int64").reshape(-1, 2) // 1000
+        legs = np.column_stack([ts_all[lo], ts_all[hi - 1]]) // 1000
         units = _units(
             np.r_[sp_s, legs[:, 0]],
             np.r_[sp_e, legs[:, 1]],
