@@ -956,7 +956,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # hotspot, so per-user DBSCAN(eps=2000 m, min_samples=2) clusters
         # are exactly "hotspot cells with >= 2 visits" — fully
         # SQL-checkable while still running the real applyInPandas
-        # kernel + per-user label offsetting.
+        # kernel + the per-user id pass (the reference's label offsets).
         from trackintel_spark.operators import generate_locations
 
         pfs = _pfs(spark, sf)

@@ -89,6 +89,61 @@ def test_location_center_and_extent(spark):
     assert min(lats) < 47.4 and max(lats) > 47.4
 
 
+def _three_users(spark):
+    """User 1: two clusters (first in time at 8.6) plus one noise point;
+    user 2: two far-apart staypoints, noise at num_samples=2; user 3:
+    one cluster with a repeated coordinate. Staypoint ids run against
+    user and time order."""
+    return _mk_sp(
+        spark,
+        [
+            (10, 1, 100, 110, 8.5, 47.4),
+            (11, 1, 0, 10, 8.6, 47.45),
+            (12, 1, 20, 30, 8.5005, 47.4),
+            (13, 1, 40, 50, 8.6001, 47.45),
+            (14, 1, 60, 70, 8.5, 47.4),
+            (15, 1, 80, 90, 9.9, 48.9),
+            (20, 2, 0, 10, 8.5, 47.4),
+            (21, 2, 20, 30, 10.0, 50.0),
+            (0, 3, 0, 10, 8.7, 47.5),
+            (1, 3, 20, 30, 8.7002, 47.5002),
+            (2, 3, 40, 50, 8.7, 47.5),
+        ],
+    )
+
+
+def test_locations_pinned_rows_three_users(spark):
+    sp_o, locs = generate_locations(_three_users(spark), epsilon=100, num_samples=2)
+    assert sp_o.columns == ["id", "user_id", "started_at", "finished_at", "geom", "location_id"]
+    assert locs.columns == ["id", "user_id", "center", "extent"]
+    assert {r.id: r.location_id for r in sp_o.collect()} == {
+        10: 1, 11: 0, 12: 1, 13: 0, 14: 1, 15: None, 20: None, 21: None, 0: 2, 1: 2, 2: 2,
+    }
+    rows = sorted(
+        (r.id, r.user_id, round(r.center.lon, 9), round(r.center.lat, 9), len(r.extent)) for r in locs.collect()
+    )
+    assert rows == [
+        (0, 1, 8.60005, 47.45, 18),
+        (1, 1, 8.50025, 47.4, 18),
+        (2, 3, 8.7001, 47.5001, 18),
+    ]
+
+
+def test_locations_empty_input(spark):
+    sp = _mk_sp(spark, [])
+    sp_o, locs = generate_locations(sp, epsilon=100, num_samples=1)
+    assert sp_o.columns == ["id", "user_id", "started_at", "finished_at", "geom", "location_id"]
+    assert locs.columns == ["id", "user_id", "center", "extent"]
+    assert sp_o.count() == 0 and locs.count() == 0
+
+
+def test_locations_activities_only_without_activities(spark):
+    sp = _three_users(spark).withColumn("is_activity", F.lit(False))
+    sp_o, locs = generate_locations(sp, epsilon=100, num_samples=1, activities_only=True)
+    assert {r.id: r.location_id for r in sp_o.collect()} == dict.fromkeys([10, 11, 12, 13, 14, 15, 20, 21, 0, 1, 2])
+    assert locs.count() == 0
+
+
 def test_dataset_agg_level_clusters_across_users(spark):
     sp = _mk_sp(spark, [(0, 1, 0, 10, 8.5, 47.4), (1, 2, 20, 30, 8.50005, 47.4)])
     _, locs_user = generate_locations(sp, epsilon=100, num_samples=1, agg_level="user")

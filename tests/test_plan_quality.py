@@ -23,6 +23,37 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _shuffles(df) -> list[str]:
+    """The physical shuffles ``df``'s plan runs, sorted: each
+    ``ShuffleExchangeExec`` once, keyed by plan id, however many cached
+    or adaptive plans contain it. Each is its output partitioning
+    without expression ids or partition count, e.g.
+    ``hashpartitioning(user_id)``. The walk goes into the current plan
+    of adaptive nodes and query stages and into the cached plan of
+    in-memory scans, where a printed plan lists every subplan's initial
+    and final form."""
+    found = {}
+
+    def walk(node):
+        cls = node.getClass().getSimpleName()
+        if cls == "ShuffleExchangeExec":
+            found[node.id()] = re.sub(r"#\d+L?|, \d+(?=\)$)", "", node.outputPartitioning().toString())
+        elif cls == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+        elif cls == "InMemoryTableScanExec":
+            walk(node.relation().cachedPlan())
+        elif cls == "ReusedExchangeExec":
+            walk(node.child())
+        elif cls.endswith("QueryStageExec"):
+            walk(node.plan())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return sorted(found.values())
+
+
 def test_tpch_q1_scan_prunes_and_pushes(spark):
     li = load_table(spark, SF, "lineitem")
     q = (
@@ -101,7 +132,8 @@ def test_spatial_filter_broadcasts_areas(spark):
 
 def test_tripleg_kernel_reads_one_user_exchange(spark):
     """The per-user tripleg kernel reads the operator's single hash
-    exchange on user_id; nothing re-shuffles the pfs on the way."""
+    exchange on user_id; nothing re-shuffles the pfs on the way, and
+    the id pass adds its one range shuffle."""
     from trackintel_spark.operators import generate_triplegs
 
     ev = load_table(spark, SF, "events")
@@ -111,12 +143,30 @@ def test_tripleg_kernel_reads_one_user_exchange(spark):
         F.lit(None).cast("long").alias("staypoint_id"),
     )
     _, tpls = generate_triplegs(pfs, gap_threshold=30)
-    plan = _plan(tpls.select("id"))
-    # the one user_id exchange feeding the kernel is printed four times:
-    # in the initial and final adaptive plans of the kernel cache, each
-    # nested in the id cache's two; a second shuffle shows up as more
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges <= 4, plan[:2000]
+    assert _shuffles(tpls.select("id")) == [
+        "hashpartitioning(user_id)",
+        "rangepartitioning(user_id ASC NULLS FIRST, start_us ASC NULLS FIRST)",
+    ]
+
+
+def test_locations_kernel_reads_one_user_exchange(spark):
+    """generate_locations: one user_id shuffle into the per-user DBSCAN
+    kernel and one range shuffle for the ids. The staypoints output
+    adds one more user_id shuffle: the link-back join's staypoint side
+    re-runs the operator's repartition outside the caches."""
+    from trackintel_spark.operators import generate_locations
+
+    ev = load_table(spark, SF, "events")
+    sp = ev.select(
+        F.col("event_id").alias("id"), "user_id", F.col("ts").alias("started_at"),
+        (F.col("ts") + F.expr("interval 10 minutes")).alias("finished_at"),
+        F.struct((8.5 + F.col("value") % 10 * 0.001).alias("lon"),
+                 (47.4 + F.col("value") % 7 * 0.001).alias("lat")).alias("geom"),
+    )
+    sp_out, locs = generate_locations(sp, epsilon=100, num_samples=2)
+    ids = "rangepartitioning(user_id ASC NULLS FIRST, label ASC NULLS FIRST)"
+    assert _shuffles(locs) == ["hashpartitioning(user_id)", ids]
+    assert _shuffles(sp_out) == ["hashpartitioning(user_id)", "hashpartitioning(user_id)", ids]
 
 
 def test_distance_matrix_band_prefilter_before_trig(spark):

@@ -58,12 +58,15 @@ def test_release_id_caches_frees_everything_the_chain_cached(spark):
 
 def test_python_kernels_run_once_per_group(spark, monkeypatch):
     """The id pass reads its input twice (range sampling, then the
-    sorted shuffle), so the staypoint, tripleg and tour kernels feeding
-    it run from a cache: one kernel call per user group, not one per
-    read."""
+    sorted shuffle), so the staypoint, tripleg, tour and location
+    kernels feeding it run from a cache: one kernel call per user
+    group, not one per read."""
     from tests.test_accessors import _walkers
     from trackintel_spark.analysis import create_activity_flag
-    from trackintel_spark.operators import generate_staypoints, generate_tours, generate_trips, generate_triplegs
+    from trackintel_spark.operators import (
+        generate_locations, generate_staypoints, generate_tours, generate_trips, generate_triplegs,
+    )
+    from trackintel_spark.operators import locations as loc_mod
     from trackintel_spark.operators import staypoints as sp_mod
     from trackintel_spark.operators import tours as tours_mod
     from trackintel_spark.operators import triplegs as tpl_mod
@@ -92,6 +95,11 @@ def test_python_kernels_run_once_per_group(spark, monkeypatch):
     tours.collect()
     assert tour_calls.value == trips.select("user_id").distinct().count() == 2
     assert sp_calls.value == tpl_calls.value == 2  # the downstream operators read the caches
+    loc_calls = counted(loc_mod, "_locations_kernel")
+    sp_loc, locs = generate_locations(sp, epsilon=100, num_samples=1)
+    locs.collect()
+    sp_loc.collect()
+    assert loc_calls.value == 2  # labels and geometry of each user in one call
 
 
 def test_repeated_call_keeps_one_registry_entry(spark):

@@ -4,7 +4,8 @@
 Generates inputs with ``spark.range`` (pure compute, no IO) and times
 
 * the full mobility chain: generate_staypoints -> generate_triplegs ->
-  generate_trips -> generate_tours;
+  generate_trips -> generate_tours, then generate_locations on the
+  same staypoints;
 * distributed dataset DBSCAN on a 2000-hotspot point cloud;
 * ``generate_trips`` alone on ONE user with many staypoint/tripleg
   units (the mega-user case of its per-user kernel);
@@ -97,9 +98,12 @@ def run_chain(spark, n: int) -> dict:
     vs 41 s staged), so lazy chaining UNDERSTATES the engine; staging
     is both the recommended usage and what a warehouse run does.
     Per-stage walls are reported so a kernel regression names its
-    stage. The checkpoints and the library's caches are freed before it
-    returns, so the next size starts from an empty block store."""
-    from trackintel_spark.operators import generate_staypoints, generate_triplegs
+    stage. ``locations_s`` times ``generate_locations`` on the staged
+    staypoints after the chain; it is not part of ``wall_s``, which
+    stays comparable with earlier rows. The checkpoints and the
+    library's caches are freed before it returns, so the next size
+    starts from an empty block store."""
+    from trackintel_spark.operators import generate_locations, generate_staypoints, generate_triplegs
     from trackintel_spark.operators.tours import generate_tours
     from trackintel_spark.operators.trips import generate_trips
     from trackintel_spark.plans.ids import release_id_caches
@@ -130,12 +134,16 @@ def run_chain(spark, n: int) -> dict:
     _, tours = generate_tours(trips, sp2.withColumn("location_id", loc))
     n_tours = tours.count()
     t4 = time.time()
+    sp_loc, locs = generate_locations(sp, epsilon=100)
+    _materialise(sp_loc, owned)
+    n_locs = _materialise(locs, owned).count()
+    t5 = time.time()
     wall = t4 - t0
     out = {
         "rows": n, "wall_s": round(wall, 1), "rows_per_s": int(n / wall),
-        "tours": n_tours,
+        "tours": n_tours, "locations": n_locs,
         "staypoints_s": round(t1 - t0, 1), "triplegs_s": round(t2 - t1, 1),
-        "trips_s": round(t3 - t2, 1), "tours_s": round(t4 - t3, 1),
+        "trips_s": round(t3 - t2, 1), "tours_s": round(t4 - t3, 1), "locations_s": round(t5 - t4, 1),
     }
     _unpersist(owned)
     release_id_caches()

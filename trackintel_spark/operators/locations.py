@@ -7,14 +7,20 @@ dependency here, so the kernel is a self-contained numpy DBSCAN with
 identical semantics (index-order BFS expansion — the same border-point
 assignment rule sklearn implements).
 
-* ``agg_level='user'``: one DBSCAN per user inside ``applyInPandas``
-  (shuffle partitioning replaces joblib); per-user labels are offset to
-  be globally unique by the cumulative (max_label+1) per user in
-  user_id order (:119-137);
+* ``agg_level='user'``: one per-user ``applyInPandas`` kernel runs
+  DBSCAN and emits one row per cluster (local label, geometry, member
+  staypoint ids) — the shape of the other generate-operators. Ids come
+  from one ``dense_id_by_user`` pass over (user_id, label). The
+  reference offsets each user's labels by the running sum of
+  (max_label + 1) over earlier users in user_id order (:119-137);
+  DBSCAN labels are contiguous from 0, so that offset plus the label
+  IS the dense rank over (user_id, label);
 * ``agg_level='dataset'``: clusters must span users. Exact parity runs
-  the same kernel on a single partition (fine for the sizes the
+  the same DBSCAN on a single partition (fine for the sizes the
   reference itself can handle — it is O(n^2) centralized there too);
-  the scale path is ``generate_locations_grid`` below;
+  the scale paths are ``distributed=True`` and
+  ``generate_locations_grid`` below. Geometry comes from the same
+  per-user cluster function over the labelled members;
 * noise label -1 becomes NULL ``location_id`` (:199-200);
 * location ``center`` = wrap-safe centroid of member staypoints
   (angle_centroid_multipoints, preprocessing/util.py:117-143);
@@ -30,12 +36,12 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import persist_owned
+from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
 
 _LABEL_SCHEMA = T.StructType(
     [
@@ -45,15 +51,16 @@ _LABEL_SCHEMA = T.StructType(
     ]
 )
 
-_LOC_SCHEMA = T.StructType(
+_CLUSTER_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
-        T.StructField("id", T.LongType()),
+        T.StructField("label", T.LongType()),
         T.StructField("center_lon", T.DoubleType()),
         T.StructField("center_lat", T.DoubleType()),
         T.StructField("extent", T.ArrayType(
             T.StructType([T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())])
         )),
+        T.StructField("sp_ids", T.ArrayType(T.LongType())),
     ]
 )
 
@@ -132,6 +139,43 @@ def _buffered_hull(points: np.ndarray, buffer_deg: float, k: int = 16) -> np.nda
     return _convex_hull(cloud)
 
 
+def _cluster_geometry(pdf: pd.DataFrame, labels: np.ndarray, epsilon: float) -> pd.DataFrame:
+    """One ``_CLUSTER_SCHEMA`` row per cluster of one user's staypoints
+    ``pdf`` (``id``, ``user_id``, ``lon``, ``lat``) under ``labels``
+    (noise, label < 0, is skipped): the wrap-safe centroid of the
+    unique member coordinates, their convex hull buffered by
+    ``epsilon`` meters, and the member staypoint ids."""
+    ids, lon, lat = pdf["id"].to_numpy(), pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+    order = np.argsort(labels, kind="stable")
+    keys, starts = np.unique(labels[order], return_index=True)
+    out: dict[str, list] = {f: [] for f in _CLUSTER_SCHEMA.fieldNames()}
+    for label, members in zip(keys, np.split(order, starts[1:])):
+        if label < 0:
+            continue
+        coords = np.unique(np.column_stack((lon[members], lat[members])), axis=0)
+        xr = np.deg2rad(coords[:, 0])
+        clat = float(coords[:, 1].mean())
+        hull = _buffered_hull(coords, epsilon / (111.32 * 1000 * math.cos(math.radians(clat))))
+        out["user_id"].append(pdf["user_id"].iloc[0])
+        out["label"].append(int(label))
+        out["center_lon"].append(float(np.rad2deg(np.arctan2(np.sin(xr).mean(), np.cos(xr).mean()))))
+        out["center_lat"].append(clat)
+        out["extent"].append([{"lon": float(x), "lat": float(y)} for x, y in hull])
+        out["sp_ids"].append(ids[members].tolist())
+    # object columns: an empty list would otherwise infer float64,
+    # which Arrow cannot convert to the schema's list types
+    return pd.DataFrame({f: pd.Series(v, dtype="object") for f, v in out.items()})
+
+
+def _locations_kernel(pdf: pd.DataFrame, eps_rad: float, num_samples: int, epsilon: float) -> pd.DataFrame:
+    """One user's staypoints -> that user's locations, local labels
+    0..k-1. The reference sorts by (user_id, started_at) before
+    clustering (:92), so labels follow first appearance in time."""
+    pdf = pdf.sort_values(["started_at", "id"], kind="stable")
+    labels = dbscan_haversine(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), eps_rad, num_samples)
+    return _cluster_geometry(pdf, labels, epsilon)
+
+
 def generate_locations(
     sp: DataFrame,
     method: str = "dbscan",
@@ -174,98 +218,56 @@ def generate_locations(
         work = sp.filter(F.col(flag))
 
     eps_rad = epsilon / 6371000.0
-
-    # the reference sorts by (user_id, started_at) before clustering
-    # (:92) — cluster numbering follows first-appearance in time order.
-    pts_ordered = work.select(
-        "id", "user_id", F.col("geom.lon").alias("lon"), F.col("geom.lat").alias("lat"),
-        F.col("started_at").alias("started_at__"),
-    )
-
-    def _label_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["started_at__", "id"], kind="stable")
-        labels = dbscan_haversine(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), eps_rad, num_samples)
-        return pd.DataFrame({"id": pdf["id"], "user_id": pdf["user_id"], "location_id": labels})
-
-    from trackintel_spark.plans.partitioning import kernel_partitions
+    pts_cols = ["id", "user_id", F.col("geom.lon").alias("lon"), F.col("geom.lat").alias("lat"), "started_at"]
 
     if agg_level == "user":
-        labeled = persist_owned(
-            pts_ordered.repartition(kernel_partitions(pts_ordered), "user_id")
-            .groupBy("user_id")
-            .applyInPandas(_label_sorted, schema=_LABEL_SCHEMA)
-        )
-        # per-user label offsetting (:119-137): base = running sum of
-        # (max label + 1) over users in user_id order. The offset table
-        # grows with user cardinality, so it is computed with the
-        # range-partitioned prefix sum and joined without a broadcast
-        # hint (AQE still broadcasts it whenever it is actually small).
-        from trackintel_spark.plans.ids import exclusive_prefix_sum
+        from trackintel_spark.plans.partitioning import kernel_partitions
 
-        maxes = labeled.filter(F.col("location_id") >= 0).groupBy("user_id").agg(
-            (F.max("location_id") + 1).alias("__n")
+        # ONE user_id exchange feeds the kernel and the link-back join's
+        # staypoint side, as in generate_staypoints
+        work = work.repartition(kernel_partitions(work), "user_id")
+        raw = work.select(*pts_cols).groupBy("user_id").applyInPandas(
+            lambda pdf: _locations_kernel(pdf, eps_rad, num_samples, epsilon), schema=_CLUSTER_SCHEMA
         )
-        offsets = exclusive_prefix_sum(maxes, "user_id", "__n").select("user_id", "__off")
-        labeled = labeled.join(offsets, on="user_id", how="left").withColumn(
-            "location_id",
-            F.when(F.col("location_id") >= 0, F.col("location_id") + F.coalesce("__off", F.lit(0))).otherwise(
-                F.lit(None).cast("long")
-            ),
-        ).drop("__off")
-    elif distributed:
-        # dataset level at scale: grid-contracted distributed DBSCAN
-        # (operators/dbscan_distributed.py) — same cluster partitions,
-        # deterministic min-member numbering.
-        from trackintel_spark.operators.dbscan_distributed import dbscan_distributed
-
-        lbl = dbscan_distributed(
-            pts_ordered.select("id", "lon", "lat"),
-            epsilon_m=epsilon,
-            min_samples=num_samples,
+        # cached for the id pass (see dense_id_by_user): DBSCAN runs once
+        clusters = dense_id_by_user(persist_owned(raw), order_by=["label"])
+        links = clusters.selectExpr("user_id", "id AS location_id", "explode(sp_ids) AS id")
+        sp_out = work.join(links, on=["user_id", "id"], how="left").select(
+            "id", *[c for c in work.columns if c != "id"], "location_id"
         )
-        labeled = pts_ordered.select("id", "user_id").join(lbl, on="id", how="left")
     else:
-        # dataset level: single-group kernel (exact parity; the reference
-        # is O(n^2) centralized here too). Scale paths: distributed=True
-        # above, or generate_locations_grid.
-        labeled = (
-            pts_ordered.withColumn("__g", F.lit(1))
-            .groupBy("__g")
-            .applyInPandas(lambda pdf: _label_sorted(pdf), schema=_LABEL_SCHEMA)
-        )
-        labeled = labeled.withColumn(
-            "location_id", F.when(F.col("location_id") >= 0, F.col("location_id")).otherwise(F.lit(None))
-        )
+        pts = work.select(*pts_cols)
+        if distributed:
+            # dataset level at scale: grid-contracted distributed DBSCAN
+            # (operators/dbscan_distributed.py) — same cluster partitions,
+            # deterministic min-member numbering.
+            from trackintel_spark.operators.dbscan_distributed import dbscan_distributed
 
-    sp_out = work.join(labeled.select("id", "location_id"), on="id", how="left")
+            lbl = dbscan_distributed(pts.select("id", "lon", "lat"), epsilon_m=epsilon, min_samples=num_samples)
+            labeled = pts.select("id", "user_id").join(lbl, on="id", how="left")
+        else:
+            # dataset level: single-group kernel (exact parity; the
+            # reference is O(n^2) centralized here too). Scale paths:
+            # distributed=True above, or generate_locations_grid.
+            def _label_sorted(pdf: pd.DataFrame) -> pd.DataFrame:
+                pdf = pdf.sort_values(["started_at", "id"], kind="stable")
+                labels = dbscan_haversine(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), eps_rad, num_samples)
+                return pd.DataFrame({"id": pdf["id"], "user_id": pdf["user_id"], "location_id": labels})
+
+            labeled = pts.withColumn("__g", F.lit(1)).groupBy("__g").applyInPandas(_label_sorted, schema=_LABEL_SCHEMA)
+        # noise (label -1, or NULL from dbscan_distributed) joins as NULL
+        sp_out = work.join(labeled.filter("location_id >= 0").select("id", "location_id"), on="id", how="left")
+        # one location row per (user, cluster) its members fall in (:162-168)
+        members = sp_out.filter(F.col("location_id").isNotNull()).select(
+            "id", "user_id", "location_id", F.col("geom.lon").alias("lon"), F.col("geom.lat").alias("lat")
+        )
+        clusters = members.groupBy("user_id").applyInPandas(
+            lambda pdf: _cluster_geometry(pdf, pdf["location_id"].to_numpy(), epsilon), schema=_CLUSTER_SCHEMA
+        ).withColumnRenamed("label", "id")
+
     if non_activities is not None:
         sp_out = sp_out.unionByName(non_activities.withColumn("location_id", F.lit(None).cast("long")))
-
-    # locations: centroid + buffered hull per (user, location)
-    members = sp_out.filter(F.col("location_id").isNotNull()).select(
-        "user_id", F.col("location_id").alias("id"), F.col("geom.lon").alias("lon"), F.col("geom.lat").alias("lat")
-    )
-
-    def _loc(pdf: pd.DataFrame) -> pd.DataFrame:
-        coords = np.unique(pdf[["lon", "lat"]].to_numpy(), axis=0)
-        xr = np.deg2rad(coords[:, 0])
-        clon = float(np.rad2deg(np.arctan2(np.sin(xr).mean(), np.cos(xr).mean())))
-        clat = float(coords[:, 1].mean())
-        buffer_deg = epsilon / (111.32 * 1000 * math.cos(math.radians(clat)))
-        hull = _buffered_hull(coords, buffer_deg)
-        extent = [{"lon": float(p[0]), "lat": float(p[1])} for p in hull]
-        return pd.DataFrame(
-            {
-                "user_id": [pdf["user_id"].iloc[0]],
-                "id": [pdf["id"].iloc[0]],
-                "center_lon": [clon],
-                "center_lat": [clat],
-                "extent": [extent],
-            }
-        )
-
-    locs = members.groupBy("user_id", "id").applyInPandas(_loc, schema=_LOC_SCHEMA)
-    locs = locs.select(
+    locs = clusters.select(
         "id",
         "user_id",
         F.struct(F.col("center_lon").alias("lon"), F.col("center_lat").alias("lat")).alias("center"),

@@ -3,23 +3,28 @@
 Every trackintel generate-operator assigns fresh int64 ids 0..n-1 in
 (user_id, time) order (e.g. preprocessing/positionfixes.py:162-164).
 A naive ``row_number() OVER (ORDER BY ...)`` funnels the whole table
-through ONE task — unacceptable at 100 TB. Instead both helpers use
-the ``zipWithIndex`` scheme: range-partition on the sort key, number
-rows within partitions, and add per-PARTITION base offsets
-(<= defaultParallelism longs) collected to the driver and folded back
-as a literal map lookup on ``spark_partition_id()``.
+through ONE task — unacceptable at 100 TB. Both helpers here
+range-partition on the sort key, number rows within partitions, and
+add per-PARTITION base offsets (<= defaultParallelism longs):
 
-The driver collect is bounded by cluster parallelism, never data, and
-replaces joins/broadcasts of cardinality-growing offset tables — the
-100 TB driver-OOM trap — AND keeps the input lineage in the output
-plan exactly once: offset-table joins re-embed the input subtree, and
-chained generate-operators then grow the logical plan exponentially (a
-five-operator chain was literally un-plannable before this). Like
-``zipWithIndex``, the helpers trigger one counting job at call time
-and cache the shuffled input for the main query to reuse.
+* :func:`dense_id_by_user`, the one eager helper, is the
+  ``zipWithIndex`` scheme: the bases are collected to the driver and
+  folded back as a literal map lookup on ``spark_partition_id()``.
+  The collect is bounded by cluster parallelism, never data, and
+  replaces joins/broadcasts of cardinality-growing offset tables — the
+  100 TB driver-OOM trap — AND keeps the input lineage in the output
+  plan exactly once: offset-table joins re-embed the input subtree,
+  and chained generate-operators then grow the logical plan
+  exponentially (a five-operator chain was literally un-plannable
+  before this). Like ``zipWithIndex``, it triggers one counting job at
+  call time and caches the shuffled input for the main query to reuse;
+* :func:`exclusive_prefix_sum` is lazy: its bases join back as a
+  broadcast of the p-row totals table, so it runs no job at call time
+  but embeds its input twice — for pipeline tails
+  (:func:`dense_rank_ordered`, ``scale/sampling.py``).
 
-The cache is LOAD-BEARING: the collected bases describe the cached
-partitioning, so the eager helpers must not unpersist under their own
+The eager helper's cache is LOAD-BEARING: the collected bases describe
+the cached partitioning, so it must not be unpersisted under its own
 output. Every persist the library keeps past its call (these, and the
 operators' own) is registered here; long sessions chaining many
 operators accumulate them — call :func:`release_id_caches` after the
@@ -52,7 +57,7 @@ def persist_owned(df: DataFrame, *args) -> DataFrame:
 
 def release_id_caches() -> int:
     """Unpersist the registered persists: every cache made through
-    :func:`persist_owned` (the eager id helpers' shuffled inputs and
+    :func:`persist_owned` (the eager id helper's shuffled inputs and
     the operators' own caches).
 
     The lineage checkpoints of iterative operators (dbscan rounds,
@@ -78,44 +83,17 @@ def release_id_caches() -> int:
     return n
 
 
-def _partition_bases(totals: DataFrame) -> Column:
-    """Collect ``totals`` (one ``(__p, __n)`` row per non-empty
-    partition) and return the exclusive prefix sum of ``__n`` in
-    partition order as a literal map lookup on ``__p``."""
-    counts = {r["__p"]: r["__n"] for r in totals.collect()}
-    bases: list[str] = []
-    acc = 0
-    for pid in sorted(counts):
-        bases.extend([str(pid), str(acc)])
-        acc += int(counts[pid] or 0)
-    # ONE SQL string instead of 2p F.lit py4j round trips
-    return F.expr(f"coalesce(element_at(map({', '.join(bases)}), __p), 0)") if bases else F.lit(0)
-
-
-def exclusive_prefix_sum(
-    df: DataFrame, order_col: str, val_col: str, out_col: str = "__off", lazy: bool = False
-) -> DataFrame:
+def exclusive_prefix_sum(df: DataFrame, order_col: str, val_col: str, out_col: str = "__off") -> DataFrame:
     """Add ``out_col`` = exclusive running sum of ``val_col`` in
-    ``order_col`` order, without a single-task global window and
-    without re-embedding ``df``'s lineage.
+    ``order_col`` order, without a single-task global window.
 
     Range-repartition by ``order_col`` (disjoint, ordered ranges),
     prefix-sum within each partition with a window, then add the
     per-partition base offsets — one long per PARTITION, bounded by
-    ``defaultParallelism``, never data. Two delivery modes for the
-    bases:
-
-    * eager (default): collected to the driver and injected as a
-      literal map lookup on ``spark_partition_id()`` — the
-      ``zipWithIndex`` scheme. Triggers one aggregation job at call
-      time (the repartitioned input is cached for reuse), and the
-      output plan embeds ``df`` exactly once — use this inside
-      chained operators, where a second embedding multiplies subtree
-      copies multiplicatively down the chain.
-    * ``lazy=True``: the bases join back via a broadcast of the
-      p-row totals table (a justified broadcast: bounded by cluster
-      parallelism). No job at call time, but the plan embeds the
-      repartitioned input twice — use at pipeline tails.
+    ``defaultParallelism``, never data — joined back as a broadcast of
+    the p-row totals table (a justified broadcast: bounded by cluster
+    parallelism). No job at call time, but the plan embeds the
+    repartitioned input twice — use at pipeline tails.
 
     The sampled range boundaries only decide which partition a row
     lands in, never its global position — results are deterministic
@@ -131,20 +109,16 @@ def exclusive_prefix_sum(
         Window.partitionBy("__p").orderBy(order_col).rowsBetween(Window.unboundedPreceding, -1)
     )
     run = F.coalesce(F.sum(val_col).over(w_in), F.lit(0))
-    if lazy:
-        totals_df = d.groupBy("__p").agg(F.sum(val_col).alias("__tot"))
-        w_base = Window.orderBy("__p").rowsBetween(Window.unboundedPreceding, -1)
-        bases_df = totals_df.select(
-            "__p", F.coalesce(F.sum("__tot").over(w_base), F.lit(0)).alias("__base")
-        )
-        return (
-            d.join(F.broadcast(bases_df), on="__p")
-            .withColumn(out_col, (F.col("__base") + run).cast("long"))
-            .drop("__p", "__base")
-        )
-    d = persist_owned(d)
-    base = _partition_bases(d.groupBy("__p").agg(F.sum(val_col).alias("__n")))
-    return d.withColumn(out_col, (base + run).cast("long")).drop("__p")
+    totals_df = d.groupBy("__p").agg(F.sum(val_col).alias("__tot"))
+    w_base = Window.orderBy("__p").rowsBetween(Window.unboundedPreceding, -1)
+    bases_df = totals_df.select(
+        "__p", F.coalesce(F.sum("__tot").over(w_base), F.lit(0)).alias("__base")
+    )
+    return (
+        d.join(F.broadcast(bases_df), on="__p")
+        .withColumn(out_col, (F.col("__base") + run).cast("long"))
+        .drop("__p", "__base")
+    )
 
 
 def dense_id_by_user(
@@ -182,7 +156,14 @@ def dense_id_by_user(
         .withColumn("__p", F.spark_partition_id())
         .withColumn("__pos", F.monotonically_increasing_id() - F.shiftleft(F.col("__p").cast("long"), 33))
     )
-    base = _partition_bases(d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")))
+    counts = {r["__p"]: r["__n"] for r in d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")).collect()}
+    bases: list[str] = []
+    acc = 0
+    for pid in sorted(counts):
+        bases.extend([str(pid), str(acc)])
+        acc += counts[pid]
+    # ONE SQL string instead of 2p F.lit py4j round trips
+    base = F.expr(f"coalesce(element_at(map({', '.join(bases)}), __p), 0)") if bases else F.lit(0)
     return d.withColumn(id_col, (base + F.col("__pos")).cast("long")).drop("__p", "__pos")
 
 
@@ -193,13 +174,10 @@ def dense_rank_ordered(df: DataFrame, order_col: str, out_col: str = "dense_id")
     The exclusive prefix count of ones over the distinct values IS the
     dense rank. Use when the distinct-value count can grow with the
     data (e.g. cluster labels); for per-user ids use
-    :func:`dense_id_by_user`. Runs in the lazy mode (broadcast of the
-    bounded p-row bases): densification sits at pipeline tails, where
-    the double lineage embedding doesn't compound and skipping the
-    eager counting job saves an action.
+    :func:`dense_id_by_user`. The bases join back as a broadcast of
+    the bounded p-row table: densification sits at pipeline tails,
+    where the double lineage embedding doesn't compound and skipping a
+    counting job saves an action.
     """
     d = df.select(order_col).distinct().withColumn("__one", F.lit(1))
-    return (
-        exclusive_prefix_sum(d, order_col, "__one", out_col=out_col, lazy=True)
-        .select(order_col, out_col)
-    )
+    return exclusive_prefix_sum(d, order_col, "__one", out_col=out_col).select(order_col, out_col)

@@ -91,7 +91,7 @@ def shuffle_deterministic(
     # so equal keys (duplicate rows) still order deterministically
     order = F.concat(F.lpad(F.conv(h.cast("string"), 10, 16), 16, "0"), F.lit("|"), ks)
     d = df.withColumn("__shuffle_k", order).withColumn("__one", F.lit(1))
-    out = exclusive_prefix_sum(d, "__shuffle_k", "__one", out_col=out_col, lazy=True)
+    out = exclusive_prefix_sum(d, "__shuffle_k", "__one", out_col=out_col)
     return out.drop("__shuffle_k", "__one")
 
 
