@@ -309,24 +309,29 @@ def test_asof_keyless_skewed_but_nonconstant_keeps_single_bucket(spark):
 def test_asof_shuffle_partitions_conf_non_numeric(spark):
     """A non-numeric spark.sql.shuffle.partitions (some deployments set
     'auto' via external resource managers) must not crash the key-less
-    path — the bucket count falls back to 200. Spark 4 refuses to SET a
-    non-int value on a live session, so probe the helper with a stub."""
+    path — the bucket count falls back to 200. AQE's initial partition
+    number, when set, is the batch count and comes first. Spark 4
+    refuses to SET a non-int value on a live session, so probe the
+    helper with a stub."""
     from trackintel_spark.operators.asof import _shuffle_partitions
 
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
     class _Conf:
-        def __init__(self, v):
-            self._v = v
+        def __init__(self, shuffle, initial_num):
+            self._v = {"spark.sql.shuffle.partitions": shuffle, initial: initial_num}
 
         def get(self, key, default=None):
-            return self._v
+            return self._v.get(key, default)
 
     class _S:
-        def __init__(self, v):
-            self.conf = _Conf(v)
+        def __init__(self, shuffle, initial_num=None):
+            self.conf = _Conf(shuffle, initial_num)
 
     assert _shuffle_partitions(_S("auto")) == 200
     assert _shuffle_partitions(_S(None)) == 200
     assert _shuffle_partitions(_S("64")) == 64
-    assert _shuffle_partitions(spark) == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    assert _shuffle_partitions(_S("4", "32")) == 32
+    assert _shuffle_partitions(_S("4", "auto")) == 4
+    assert _shuffle_partitions(_S("auto", "32")) == 32
+    assert _shuffle_partitions(spark) == int(spark.conf.get(initial))

@@ -184,6 +184,53 @@ def test_dataset_distributed_matches_exact_partitions(spark):
     assert dist_locs.count() == exact_locs.count()
 
 
+def test_convex_hull_matches_np_cross_turn_test():
+    """The scalar turn test is the formula ``np.cross`` evaluates, so
+    hulls (and with them location extents) are bit-identical to the
+    ``np.cross`` monotone chain, duplicates and collinear runs included."""
+    import numpy as np
+
+    from trackintel_spark.operators.locations import _buffered_hull, _convex_hull
+
+    def np_cross_hull(points):
+        pts = np.unique(points, axis=0)
+        if len(pts) <= 2:
+            return pts
+        pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
+
+        def half(iterable):
+            hull = []
+            for p in iterable:
+                while len(hull) >= 2 and np.cross(hull[-1] - hull[-2], p - hull[-2]) <= 0:
+                    hull.pop()
+                hull.append(p)
+            return hull
+
+        lower = half(pts)
+        upper = half(pts[::-1])
+        return np.array(lower[:-1] + upper[:-1])
+
+    rng = np.random.default_rng(11)
+    clouds = [np.zeros((0, 2)), np.array([[8.5, 47.4]]), np.array([[8.5, 47.4], [8.5, 47.4], [8.6, 47.5]])]
+    for n in (3, 5, 9, 40, 200):
+        pts = np.column_stack((8.5 + rng.normal(0, 1e-3, n), 47.4 + rng.normal(0, 1e-3, n)))
+        clouds.append(pts)
+        clouds.append(np.vstack([pts, pts[: n // 2]]))  # duplicates
+        t = rng.uniform(0, 1, n)
+        line = np.column_stack((8.5 + t * 1e-3, 47.4 + t * 2e-3))
+        clouds.append(line)  # all collinear
+        clouds.append(np.vstack([line, pts, line[:3]]))  # collinear runs on and inside the hull
+        clouds.append(np.round(pts, 4))  # a coarse grid: many collinear triples
+    for pts in clouds:
+        got, want = _convex_hull(pts), np_cross_hull(pts)
+        assert got.shape == want.shape and np.array_equal(got, want)
+        if len(pts):
+            ring = np.column_stack((np.cos(np.linspace(0, 2 * np.pi, 16, endpoint=False)),
+                                    np.sin(np.linspace(0, 2 * np.pi, 16, endpoint=False)))) * 1e-3
+            cloud = (pts[:, None, :] + ring[None, :, :]).reshape(-1, 2)
+            assert np.array_equal(_buffered_hull(pts, 1e-3), np_cross_hull(cloud))
+
+
 # -- tours --------------------------------------------------------------------
 
 

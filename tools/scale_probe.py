@@ -381,48 +381,25 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
         .parquet(src)
     )
     out = op(stream)
-    # State-partition right-sizing (r13, guide §2.2 applied to state
-    # stores): the stateful stage's partition count is fixed at query
-    # start from spark.sql.shuffle.partitions. At the session default
-    # (CPU-count-sized) each state partition here holds ~KBs of state
-    # and a few thousand rows per trigger, but pays a FIXED per-commit
-    # cost (delta file create + fsync) every micro-batch — measured on
-    # this host, 32 concurrent per-partition commits convoy on the
-    # ext4 journal (state commit sum 500 s/run at 32 partitions vs
-    # 3.5 s at 8), while TOO FEW partitions serialize the per-group
-    # applyInPandasWithState protocol cost (~13 ms/group/trigger,
-    # engine-fixed — measured identical with a no-op kernel). A 3x3
-    # interleaved calm A/B put the optimum at ~6.25k rows/task for all
-    # three probes (sp 9.5 / trips 11.7 / tours 12.3 s at 16 parts vs
-    # 12.1-12.3 at 8 and 15.6+ at 32). Derived from per-trigger row
-    # volume, clamped to the session default so a cluster-sized config
-    # still rules. Override: SPARK_GRAFT_STREAM_SHUFFLE.
-    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    rows_per_trigger = max(1, n // n_batches)
-    # session default is the hard ceiling (a smaller cluster/test config
-    # always rules); the floor of 4 only applies below it
-    derived = min(sess_parts, max(4, -(-rows_per_trigger // 6_250)))
-    stream_parts = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "0") or 0) or derived
-    spark.conf.set("spark.sql.shuffle.partitions", str(stream_parts))
-    try:
-        t0 = time.time()
-        q = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        wall = time.time() - t0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+    # the stateful stage runs one state partition per core: get_spark
+    # sets spark.sql.shuffle.partitions to the session's core count
+    t0 = time.time()
+    q = (
+        out.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    wall = time.time() - t0
     n_out = spark.sql(f"SELECT count(*) FROM {qname}").first()[0]
-    state_rows = state_mb = batches = 0
+    state_rows = state_mb = state_parts = batches = 0
     for p in q.recentProgress:
         batches += 1
         for so in p.get("stateOperators", []):
+            state_parts = max(state_parts, so.get("numShufflePartitions", 0))
             state_rows = max(state_rows, so.get("numRowsTotal", 0))
             state_mb = max(state_mb, so.get("memoryUsedBytes", 0) / 2**20)
     spark.catalog.dropTempView(qname)
@@ -433,6 +410,7 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
         "rows_per_s": int(n / wall),
         out_key: n_out,
         "micro_batches": batches,
+        "state_partitions": state_parts,
         "state_rows_max": state_rows,
         "state_mb_max": round(state_mb, 1),
     }

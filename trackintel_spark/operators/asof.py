@@ -62,12 +62,18 @@ _SEC_SCALE = 2.0**32
 
 
 def _shuffle_partitions(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating the 'auto'
-    / non-numeric values some deployments set (falls back to 200)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except (TypeError, ValueError):
-        return 200
+    """The batch shuffle partition count as an int: AQE's
+    ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` when
+    set (``get_spark`` sizes ``spark.sql.shuffle.partitions`` for
+    streaming state), else ``spark.sql.shuffle.partitions``, tolerating
+    the 'auto' / non-numeric values some deployments set (falls back to
+    200)."""
+    for key in ("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "spark.sql.shuffle.partitions"):
+        try:
+            return int(spark.conf.get(key, None))
+        except (TypeError, ValueError):
+            pass
+    return 200
 
 
 def _rank_cuts(u: DataFrame, rank0: Column, n_buckets: int) -> list[float]:

@@ -110,16 +110,22 @@ def dbscan_haversine(lon: np.ndarray, lat: np.ndarray, eps_rad: float, min_sampl
 
 
 def _convex_hull(points: np.ndarray) -> np.ndarray:
-    """Andrew's monotone chain; returns hull vertices CCW (closed not)."""
+    """Andrew's monotone chain; returns hull vertices CCW (closed not).
+    The turn test is the 2-D cross product on Python floats: the
+    formula ``np.cross`` evaluates, without a numpy call per point."""
     pts = np.unique(points, axis=0)
     if len(pts) <= 2:
         return pts
-    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
+    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))].tolist()
 
     def half(iterable):
-        hull: list[np.ndarray] = []
+        hull: list[list[float]] = []
         for p in iterable:
-            while len(hull) >= 2 and np.cross(hull[-1] - hull[-2], p - hull[-2]) <= 0:
+            x, y = p
+            while len(hull) >= 2:
+                (x0, y0), (x1, y1) = hull[-2], hull[-1]
+                if (x1 - x0) * (y - y0) - (y1 - y0) * (x - x0) > 0:
+                    break
                 hull.pop()
             hull.append(p)
         return hull

@@ -6,8 +6,14 @@ Defaults chosen for a 100 TB-class deployment, testable on local[*]:
 * Arrow on (all Python kernels are Arrow-batched pandas UDFs);
 * UTC session timezone (the reference requires tz-aware timestamps
   everywhere, model/positionfixes.py:64-66 — we normalize to UTC);
-* shuffle partitions sized via env so tests (small) and clusters
-  (large) pick sensible values without code changes.
+* two shuffle partition counts:
+  - batch exchanges run under AQE and start from
+    ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``, sized
+    by argument or env so tests (small) and clusters (large) pick
+    sensible values without code changes;
+  - streaming runs with AQE off and reads ``spark.sql.shuffle.partitions``
+    raw, so that conf, the session's core count, sizes the tasks and the
+    state partitions of every stateful streaming stage.
 """
 
 from __future__ import annotations
@@ -27,6 +33,11 @@ def get_spark(
 
     On a real cluster, pass ``master=None`` and let spark-submit decide.
     Locally, ``SPARK_GRAFT_CPUS`` (default: all cores) sizes local[N].
+    ``shuffle_partitions`` (else ``SPARK_GRAFT_SHUFFLE``, else 32) is the
+    batch exchanges' initial partition count; stateful streaming stages
+    get one state partition per core. A stream restarted from an
+    existing checkpoint keeps the count its offset log recorded. A key
+    named in ``extra_conf`` wins over both.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
@@ -38,7 +49,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -57,6 +67,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # set once the context runs: only then is its core count known
+    for k, v in (
+        ("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism),
+        ("spark.sql.adaptive.coalescePartitions.initialPartitionNum", shuffle_partitions),
+    ):
+        if k not in extra_conf:
+            spark.conf.set(k, str(v))
+    return spark
