@@ -10,12 +10,14 @@ Generates inputs with ``spark.range`` (pure compute, no IO) and times
 * ``generate_trips`` alone on ONE user with many staypoint/tripleg
   units (the mega-user case of its per-user kernel);
 * ``generate_triplegs`` alone on ONE user with many positionfixes (the
-  mega-user case of its per-user kernel).
+  mega-user case of its per-user kernel);
+* ``trajectory_similarity_join`` on a dense corpus of short (2-7
+  vertices) and long (50-55 vertices) trajectories.
 
 Usage::
 
     python tools/scale_probe.py [chain_rows ...] [--dbscan rows ...] [--trips-user units ...]
-        [--triplegs-user fixes ...]
+        [--triplegs-user fixes ...] [--trajectory-join trajectories ...]
 
 Only the named cases run; with no arguments, the chain at 1M and 10M
 positionfixes and DBSCAN at 1M and 4M points. Results go to SCALE.md's
@@ -419,7 +421,8 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
 def main():
     from trackintel_spark import get_spark
 
-    groups, key = {"chain": [], "--dbscan": [], "--trips-user": [], "--triplegs-user": []}, "chain"
+    groups = {"chain": [], "--dbscan": [], "--trips-user": [], "--triplegs-user": [], "--trajectory-join": []}
+    key = "chain"
     for a in sys.argv[1:]:
         if a in groups:
             key = a
@@ -427,7 +430,8 @@ def main():
             groups[key].append(int(a))
     if len(sys.argv) == 1:
         groups.update({"chain": [1_000_000, 10_000_000], "--dbscan": [1_000_000, 4_000_000]})
-    chain_ns, db_ns, trips_ns, tpl_ns = (groups[k] for k in ("chain", "--dbscan", "--trips-user", "--triplegs-user"))
+    chain_ns, db_ns, trips_ns, tpl_ns, tj_ns = (
+        groups[k] for k in ("chain", "--dbscan", "--trips-user", "--triplegs-user", "--trajectory-join"))
 
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark()
@@ -440,6 +444,9 @@ def main():
         print("trips_user", run_trips_user(spark, n), flush=True)
     for n in tpl_ns:
         print("triplegs_user", run_triplegs_user(spark, n), flush=True)
+    for n in tj_ns:
+        for leg in (2, 50):
+            print(f"trajectory_join leg={leg}", run_trajectory_join(spark, n, leg_len=leg), flush=True)
 
 
 def run_trajectory_join(spark, n: int, leg_len: int = 2, n_sites: int = 20000) -> dict:

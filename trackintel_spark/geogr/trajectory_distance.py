@@ -3,10 +3,13 @@
 Reference: calculate_distance_matrix with LineString inputs delegates
 to the `similaritymeasures` package per pair in an upper-triangle loop
 (geogr/distances.py:156-185) — O(n²) pairs, each O(len·len), single
-threaded. Here the pair enumeration is a Spark self-join (long-form
+threaded. Here the full matrix is a Spark self-join (long-form
 (i, j, dist), mirroring the reference's upper-triangle optimization)
-and the per-pair dynamic program runs in an Arrow-batched
-``applyInPandas`` kernel — distributed over pair partitions.
+whose per-pair dynamic programs run in a grouped ``applyInPandas``
+kernel per ``i``. The pruned operators — top-k search and the
+thresholded similarity join — filter with exact lower bounds first and
+run the DP over the survivors in ``mapInPandas`` passes over Arrow
+batches.
 
 Kernels are numpy ports of the standard algorithms (public knowledge):
 * DTW: cumulative-cost dynamic program over the pairwise great-circle
@@ -16,24 +19,32 @@ Kernels are numpy ports of the standard algorithms (public knowledge):
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from trackintel_spark.plans.ids import persist_owned
+_R_M = 6371000.0
 
 
-def _pair_cost(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Great-circle cost matrix between vertex arrays (n,2) and (m,2),
-    asin-form haversine (matches functions/spatial.py)."""
-    lon1, lat1 = np.deg2rad(a[:, 0])[:, None], np.deg2rad(a[:, 1])[:, None]
-    lon2, lat2 = np.deg2rad(b[:, 0])[None, :], np.deg2rad(b[:, 1])[None, :]
+def _haversine(lon1, lat1, lon2, lat2) -> np.ndarray:
+    """Great-circle meters between degree arrays that broadcast,
+    asin-form haversine (matches functions/spatial.py). Every cost the
+    DP kernels and the join's endpoint bound use comes from here, so a
+    bound and the DP cell it bounds are the same float."""
+    lon1, lat1, lon2, lat2 = np.deg2rad(lon1), np.deg2rad(lat1), np.deg2rad(lon2), np.deg2rad(lat2)
     s = np.sqrt(
         np.sin((lat1 - lat2) / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin((lon1 - lon2) / 2.0) ** 2
     )
-    return 2.0 * 6371000.0 * np.arcsin(np.minimum(1.0, s))
+    return 2.0 * _R_M * np.arcsin(np.minimum(1.0, s))
+
+
+def _pair_cost(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Great-circle cost matrix between vertex arrays (n,2) and (m,2)."""
+    return _haversine(a[:, 0][:, None], a[:, 1][:, None], b[:, 0][None, :], b[:, 1][None, :])
 
 
 def dtw_distance(a: np.ndarray, b: np.ndarray) -> float:
@@ -99,12 +110,8 @@ def _batch_cost(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Great-circle cost tensor between stacked vertex arrays (B,n,2)
     and (B,m,2) — the batched form of :func:`_pair_cost` (identical
     arithmetic per cell, so results are bit-equal)."""
-    lon1, lat1 = np.deg2rad(a[:, :, 0])[:, :, None], np.deg2rad(a[:, :, 1])[:, :, None]
-    lon2, lat2 = np.deg2rad(b[:, :, 0])[:, None, :], np.deg2rad(b[:, :, 1])[:, None, :]
-    s = np.sqrt(
-        np.sin((lat1 - lat2) / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin((lon1 - lon2) / 2.0) ** 2
-    )
-    return 2.0 * 6371000.0 * np.arcsin(np.minimum(1.0, s))
+    return _haversine(a[:, :, 0][:, :, None], a[:, :, 1][:, :, None],
+                      b[:, :, 0][:, None, :], b[:, :, 1][:, None, :])
 
 
 def dtw_distance_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -311,6 +318,12 @@ def trajectory_topk(
         F.lit(q_elon), F.lit(q_elat), F.element_at("__lons", -1), F.element_at("__lats", -1)
     )
     lb = F.greatest(d_ss, d_ee) if metric == "frechet" else (d_ss + d_ee)
+    if metric == "dtw" and (q_slon, q_slat) == (q_elon, q_elat):
+        # two single-vertex trajectories share one DTW cell: d_ss + d_ee
+        # counts it twice (see _endpoint_bound)
+        closed = (F.element_at("__lons", 1) == F.element_at("__lons", -1)) & (
+            F.element_at("__lats", 1) == F.element_at("__lats", -1))
+        lb = F.when(closed, d_ss).otherwise(lb)
     flat = flat.withColumn("__lb", lb).persist()
 
     batch_fn = dtw_distance_batch if metric == "dtw" else frechet_distance_batch
@@ -381,7 +394,165 @@ def trajectory_topk(
     return tpls.sparkSession.createDataFrame(rows, f"{id_col} long, dist_m double, rank int")
 
 
+_BATCH_FN = {"dtw": dtw_distance_batch, "frechet": frechet_distance_batch}
 
+# growth of the box-bound margins: relative, plus an absolute term in
+# degrees for taus near 0. Float rounding in the degree/radian
+# conversions and the haversine stays orders of magnitude below both,
+# so no pair at the threshold is dropped.
+_BOX_SLACK_REL = 1e-9
+_BOX_SLACK_DEG = 1e-9
+
+# candidate index pairs generated at once by the cell kernel: bounds a
+# dense cell's pair-index temporaries to a few MB instead of O(k²)
+_PAIR_CHUNK = 1 << 18
+
+
+def _endpoint_bound(s_a, e_a, s_b, e_b, metric: str) -> np.ndarray:
+    """Exact lower bound of the DP from the matched endpoints: every
+    coupling and warping path pairs start with start and end with end,
+    so ``dF >= max(d_ss, d_ee)`` and ``DTW >= d_ss + d_ee``. The DTW sum
+    counts one cell twice when both sides are a single vertex, so where
+    both trajectories start where they end it falls back to ``d_ss``.
+    ``s_*``/``e_*`` are (lon, lat) array pairs; costs come from
+    :func:`_haversine`, so in floats the bound never exceeds the DP."""
+    d_ss = _haversine(s_a[0], s_a[1], s_b[0], s_b[1])
+    d_ee = _haversine(e_a[0], e_a[1], e_b[0], e_b[1])
+    if metric == "frechet":
+        return np.maximum(d_ss, d_ee)
+    closed = (s_a[0] == e_a[0]) & (s_a[1] == e_a[1]) & (s_b[0] == e_b[0]) & (s_b[1] == e_b[1])
+    return np.where(closed, d_ss, d_ss + d_ee)
+
+
+def _boxes(lons, lats) -> np.ndarray:
+    """(4, k) bounding boxes ``lon_min, lon_max, lat_min, lat_max`` of
+    k non-empty vertex arrays."""
+    return np.array(
+        [(lo.min(), lo.max(), la.min(), la.max()) for lo, la in zip(lons, lats)], dtype=float
+    ).reshape(-1, 4).T
+
+
+def _box_bound(box_a: np.ndarray, box_b: np.ndarray, tau_m: float) -> np.ndarray:
+    """Exact box filter for both metrics: ``False`` only where
+    ``distance(a, b) > tau_m`` is certain.
+
+    If dF <= τ or DTW <= τ, every vertex of A lies within τ of some
+    vertex of B and the reverse (a coupling, and a warping path of
+    nonnegative costs, cover every vertex of both). So each box lies
+    inside the other grown by τ, i.e. both ``|Δ lat_min|`` and
+    ``|Δ lat_max|`` are within the latitude margin, and likewise in
+    longitude:
+
+    * latitude: a great-circle distance is at least the meridian arc,
+      so the margin is τ/R radians;
+    * longitude: hav(d/R) >= cos φ1 cos φ2 hav(Δλ), so the margin is
+      ``2·asin(sin(τ/2R) / cos φmax)`` with φmax the largest |lat| of
+      either box. The half is skipped where that ratio reaches 1 (near
+      a pole) and where either box comes within the margin of ±180°,
+      where a raw degree difference is not the wrapped one.
+
+    Both margins grow by a small slack so float rounding cannot drop a
+    pair at the threshold. Pairs with a latitude beyond ±90° skip the
+    filter (the haversine is no metric there)."""
+    a_lon0, a_lon1, a_lat0, a_lat1 = box_a
+    b_lon0, b_lon1, b_lat0, b_lat1 = box_b
+    phi = np.maximum(np.maximum(np.abs(a_lat0), np.abs(a_lat1)), np.maximum(np.abs(b_lat0), np.abs(b_lat1)))
+    m_lat = np.degrees(tau_m / _R_M) * (1.0 + _BOX_SLACK_REL) + _BOX_SLACK_DEG
+    lat_ok = (np.abs(a_lat0 - b_lat0) <= m_lat) & (np.abs(a_lat1 - b_lat1) <= m_lat)
+    cos_phi = np.cos(np.radians(phi))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        ratio = math.sin(min(tau_m / (2.0 * _R_M), math.pi / 2.0)) / cos_phi
+    m_lon = np.degrees(2.0 * np.arcsin(np.clip(ratio, 0.0, 1.0))) * (1.0 + _BOX_SLACK_REL) + _BOX_SLACK_DEG
+    seam = (np.maximum(a_lon1, b_lon1) >= 180.0 - m_lon) | (np.minimum(a_lon0, b_lon0) <= m_lon - 180.0)
+    lon_applies = (cos_phi > 0.0) & (ratio < 1.0) & ~seam
+    lon_ok = (np.abs(a_lon0 - b_lon0) <= m_lon) & (np.abs(a_lon1 - b_lon1) <= m_lon)
+    return (lat_ok | (phi > 90.0)) & (lon_ok | ~lon_applies)
+
+
+def _refine(la, pa, lb, pb, tau_m: float, batch_fn, box_a=None, box_b=None):
+    """The refine step of the similarity join and the stream matcher:
+    the box bound, then one batched DP over its survivors.
+
+    ``la``/``pa`` and ``lb``/``pb`` are object arrays of the candidate
+    pairs' lon/lat vertex arrays; ``box_a``/``box_b`` their (4, k)
+    boxes, computed from the arrays when omitted. Returns the positions
+    of the pairs within ``tau_m``, their distances, and how many pairs
+    ran the DP."""
+    if box_a is None:
+        box_a, box_b = _boxes(la, pa), _boxes(lb, pb)
+    cand = np.flatnonzero(_box_bound(box_a, box_b, tau_m))
+    d = _pairwise_distance_batched(la[cand], pa[cand], lb[cand], pb[cand], batch_fn)
+    hit = d <= tau_m
+    return cand[hit], d[hit], cand.size
+
+
+def _cell_join_step(pdf: pd.DataFrame, tau_m: float, metric: str, chunk: int = _PAIR_CHUNK):
+    """Join the complete cells of ``pdf``: rows sorted by ``(cy, cx)``,
+    one per (trajectory, probed cell), carrying ``id``, ``lons``,
+    ``lats``, the endpoints ``s_lon s_lat e_lon e_lat``, the box
+    ``lon_min lon_max lat_min lat_max`` and the own cell ``own_cy
+    own_cx``.
+
+    In each cell every row whose own cell it is pairs with every row of
+    the cell, keeping ``id_a < id_b``. The pairs go through the endpoint
+    bound, then :func:`_refine`. Pair generation is vectorized across
+    all cells and runs ``chunk`` index pairs at a time. Returns the
+    ``(id_a, id_b, dist_m)`` frame and the number of DP pairs."""
+    n = len(pdf)
+    cy, cx = pdf["cy"].to_numpy(), pdf["cx"].to_numpy()
+    first = np.ones(n, dtype=bool)
+    first[1:] = (cy[1:] != cy[:-1]) | (cx[1:] != cx[:-1])
+    cell = np.cumsum(first) - 1
+    starts = np.flatnonzero(first)
+    ends = np.append(starts[1:], n)
+    own = np.flatnonzero((pdf["own_cy"].to_numpy() == cy) & (pdf["own_cx"].to_numpy() == cx))
+    # own row k pairs with rows lo[k] .. lo[k] + size - 1, numbered
+    # offs[k] .. offs[k+1] - 1 in the flat pair space
+    lo = starts[cell[own]]
+    offs = np.concatenate(([0], np.cumsum(ends[cell[own]] - lo)))
+
+    ids = pdf["id"].to_numpy()
+    s = pdf["s_lon"].to_numpy(), pdf["s_lat"].to_numpy()
+    e = pdf["e_lon"].to_numpy(), pdf["e_lat"].to_numpy()
+    keep_a, keep_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for p0 in range(0, int(offs[-1]), chunk):
+        p = np.arange(p0, min(p0 + chunk, int(offs[-1])))
+        k = np.searchsorted(offs, p, side="right") - 1
+        ia, ib = own[k], lo[k] + (p - offs[k])
+        m = ids[ia] < ids[ib]
+        ia, ib = ia[m], ib[m]
+        m = _endpoint_bound((s[0][ia], s[1][ia]), (e[0][ia], e[1][ia]),
+                            (s[0][ib], s[1][ib]), (e[0][ib], e[1][ib]), metric) <= tau_m
+        keep_a.append(ia[m])
+        keep_b.append(ib[m])
+    ia, ib = np.concatenate(keep_a), np.concatenate(keep_b)
+
+    box = pdf[["lon_min", "lon_max", "lat_min", "lat_max"]].to_numpy(dtype=float).T
+    lons, lats = pdf["lons"].to_numpy(), pdf["lats"].to_numpy()
+    pos, d, n_dp = _refine(lons[ia], lats[ia], lons[ib], lats[ib], tau_m, _BATCH_FN[metric],
+                           box[:, ia], box[:, ib])
+    out = pd.DataFrame({"id_a": ids[ia[pos]], "id_b": ids[ib[pos]], "dist_m": d})
+    return out, n_dp
+
+
+def _cell_join_batches(batches, tau_m: float, metric: str, chunk: int = _PAIR_CHUNK):
+    """The ``mapInPandas`` body: one partition's Arrow batches, sorted
+    by cell, joined cell by cell. The last cell of a batch may continue
+    in the next one, so its rows wait and join with that batch."""
+    pending: list[pd.DataFrame] = []
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        cy, cx = pdf["cy"].to_numpy(), pdf["cx"].to_numpy()
+        other = np.flatnonzero((cy != cy[-1]) | (cx != cx[-1]))
+        if not other.size:
+            pending.append(pdf)
+            continue
+        cut = int(other[-1]) + 1
+        yield _cell_join_step(pd.concat(pending + [pdf.iloc[:cut]]), tau_m, metric, chunk)[0]
+        pending = [pdf.iloc[cut:]]
+    if pending:
+        yield _cell_join_step(pd.concat(pending), tau_m, metric, chunk)[0]
 
 
 def trajectory_similarity_join(
@@ -394,31 +565,38 @@ def trajectory_similarity_join(
     """EXACT trajectory similarity self-join: all pairs ``(id_a <
     id_b)`` with ``distance <= tau_m`` — the distributed trajectory
     similarity JOIN problem (the ICDE'19 road-network join and SIGMOD'23
-    Ghost attack the same query; here the Spark-shaped three-phase plan,
-    the join sibling of :func:`trajectory_topk`'s search):
+    Ghost attack the same query; here the Spark-shaped partition-local
+    plan, the join sibling of :func:`trajectory_topk`'s search). One
+    projection, one exchange, one ``mapInPandas`` pass:
 
-    1. **candidates** — both DTW and discrete Fréchet couple start
-       with start and end with end, so a qualifying pair needs
-       ``d(start_a, start_b) <= tau``. Start points land on a
-       latitude-banded grid (band height = tau; per-band longitude
-       width scaled by the band's equator-near cosine, the
-       dbscan_distributed discipline), one side keeps its own cell,
-       the other probes every cell its tau-disk touches: an equi-join
-       on the cell key — never a cartesian product. Only (tid,
-       endpoints) rows shuffle here, not vertex arrays.
-    2. **lower-bound filter** — exact endpoint distances kill every
-       pair with ``LB > tau`` (``dF >= max(d_ss, d_ee)``,
-       ``DTW >= d_ss + d_ee``) as a Column predicate.
-    3. **refine** — vertex arrays join back onto the surviving pairs
-       only (two co-keyed joins), and the O(len·len) DP kernel runs in
-       Arrow batches; pairs with exact distance <= tau survive.
+    1. **cells** — start points land on a latitude-banded grid (band
+       height = tau; per-band longitude width scaled by the band's
+       equator-near cosine, the dbscan_distributed discipline). Each
+       trajectory becomes one row per cell its tau-disk around the
+       start touches, carrying its vertex arrays, endpoints, bounding
+       box and own cell. The rows hash-partition on the cell and sort
+       within partitions, so each cell is one contiguous run.
+    2. **pairs and bounds** — in each cell, every row whose own cell it
+       is pairs with every row probing it, keeping ``id_a < id_b``
+       (vectorized across the cells of an Arrow batch, in bounded
+       chunks). Both DTW and discrete Fréchet couple start with start
+       and end with end, so the exact endpoint bound (``dF >=
+       max(d_ss, d_ee)``, ``DTW >= d_ss + d_ee``) drops a pair first;
+       then the box bound: at distance <= tau every vertex of either
+       trajectory lies within tau of the other, so each bounding box
+       lies inside the other grown by tau — tau/R in latitude,
+       ``2·asin(sin(tau/2R) / cos φmax)`` in longitude (from hav(d/R) >=
+       cos φ1 cos φ2 hav(Δλ)), skipped near a pole and at ±180°
+       (:func:`_box_bound`).
+    3. **refine** — one batched O(len·len) DP call over the survivors
+       of each batch; pairs with exact distance <= tau are returned.
 
-    Exactness: phase 1 is a superset of all qualifying pairs by the
-    coupling argument (pinned against the brute-force all-pairs DP in
-    tests/test_trajectory_join.py). Longitude cells alias modulo the
-    band's cell count, so pairs straddling the ±180° antimeridian join
-    like any other (test_antimeridian_pairs_not_missed; the haversine
-    LB/refine stages were always wrap-safe — only the grid needed it).
+    Exactness: a qualifying pair has ``d(start_a, start_b) <= tau``, so
+    the larger id's tau-disk probes the smaller id's own cell, and the
+    pair is met there exactly once (pinned against the brute-force
+    all-pairs DP in tests/test_trajectory_join.py). Longitude cells
+    alias modulo the band's cell count, so pairs straddling the ±180°
+    antimeridian meet like any other (test_antimeridian_pairs_not_missed).
 
     Returns ``(id_a, id_b, dist_m)``.
 
@@ -427,98 +605,31 @@ def trajectory_similarity_join(
     (geogr/distances.py:156-185); a thresholded join at scale must
     prune before it pays the DP, which is this operator.
     """
-    fn = {"dtw": dtw_distance, "frechet": frechet_distance}.get(metric)
-    if fn is None:
+    if metric not in _BATCH_FN:
         raise ValueError(f"metric unknown, one of ('dtw', 'frechet'), got {metric!r}")
     if tau_m < 0:
         raise ValueError(f"tau_m must be >= 0, got {tau_m}")
 
-    from pyspark import StorageLevel
-
-    from trackintel_spark.functions.spatial import haversine_m
-
-    flat = tpls.select(
-        F.col(id_col).alias("__tid"),
-        F.transform(geom_col, lambda p: p["lon"]).alias("__lons"),
-        F.transform(geom_col, lambda p: p["lat"]).alias("__lats"),
-    ).filter(F.size("__lons") > 0)
-    # the flattened input is referenced THREE times (own-cell side,
-    # probe side, array refine) — persist it or a derived input's whole
-    # upstream pipeline re-executes per reference (plan-audit finding;
-    # trajectory_topk does the same). The returned plan reads the cache,
-    # so it is registered for release_id_caches(): Spark's CacheManager
-    # holds it until unpersisted, ContextCleaner never reclaims it.
-    flat = persist_owned(flat, StorageLevel.MEMORY_AND_DISK)
-
-    ends = flat.select(
-        "__tid",
-        F.element_at("__lons", 1).alias("s_lon"),
-        F.element_at("__lats", 1).alias("s_lat"),
-        F.element_at("__lons", -1).alias("e_lon"),
-        F.element_at("__lats", -1).alias("e_lat"),
-    )
-
     from trackintel_spark.geogr._grid import cell_size_deg, own_cell, probe_cells
+    from trackintel_spark.plans.partitioning import kernel_partitions
 
     cell_deg = cell_size_deg(tau_m)
-    cy, cx = own_cell(F.col("s_lon"), F.col("s_lat"), cell_deg)
-    a = ends.select(
-        F.col("__tid").alias("id_a"),
-        F.col("s_lon").alias("__sa_lon"), F.col("s_lat").alias("__sa_lat"),
-        F.col("e_lon").alias("__ea_lon"), F.col("e_lat").alias("__ea_lat"),
-        cy.alias("cy"), cx.alias("cx"),
+    flat = tpls.select(
+        F.col(id_col).alias("id"),
+        F.transform(geom_col, lambda p: p["lon"]).alias("lons"),
+        F.transform(geom_col, lambda p: p["lat"]).alias("lats"),
+    ).filter(F.col("id").isNotNull() & (F.size("lons") > 0))
+    s_lon, s_lat = F.element_at("lons", 1), F.element_at("lats", 1)
+    own_cy, own_cx = own_cell(s_lon, s_lat, cell_deg)
+    rows = flat.select(
+        "id", "lons", "lats",
+        s_lon.alias("s_lon"), s_lat.alias("s_lat"),
+        F.element_at("lons", -1).alias("e_lon"), F.element_at("lats", -1).alias("e_lat"),
+        F.array_min("lons").alias("lon_min"), F.array_max("lons").alias("lon_max"),
+        F.array_min("lats").alias("lat_min"), F.array_max("lats").alias("lat_max"),
+        own_cy.alias("own_cy"), own_cx.alias("own_cx"),
+        F.inline(probe_cells(s_lon, s_lat, cell_deg)),
     )
-
-    # probe side: every cell the tau-disk around the start touches
-    b = (
-        ends.select(
-            F.col("__tid").alias("id_b"),
-            F.col("s_lon").alias("__sb_lon"), F.col("s_lat").alias("__sb_lat"),
-            F.col("e_lon").alias("__eb_lon"), F.col("e_lat").alias("__eb_lat"),
-            F.explode(probe_cells(F.col("s_lon"), F.col("s_lat"), cell_deg)).alias("__c"),
-        )
-        .select("id_b", "__sb_lon", "__sb_lat", "__eb_lon", "__eb_lat",
-                F.col("__c.cy").alias("cy"), F.col("__c.cx").alias("cx"))
-    )
-
-    d_ss = haversine_m(F.col("__sa_lon"), F.col("__sa_lat"), F.col("__sb_lon"), F.col("__sb_lat"))
-    d_ee = haversine_m(F.col("__ea_lon"), F.col("__ea_lat"), F.col("__eb_lon"), F.col("__eb_lat"))
-    lb = F.greatest(d_ss, d_ee) if metric == "frechet" else (d_ss + d_ee)
-    cand = (
-        a.join(b, on=["cy", "cx"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(lb <= F.lit(float(tau_m)))
-        .select("id_a", "id_b")
-    )
-
-    # refine: vertex arrays join back onto the SURVIVING pairs only
-    arrs = flat.select("__tid", "__lons", "__lats")
-    pairs = (
-        cand.join(arrs.select(F.col("__tid").alias("id_a"),
-                              F.col("__lons").alias("la"), F.col("__lats").alias("pa")), on="id_a")
-        .join(arrs.select(F.col("__tid").alias("id_b"),
-                          F.col("__lons").alias("lb"), F.col("__lats").alias("pb")), on="id_b")
-    )
-
-    batch_fn = dtw_distance_batch if metric == "dtw" else frechet_distance_batch
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # batched refine (r13, guide §4.5/§4.2): pairs grouped by vertex
-        # count run ONE wavefront DP per (len_a, len_b) shape — the
-        # per-pair numpy dispatch loop was the probe's dominant cost
-        d = _pairwise_distance_batched(
-            pdf["la"].tolist(), pdf["pa"].tolist(),
-            pdf["lb"].tolist(), pdf["pb"].tolist(), batch_fn,
-        )
-        keep = d <= tau_m
-        return pd.DataFrame(
-            {
-                "id_a": pdf["id_a"].to_numpy()[keep],
-                "id_b": pdf["id_b"].to_numpy()[keep],
-                "dist_m": d[keep],
-            }
-        )
-
     schema = T.StructType(
         [
             T.StructField("id_a", T.LongType()),
@@ -526,9 +637,9 @@ def trajectory_similarity_join(
             T.StructField("dist_m", T.DoubleType()),
         ]
     )
-    from trackintel_spark.plans.partitioning import kernel_partitions
-
+    tau_m = float(tau_m)
     return (
-        pairs.repartition(kernel_partitions(pairs))
-        .mapInPandas(lambda it: (kernel(pdf) for pdf in it), schema=schema)
+        rows.repartition(kernel_partitions(rows), "cy", "cx")
+        .sortWithinPartitions("cy", "cx")
+        .mapInPandas(lambda it: _cell_join_batches(it, tau_m, metric), schema=schema)
     )

@@ -6,10 +6,10 @@ trajectory streams; here the stream-vs-corpus shape): each trajectory
 arriving on a stream is matched against every corpus trajectory within
 ``tau_m`` (DTW or discrete Fréchet), exactly.
 
-Entirely STATELESS — the same three-phase plan as the batch
-:func:`trackintel_spark.geogr.trajectory_similarity_join`, arranged so
-the static side pays the fan-out once and the stream side never
-multiplies before the join:
+Entirely STATELESS — the candidate grid and the refine step of the
+batch :func:`trackintel_spark.geogr.trajectory_similarity_join`,
+arranged so the static side pays the fan-out once and the stream side
+never multiplies before the join:
 
 1. the CORPUS is indexed ahead of time: each trajectory exploded to
    every grid cell its tau-disk (around the start point) touches —
@@ -21,8 +21,10 @@ multiplies before the join:
    exact endpoint lower bound (dF >= max(d_ss, d_ee),
    DTW >= d_ss + d_ee) kills non-contenders as a Column predicate.
 3. survivors join the corpus vertex arrays (a second stream-static
-   equi-join on corpus id) and the O(len·len) DP refines in Arrow
-   batches (``mapInPandas`` — stateless, streaming-legal).
+   equi-join on corpus id), and the join's numpy refine step runs in
+   Arrow batches (``mapInPandas`` — stateless, streaming-legal): the
+   exact bounding-box bound, then one batched O(len·len) DP over the
+   pairs it keeps.
 
 Works identically on a batch probe frame (the unified-API convention
 of this package); stream == batch == brute force is pinned in
@@ -36,14 +38,13 @@ batch tool is the O(n²) distance matrix (geogr/distances.py:156-185).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.geogr._grid import cell_size_deg, own_cell, probe_cells
-from trackintel_spark.geogr.trajectory_distance import dtw_distance, frechet_distance
+from trackintel_spark.geogr.trajectory_distance import _BATCH_FN, _refine
 
 __all__ = ["index_trajectory_corpus", "trajectory_match_stream"]
 
@@ -102,8 +103,7 @@ def trajectory_match_stream(
     """Match each (streaming or batch) trajectory against the indexed
     corpus: returns ``(query_id, match_id, dist_m)`` for every corpus
     trajectory within ``tau_m``. See the module doc for the plan."""
-    fn = {"dtw": dtw_distance, "frechet": frechet_distance}.get(metric)
-    if fn is None:
+    if metric not in _BATCH_FN:
         raise ValueError(f"metric unknown, one of ('dtw', 'frechet'), got {metric!r}")
     if tau_m < 0:
         raise ValueError(f"tau_m must be >= 0, got {tau_m}")
@@ -117,7 +117,14 @@ def trajectory_match_stream(
 
     d_ss = haversine_m(F.col("q_s_lon"), F.col("q_s_lat"), F.col("c_s_lon"), F.col("c_s_lat"))
     d_ee = haversine_m(F.col("q_e_lon"), F.col("q_e_lat"), F.col("c_e_lon"), F.col("c_e_lat"))
-    lb = F.greatest(d_ss, d_ee) if metric == "frechet" else (d_ss + d_ee)
+    if metric == "frechet":
+        lb = F.greatest(d_ss, d_ee)
+    else:
+        # both start where they end (e.g. single vertices): the DTW sum
+        # may count one cell twice, so only d_ss bounds it
+        closed = ((F.col("q_s_lon") == F.col("q_e_lon")) & (F.col("q_s_lat") == F.col("q_e_lat"))
+                  & (F.col("c_s_lon") == F.col("c_e_lon")) & (F.col("c_s_lat") == F.col("c_e_lat")))
+        lb = F.when(closed, d_ss).otherwise(d_ss + d_ee)
 
     cand = (
         q.join(corpus_cells, on=["cy", "cx"])
@@ -126,15 +133,16 @@ def trajectory_match_stream(
     )
     pairs = cand.join(corpus_arrays, on="c_id")
 
+    batch_fn = _BATCH_FN[metric]
+
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in pdf.itertuples(index=False):
-            tq = np.column_stack((row.q_lons, row.q_lats))
-            tc = np.column_stack((row.c_lons, row.c_lats))
-            d = fn(tq, tc)
-            if d <= tau_m:
-                out.append((row.q_id, row.c_id, d))
-        return pd.DataFrame(out, columns=["query_id", "match_id", "dist_m"])
+        pos, d, _ = _refine(
+            pdf["q_lons"].to_numpy(), pdf["q_lats"].to_numpy(),
+            pdf["c_lons"].to_numpy(), pdf["c_lats"].to_numpy(), tau_m, batch_fn,
+        )
+        return pd.DataFrame(
+            {"query_id": pdf["q_id"].to_numpy()[pos], "match_id": pdf["c_id"].to_numpy()[pos], "dist_m": d}
+        )
 
     schema = T.StructType(
         [
