@@ -21,6 +21,70 @@ def test_dense_id_matches_global_row_number(spark):
         assert got == {pair: i for i, pair in enumerate(sorted(data))}
 
 
+def test_dense_id_runs_an_uncached_kernel_once_with_stable_ids(spark):
+    """An uncached applyInPandas output goes straight in: the id pass
+    caches it for its range sampling, so the kernel runs once per
+    group, and every later read (two collects, a filtered count) reads
+    the sorted cache with the same ids. Sized so that range sampling
+    really samples: 60 users x 500 rows over 7 input partitions."""
+    from pyspark.sql import Window
+
+    from trackintel_spark.plans import ids
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def kernel(pdf):
+        calls.add(1)
+        return pdf
+
+    df = spark.range(60 * 500, numPartitions=7).selectExpr("id % 60 AS user_id", "(id * 7919) % 100003 AS t")
+    raw = df.groupBy("user_id").applyInPandas(kernel, schema="user_id long, t long")
+    out = dense_id_by_user(raw, order_by=["t"], id_col="id")
+    expected = {
+        (r.user_id, r.t): r.rn
+        for r in df.select("user_id", "t", (F.row_number().over(Window.orderBy("user_id", "t")) - 1).alias("rn"))
+        .collect()
+    }
+    for _ in range(2):
+        assert {(r.user_id, r.t): r.id for r in out.collect()} == expected
+    assert out.filter("id % 2 = 0").count() == len(expected) // 2
+    assert calls.value == 60
+
+    ids.release_id_caches()
+    before = _pinned_ids(spark)
+    empty = dense_id_by_user(spark.createDataFrame([], "user_id long, t long"), order_by=["t"])
+    assert empty.collect() == [] and empty.schema["id"].dataType.typeName() == "long"
+    ids.release_id_caches()
+    assert _pinned_ids(spark) <= before
+
+
+def test_dense_id_leaves_a_caller_cache_and_frees_its_own_on_failure(spark):
+    """The id pass frees only the input cache it made: a frame the
+    caller cached is still cached after the helper's output is read,
+    and a kernel that raises inside the helper leaves nothing pinned."""
+    import pytest
+    from pyspark import StorageLevel
+
+    from trackintel_spark.plans import ids
+
+    ids.release_id_caches()
+    before = _pinned_ids(spark)
+    mine = spark.createDataFrame([(u, t) for u in (1, 2) for t in range(5)], "user_id long, t long").persist()
+    assert len(dense_id_by_user(mine, order_by=["t"]).collect()) == 10
+    assert mine.storageLevel != StorageLevel.NONE
+    mine.unpersist()
+    ids.release_id_caches()
+
+    def boom(pdf):
+        raise ValueError("kernel failed")
+
+    raw = mine.groupBy("user_id").applyInPandas(boom, schema="user_id long, t long")
+    with pytest.raises(Exception, match="kernel failed"):
+        dense_id_by_user(raw, order_by=["t"])
+    assert _pinned_ids(spark) <= before
+    ids.release_id_caches()
+
+
 def _pinned_ids(spark) -> set:
     """Ids of the session's persisted RDDs. Compared as sets: local
     checkpoints left by earlier tests are freed by the context cleaner
@@ -31,12 +95,14 @@ def _pinned_ids(spark) -> set:
 def test_release_id_caches_frees_everything_the_chain_cached(spark):
     """Every cache the generate-operators leave behind is registered:
     after the outputs are collected, release_id_caches() leaves no RDD
-    pinned that the chain pinned."""
+    pinned that the chain pinned. Each operator's one cache is its id
+    pass's sorted cache: no kernel output stays cached beside it."""
     from tests.test_accessors import _walkers
     from trackintel_spark.analysis import create_activity_flag
     from trackintel_spark.operators import (
         generate_locations, generate_staypoints, generate_tours, generate_trips, generate_triplegs,
     )
+    from trackintel_spark.plans import ids
     from trackintel_spark.plans.ids import release_id_caches
 
     release_id_caches()
@@ -51,6 +117,12 @@ def test_release_id_caches_frees_everything_the_chain_cached(spark):
         out.collect()
     assert trips.count() >= 2
     assert _pinned_ids(spark) - before
+    assert len(ids._ID_CACHES) == 5  # one per id pass
+    for rdd_id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
+        if rdd_id not in before:
+            # the cached plan's root, below the AdaptiveSparkPlan line
+            root = [line for line in rdd.name().splitlines() if "AdaptiveSparkPlan" not in line][0]
+            assert "FlatMapGroupsInPandas" not in root, root
 
     assert release_id_caches() > 0
     assert _pinned_ids(spark) <= before
@@ -58,9 +130,10 @@ def test_release_id_caches_frees_everything_the_chain_cached(spark):
 
 def test_python_kernels_run_once_per_group(spark, monkeypatch):
     """The id pass reads its input twice (range sampling, then the
-    sorted shuffle), so the staypoint, tripleg, tour and location
-    kernels feeding it run from a cache: one kernel call per user
-    group, not one per read."""
+    sorted shuffle), and it caches that input for its counting job, so
+    the staypoint, tripleg, tour and location kernels feeding it run
+    once per user group, not once per read; later reads, downstream
+    operators' included, read its sorted cache."""
     from tests.test_accessors import _walkers
     from trackintel_spark.analysis import create_activity_flag
     from trackintel_spark.operators import (

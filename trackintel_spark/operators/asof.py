@@ -202,6 +202,36 @@ def _global_scan_last(
     )
 
 
+def _ranked_right(
+    left: DataFrame, right: DataFrame, by_cols: list[str], right_on: str, suffix: str
+) -> tuple[DataFrame, list[str], dict[str, str]]:
+    """Right with its arrival rank ``__rk``, right's payload columns and
+    their output names (``suffix`` appended on a clash with left).
+
+    The rank orders ONLY right rows that share (key, timestamp): pandas
+    resolves duplicate-timestamp matches by input position (backward
+    takes the last such row, forward the first). Keyed path: the raw
+    monotonically_increasing_id IS that rank — row_number over it is
+    order-isomorphic within any (key, t) group, and skipping the rank
+    window removes a whole exchange + sort of the right table (it
+    hash-partitioned on (key, t), which the union's (key) exchange
+    can't reuse — measured ~15% of the 40M probe's wall). Key-less
+    path keeps the dense rank: its bucketed global scan folds __rk into
+    a double rank whose precision budget needs small values.
+    """
+    r_payload_cols = [c for c in right.columns if c not in by_cols and c != right_on]
+    out_names = {c: c + suffix if c in left.columns else c for c in r_payload_cols}
+    if by_cols:
+        return right.withColumn("__rk", F.monotonically_increasing_id()), r_payload_cols, out_names
+    wr = Window.partitionBy(right_on).orderBy("__in")
+    rbase = (
+        right.withColumn("__in", F.monotonically_increasing_id())
+        .withColumn("__rk", F.row_number().over(wr).cast("long"))
+        .drop("__in")
+    )
+    return rbase, r_payload_cols, out_names
+
+
 def _asof_one(
     left: DataFrame,
     right: DataFrame,
@@ -217,29 +247,7 @@ def _asof_one(
     the frame has left's columns + renamed right payload + ``__asof_dt``
     (|Δt| seconds/units to the match, NULL when unmatched)."""
     t_l, t_r = F.col(on), F.col(right_on)
-    r_payload_cols = [c for c in right.columns if c not in by_cols and c != right_on]
-    out_names = {c: c + suffix if c in left.columns else c for c in r_payload_cols}
-
-    # arrival rank, used ONLY to order right rows that share (key,
-    # timestamp): pandas resolves duplicate-timestamp matches by input
-    # position (backward takes the last such row, forward the first).
-    # Keyed path: the raw monotonically_increasing_id IS that rank —
-    # row_number over it is order-isomorphic within any (key, t) group,
-    # and skipping the rank window removes a whole exchange + sort of
-    # the right table (it hash-partitioned on (key, t), which the
-    # union's (key) exchange can't reuse — measured ~15% of the 40M
-    # probe's wall). Key-less path keeps the dense rank: its bucketed
-    # global scan folds __rk into a double rank_sec whose precision
-    # budget needs small values.
-    if by_cols:
-        rbase = right.withColumn("__rk", F.monotonically_increasing_id())
-    else:
-        wr = Window.partitionBy(*by_cols, t_r).orderBy("__in")
-        rbase = (
-            right.withColumn("__in", F.monotonically_increasing_id())
-            .withColumn("__rk", F.row_number().over(wr).cast("long"))
-            .drop("__in")
-        )
+    rbase, r_payload_cols, out_names = _ranked_right(left, right, by_cols, right_on, suffix)
     r = rbase.select(
         *by_cols,
         t_r.alias("__t"),
@@ -370,23 +378,8 @@ def asof_join(
     # monotonically_increasing_id columns, which can silently misalign
     # rows when the left plan is nondeterministic or a task retries).
     t_l, t_r = F.col(on), F.col(right_on)
-    r_payload_cols = [c for c in right.columns if c not in by_cols and c != right_on]
-    out_names = {c: c + suffix if c in left.columns else c for c in r_payload_cols}
+    rbase, r_payload_cols, out_names = _ranked_right(left, right, by_cols, right_on, suffix)
     payload = [out_names[c] for c in r_payload_cols]
-
-    # same rank economics as _asof_one: keyed mode tie-breaks on the raw
-    # monotonic id (no rank window, no extra right-side exchange);
-    # key-less mode needs the small dense rank for its double-packed
-    # bucket rank (see rank_f below).
-    if by_cols:
-        rbase = right.withColumn("__rk", F.monotonically_increasing_id())
-    else:
-        wr = Window.partitionBy(*by_cols, t_r).orderBy("__in")
-        rbase = (
-            right.withColumn("__in", F.monotonically_increasing_id())
-            .withColumn("__rk", F.row_number().over(wr).cast("long"))
-            .drop("__in")
-        )
     rstruct = F.struct(
         t_r.cast("double").alias("__rt"),
         *[F.col(c).alias(out_names[c]) for c in r_payload_cols],

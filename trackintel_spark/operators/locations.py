@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
+from trackintel_spark.plans.ids import dense_id_by_user
 
 _LABEL_SCHEMA = T.StructType(
     [
@@ -235,8 +235,7 @@ def generate_locations(
         raw = work.select(*pts_cols).groupBy("user_id").applyInPandas(
             lambda pdf: _locations_kernel(pdf, eps_rad, num_samples, epsilon), schema=_CLUSTER_SCHEMA
         )
-        # cached for the id pass (see dense_id_by_user): DBSCAN runs once
-        clusters = dense_id_by_user(persist_owned(raw), order_by=["label"])
+        clusters = dense_id_by_user(raw, order_by=["label"])
         links = clusters.selectExpr("user_id", "id AS location_id", "explode(sp_ids) AS id")
         sp_out = work.join(links, on=["user_id", "id"], how="left").select(
             "id", *[c for c in work.columns if c != "id"], "location_id"

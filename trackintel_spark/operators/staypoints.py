@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
+from trackintel_spark.plans.ids import dense_id_by_user
 from trackintel_spark.plans.literals import sql_double
 
 _KERNEL_SCHEMA = T.StructType(
@@ -200,8 +200,7 @@ def generate_staypoints(
         raise ValueError(f"distance_metric unknown, only 'haversine', got {distance_metric!r}")
     validate(pfs, "positionfixes")
 
-    if "staypoint_id" in pfs.columns:
-        pfs = pfs.drop("staypoint_id")
+    pfs = pfs.drop("staypoint_id")
 
     from trackintel_spark.plans.partitioning import kernel_partitions, salt_min_user_rows
 
@@ -290,10 +289,10 @@ def generate_staypoints(
         group_cols = ["user_id"]
 
     raw_sp = kernel_in.groupBy(*group_cols).applyInPandas(_run, schema=_KERNEL_SCHEMA)
-    # cached for the id pass (see dense_id_by_user), whose own cache
-    # then feeds the sp and link-back branches and every downstream
-    # operator: the sliding scan runs once
-    sp = dense_id_by_user(persist_owned(raw_sp), order_by=["started_at"], id_col="id")
+    # the id pass caches its input for its counting job, and its sorted
+    # cache then feeds the sp and link-back branches and every
+    # downstream operator: the sliding scan runs once
+    sp = dense_id_by_user(raw_sp, order_by=["started_at"], id_col="id")
 
     # link staypoint_id back onto pfs: explode the member-id list and join
     # (reference _explode_agg, preprocessing/util.py:87-114). user_id

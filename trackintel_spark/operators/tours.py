@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
+from trackintel_spark.plans.ids import dense_id_by_user
 from trackintel_spark.plans.literals import sql_double
 
 _TOUR_SCHEMA = T.StructType(
@@ -303,7 +303,7 @@ def generate_tours(
     elif "geom" not in trips.columns:
         raise ValueError("trips must have a 'geom' (origin/dest pair) column when staypoints are not given")
 
-    trips_in = trips.drop(*[c for c in ("tour_id",) if c in trips.columns])
+    trips_in = trips.drop("tour_id")
 
     if use_locations:
         # resolve origin AND destination locations with ONE equi-join:
@@ -410,10 +410,7 @@ def generate_tours(
         .groupBy(*group_cols)
         .applyInPandas(_run, schema=schema)
     )
-    # cached for the id pass (see dense_id_by_user): the kernel runs once
-    tours = dense_id_by_user(persist_owned(raw), order_by=order_by, id_col="id").drop(
-        *(["seq", "__session"] if salt_sessions else ["seq"])
-    )
+    tours = dense_id_by_user(raw, order_by=order_by, id_col="id").drop("seq", "__session")
 
     links = tours.select(F.col("id").alias("tour_id"), F.explode("trips").alias("id"))
     tour_lists = links.groupBy("id").agg(F.sort_array(F.collect_list("tour_id")).alias("tour_id"))
@@ -460,7 +457,7 @@ def flag_journeys(tours: DataFrame, staypoints: DataFrame) -> DataFrame:
         .distinct()
         .withColumn("__home", F.lit(True))
     )
-    out = tours.drop(*[c for c in ("journey",) if c in tours.columns]).join(
+    out = tours.drop("journey").join(
         homes, on=["user_id", "location_id"], how="left"
     )
     return out.withColumn(
@@ -478,6 +475,6 @@ def get_trips_grouped(trips: DataFrame, tours: DataFrame) -> DataFrame:
     Reference: get_trips_grouped (preprocessing/trips.py:12-51); returns
     the exploded join rather than a pandas GroupBy object.
     """
-    t = trips.drop(*[c for c in ("tour_id",) if c in trips.columns])
+    t = trips.drop("tour_id")
     links = tours.select(F.col("id").alias("tour_id"), F.explode("trips").alias("id"))
     return links.join(t, on="id", how="left")

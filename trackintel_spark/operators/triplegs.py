@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
+from trackintel_spark.plans.ids import dense_id_by_user
 
 _PF, _SP = 0, 1  # kernel row kinds: a positionfix, a staypoint
 
@@ -177,8 +177,7 @@ def generate_triplegs(
 
     from trackintel_spark.plans.partitioning import kernel_partitions
 
-    if "tripleg_id" in pfs.columns:
-        pfs = pfs.drop("tripleg_id")
+    pfs = pfs.drop("tripleg_id")
     # ONE user_id exchange: the kernel groupBy and the link-back join's
     # pfs side both reuse it (see generate_staypoints)
     kp = kernel_partitions(pfs)
@@ -206,10 +205,9 @@ def generate_triplegs(
         return _triplegs_kernel(pdf, gap_s, match, overlap)
 
     raw = units.groupBy("user_id").applyInPandas(_run, schema=_KERNEL_SCHEMA)
-    # cached for the id pass (see dense_id_by_user): the kernel runs
-    # once. Ids are assigned before the zero-extent drop (reference
-    # :376 then :398), so the sequence may have holes.
-    legs = dense_id_by_user(persist_owned(raw), order_by=["start_us"], id_col="id").filter("valid")
+    # ids are assigned before the zero-extent drop (reference :376
+    # then :398), so the sequence may have holes
+    legs = dense_id_by_user(raw, order_by=["start_us"], id_col="id").filter("valid")
 
     tpls = legs.selectExpr(
         "id", "user_id", "timestamp_micros(start_us) AS started_at", "timestamp_micros(end_us) AS finished_at",

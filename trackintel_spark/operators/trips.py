@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
-from trackintel_spark.plans.ids import dense_id_by_user, persist_owned
+from trackintel_spark.plans.ids import dense_id_by_user
 
 _SP, _TPL = 1, 2  # unit kinds, in the (started_at, type) tie order
 
@@ -177,8 +177,8 @@ def generate_trips(
 
     from trackintel_spark.plans.partitioning import kernel_partitions
 
-    sp_base = staypoints.drop(*[c for c in ("trip_id", "prev_trip_id", "next_trip_id") if c in staypoints.columns])
-    tpls_base = triplegs.drop(*[c for c in ("trip_id",) if c in triplegs.columns])
+    sp_base = staypoints.drop("trip_id", "prev_trip_id", "next_trip_id")
+    tpls_base = triplegs.drop("trip_id")
 
     if add_geometry:
         sp_pt = ["geom.lon", "geom.lat"] * 2
@@ -206,10 +206,9 @@ def generate_trips(
         return _trips_kernel(pdf, gap_s)
 
     raw = units.repartition(kernel_partitions(units), "user_id").groupBy("user_id").applyInPandas(_run, schema=schema)
-    # cached for the id pass (see dense_id_by_user): the kernel runs
-    # once. The id helper caches its sorted output, and the three
-    # outputs below are projections of it.
-    trips = dense_id_by_user(persist_owned(raw), order_by=["seq"], id_col="id")
+    # the id helper caches its sorted output, and the three outputs
+    # below are projections of it
+    trips = dense_id_by_user(raw, order_by=["seq"], id_col="id")
 
     trips_out = trips.selectExpr(
         "id", "user_id", "timestamp_micros(start_us) AS started_at", "timestamp_micros(end_us) AS finished_at",

@@ -25,16 +25,20 @@ add per-PARTITION base offsets (<= defaultParallelism longs):
 
 The eager helper's cache is LOAD-BEARING: the collected bases describe
 the cached partitioning, so it must not be unpersisted under its own
-output. Every persist the library keeps past its call (these, and the
-operators' own) is registered here; long sessions chaining many
-operators accumulate them — call :func:`release_id_caches` after the
-consuming action (write/collect) to free them.
+output. The helper also owns the one cache of its input, held only
+for its counting job, so callers pass their plans in uncached. Every
+persist the library keeps past its call (these sorted caches, and
+the few operator caches of other intermediates) is registered here;
+long sessions chaining many operators accumulate them — call
+:func:`release_id_caches` after the consuming action (write/collect)
+to free them.
 """
 
 from __future__ import annotations
 
 import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -57,8 +61,9 @@ def persist_owned(df: DataFrame, *args) -> DataFrame:
 
 def release_id_caches() -> int:
     """Unpersist the registered persists: every cache made through
-    :func:`persist_owned` (the eager id helper's shuffled inputs and
-    the operators' own caches).
+    :func:`persist_owned` (the eager id helper's sorted caches and the
+    few operator caches of other intermediates). The id helper frees
+    its input caches itself, so they are not among them.
 
     The lineage checkpoints of iterative operators (dbscan rounds,
     graph connected components, rollup levels, privacy, dedup) are not
@@ -144,19 +149,34 @@ def dense_id_by_user(
     deterministic wherever the sort key is.
 
     The range shuffle reads ``df`` twice: once to sample the range
-    bounds (its own job), once to shuffle. A caller whose ``df`` is
-    costly to compute (a Python kernel's output) passes it through
-    :func:`persist_owned` first, so it is computed once.
+    bounds (its own job), once to shuffle. So an uncached ``df`` (a
+    Python kernel's output, say) is cached for the counting job and
+    unpersisted right after it, even when the job fails: ``df`` is
+    computed once, and only the sorted cache outlives the call. Not
+    before the job: once the sorted cache is fully loaded, dropping the
+    input cache leaves it as it is, while an unloaded one would be
+    recompiled, re-sampling the bounds the collected bases describe.
+    A ``df`` the caller cached is left cached. For the same reason, do
+    not run two passes with different sort keys over one uncached
+    ``df`` at once: the first to finish drops the input cache under
+    the other's unloaded sorted cache.
     """
     p = df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in [user_col, *order_by]]
-    d = persist_owned(
-        df.repartitionByRange(p, *cols)
-        .sortWithinPartitions(*cols)
-        .withColumn("__p", F.spark_partition_id())
-        .withColumn("__pos", F.monotonically_increasing_id() - F.shiftleft(F.col("__p").cast("long"), 33))
-    )
-    counts = {r["__p"]: r["__n"] for r in d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")).collect()}
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df = df.persist()
+    try:
+        d = persist_owned(
+            df.repartitionByRange(p, *cols)
+            .sortWithinPartitions(*cols)
+            .withColumn("__p", F.spark_partition_id())
+            .withColumn("__pos", F.monotonically_increasing_id() - F.shiftleft(F.col("__p").cast("long"), 33))
+        )
+        counts = {r["__p"]: r["__n"] for r in d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")).collect()}
+    finally:
+        if owned:
+            df.unpersist(blocking=False)
     bases: list[str] = []
     acc = 0
     for pid in sorted(counts):
