@@ -373,15 +373,22 @@ def test_osna_conflict_home_wins(spark):
     assert per_loc[2] == "work"
 
 
-def test_tours_session_salting_equivalence(spark):
-    """Splitting a user's trip stream at > max_time gaps (with the
-    previous trip seeded as a context row) must be EXACTLY the unsalted
-    kernel — including the reference's quirk that a post-gap self-loop
-    trip does NOT close a 1-trip tour when the stack was non-empty
-    (continuation skips the scan at a location break with
-    max_nr_gaps=0), and including max_nr_gaps > 0 GAP bookkeeping."""
-    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
+def test_tours_pinned_across_max_time_gaps(spark):
+    """Exact tours of two users whose trip streams break at > max_time
+    gaps, by the reference rules (preprocessing/trips.py:238-336):
 
+    * a trip whose origin is not the previous destination resets the
+      stack without a scan at max_nr_gaps=0, so the post-gap self-loop
+      (5 -> 5) closes NO 1-trip tour; at max_nr_gaps=1 the break is a
+      tolerated gap, the trip is scanned, and it closes itself;
+    * the session-2 tour closes (5 -> 6 -> 5; the scan stops at the
+      first candidate, newest first, whose origin is the destination);
+    * session 3 opens where session 2 ended (5), so it continues the
+      stack; the stale session-2 candidates are cut at max_time and the
+      session-3 tour (5 -> 7 -> 5) still closes.
+
+    Tour ids run densely in (user, closing-trip) order; a trip's
+    ``tour_id`` lists every tour it belongs to."""
     # staypoint id i -> location; users 1 and 2 share the pattern
     pairs = []
     trips_rows = []
@@ -406,16 +413,14 @@ def test_tours_session_salting_equivalence(spark):
             t += 60 + dwell
         # session 1: one 3-trip tour + an open chain
         trip(0, 1); trip(1, 2); trip(2, 0); trip(0, 3)
-        t += 3000  # > max_time=1440 min: salt boundary
-        # session 2 opens with a SELF-LOOP trip (5 -> 5): the unsalted
-        # kernel skips its scan (location break resets the stack), so no
-        # 1-trip tour — the salted kernel must agree via the ctx seed
+        t += 3000  # > max_time=1440 min
+        # session 2 opens with a SELF-LOOP trip (5 -> 5) after a
+        # location break (the last trip ended at 3)
         trip(5, 5)
         trip(5, 6); trip(6, 5)  # a real tour in session 2
         t += 3000
         # session 3 opens same-location as the last session-2 trip ended
-        # (5): continuation appends to the stack; ensure a tour still
-        # closes inside the window
+        # (5): continuation appends to the stack
         trip(5, 7); trip(7, 5)
 
     sp = _mk_sp(spark, [(i, 1, 0, 10, 8.5, 47.4) for i, _ in pairs])
@@ -423,29 +428,42 @@ def test_tours_session_salting_equivalence(spark):
     sp = sp.withColumn("location_id", F.udf(lambda i: locmap.get(i), "long")(F.col("id")))
     trips = _mk_trips(spark, trips_rows)
 
-    for gaps in (0, 1):
-        base_to, base_tours = generate_tours(
-            trips, staypoints=sp, max_nr_gaps=gaps, salt_sessions=False
-        )
-        base = sorted(map(str, base_tours.collect()))
-        base_links = sorted(map(str, base_to.select("id", "tour_id").collect()))
-
-        spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")
-        try:
-            salted_to, salted_tours = generate_tours(
-                trips, staypoints=sp, max_nr_gaps=gaps, salt_sessions=True
-            )
-        finally:
-            spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
-        assert sorted(map(str, salted_tours.collect())) == base, f"max_nr_gaps={gaps}"
-        assert sorted(map(str, salted_to.select("id", "tour_id").collect())) == base_links
-        # non-vacuous: tours exist in several sessions
-        assert base_tours.count() >= 6
+    # max_nr_gaps -> user 1's tours as (trips, location_id, origin sp,
+    # destination sp, start min, end min); user 2's are the same with
+    # trip ids + 9 and staypoint ids + 100
+    user1_tours = {
+        0: [([0, 1, 2], 0, 100, 105, 0, 240), ([5, 6], 5, 110, 113, 3450, 3600),
+            ([7, 8], 5, 114, 117, 6630, 6780)],
+        1: [([0, 1, 2], 0, 100, 105, 0, 240), ([4], 5, 108, 109, 3360, 3420),
+            ([5, 6], 5, 110, 113, 3450, 3600), ([7, 8], 5, 114, 117, 6630, 6780)],
+    }
+    for gaps, user1 in user1_tours.items():
+        expected = [
+            (u, [m + 9 * (u - 1) for m in members], loc, o + 100 * (u - 1), d + 100 * (u - 1),
+             T0 + timedelta(minutes=s), T0 + timedelta(minutes=e))
+            for u in (1, 2)
+            for members, loc, o, d, s, e in user1
+        ]
+        trips_out, tours = generate_tours(trips, staypoints=sp, max_nr_gaps=gaps)
+        got = [
+            (r.id, (r.user_id, r.trips, r.location_id, r.origin_staypoint_id,
+                    r.destination_staypoint_id, r.started_at, r.finished_at))
+            for r in tours.orderBy("id").collect()
+        ]
+        assert got == list(enumerate(expected)), f"max_nr_gaps={gaps}"
+        links = {tid: set() for tid in range(18)}
+        for tour_id, (_, members, *_rest) in enumerate(expected):
+            for m in members:
+                links[m].add(tour_id)
+        got_links = {r.id: r.tour_id for r in trips_out.select("id", "tour_id").collect()}
+        assert got_links == {
+            tid: sorted(ts) if ts else None for tid, ts in links.items()
+        }, f"max_nr_gaps={gaps}"
 
 
 def test_salt_min_user_rows_conf_knob(spark):
-    """Both sequential kernels read the shared session-salting threshold
-    from plans.partitioning: the spark.trackintel.salt.minUserRows conf
+    """The staypoint kernel's session-salting threshold comes from
+    plans.partitioning: the spark.trackintel.salt.minUserRows conf
     overrides the module default; non-numeric values fall back."""
     from trackintel_spark.plans.partitioning import (
         DEFAULT_SALT_MIN_USER_ROWS, SALT_MIN_USER_ROWS_CONF, salt_min_user_rows,
@@ -459,71 +477,6 @@ def test_salt_min_user_rows_conf_knob(spark):
         assert salt_min_user_rows(spark) == 200_000  # graceful fallback
     finally:
         spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
-
-
-def test_tours_salting_fuzz_randomized_streams(spark):
-    """Adversarial-parameter fuzz for the gap-salting path: 60 users,
-    each an independent RANDOM trip stream over a 5-location alphabet —
-    random location breaks, self-loops, dwells, and >max_time gaps (so
-    quantile-free session boundaries land everywhere, including directly
-    after gaps and on post-gap self-loops, the reference quirks). The
-    salting gate is forced to 0 via the conf knob, so EVERY user splits;
-    salted must equal unsalted for max_nr_gaps in {0, 1, 3}.
-
-    This fuzz originally CAUGHT a real defect: with max_nr_gaps > 0 the
-    reference scan's gap-budget slicing (verbatim ``candidates[j+1:]``,
-    a bottom-relative index) makes results depend on the absolute stack
-    length including time-stale candidates, so no bounded context seed
-    can make a session split exact. generate_tours now refuses to salt
-    when max_nr_gaps > 0 — the {1, 3} legs pin that fallback."""
-    import random
-
-    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
-
-    rng = random.Random(20260814)
-    pairs = []
-    trips_rows = []
-    tid = 0
-    sp_id = 0
-    for u in range(1, 61):
-        t = 0
-        prev_dest = None
-        for _ in range(30):
-            if prev_dest is not None and rng.random() < 0.7:
-                o_loc = prev_dest  # chain continues
-            else:
-                o_loc = rng.randrange(5)  # location break
-            d_loc = rng.randrange(5)  # self-loops included
-            o_sp, d_sp = sp_id, sp_id + 1
-            sp_id += 2
-            pairs.append((o_sp, o_loc))
-            pairs.append((d_sp, d_loc))
-            trips_rows.append((tid, u, t, t + 60, o_sp, d_sp))
-            tid += 1
-            prev_dest = d_loc
-            # dwell: mostly short; ~15% a > max_time(=1440 min) gap
-            t += 60 + (2000 if rng.random() < 0.15 else rng.choice((10, 30, 100)))
-
-    sp = _mk_sp(spark, [(i, 1, 0, 10, 8.5, 47.4) for i, _ in pairs])
-    locmap = {i: l for i, l in pairs}
-    sp = sp.withColumn("location_id", F.udf(lambda i: locmap.get(i), "long")(F.col("id")))
-    trips = _mk_trips(spark, trips_rows)
-
-    for gaps in (0, 1, 3):
-        _, base_tours = generate_tours(
-            trips, staypoints=sp, max_nr_gaps=gaps, salt_sessions=False
-        )
-        base = sorted(map(str, base_tours.collect()))
-        assert len(base) >= 100  # non-vacuous at every gap setting
-        try:
-            spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")
-            _, salted_tours = generate_tours(
-                trips, staypoints=sp, max_nr_gaps=gaps, salt_sessions=True
-            )
-            got = sorted(map(str, salted_tours.collect()))
-        finally:
-            spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
-        assert got == base, f"max_nr_gaps={gaps}"
 
 
 # -- journey flag (reference model/tours.py:25,30) -----------------------------

@@ -23,22 +23,17 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _shuffles(df) -> list[str]:
-    """The physical shuffles ``df``'s plan runs, sorted: each
-    ``ShuffleExchangeExec`` once, keyed by plan id, however many cached
-    or adaptive plans contain it. Each is its output partitioning
-    without expression ids or partition count, e.g.
-    ``hashpartitioning(user_id)``. The walk goes into the current plan
-    of adaptive nodes and query stages and into the cached plan of
-    in-memory scans, where a printed plan lists every subplan's initial
-    and final form."""
+def _physical_nodes(df) -> list:
+    """Every node of ``df``'s executed plan, each once by plan id. The
+    walk goes into the current plan of adaptive nodes and query stages
+    and into the cached plan of in-memory scans, where a printed plan
+    lists every subplan's initial and final form."""
     found = {}
 
     def walk(node):
         cls = node.getClass().getSimpleName()
-        if cls == "ShuffleExchangeExec":
-            found[node.id()] = re.sub(r"#\d+L?|, \d+(?=\)$)", "", node.outputPartitioning().toString())
-        elif cls == "AdaptiveSparkPlanExec":
+        found[node.id()] = node
+        if cls == "AdaptiveSparkPlanExec":
             walk(node.executedPlan())
         elif cls == "InMemoryTableScanExec":
             walk(node.relation().cachedPlan())
@@ -51,7 +46,19 @@ def _shuffles(df) -> list[str]:
             walk(children.apply(i))
 
     walk(df._jdf.queryExecution().executedPlan())
-    return sorted(found.values())
+    return list(found.values())
+
+
+def _shuffles(df) -> list[str]:
+    """The physical shuffles ``df``'s plan runs, sorted: each
+    ``ShuffleExchangeExec`` once, however many cached or adaptive plans
+    contain it. Each is its output partitioning without expression ids
+    or partition count, e.g. ``hashpartitioning(user_id)``."""
+    return sorted(
+        re.sub(r"#\d+L?|, \d+(?=\)$)", "", node.outputPartitioning().toString())
+        for node in _physical_nodes(df)
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+    )
 
 
 def test_tpch_q1_scan_prunes_and_pushes(spark):
@@ -167,6 +174,36 @@ def test_locations_kernel_reads_one_user_exchange(spark):
     ids = "rangepartitioning(user_id ASC NULLS FIRST, label ASC NULLS FIRST)"
     assert _shuffles(locs) == ["hashpartitioning(user_id)", ids]
     assert _shuffles(sp_out) == ["hashpartitioning(user_id)", "hashpartitioning(user_id)", ids]
+
+
+def test_tours_kernel_reads_one_user_exchange(spark):
+    """generate_tours runs its per-user kernel behind the one user_id
+    exchange: no window and no exchange keyed on anything but user_id
+    before the kernel, then the id pass's range shuffle."""
+    import datetime as dt
+
+    from trackintel_spark.operators.tours import generate_tours
+
+    ts = lambda m: dt.datetime(2023, 1, 1) + dt.timedelta(minutes=m)  # noqa: E731
+    trips = spark.createDataFrame(
+        [
+            (u * 10 + i, u, ts(i * 60), ts(i * 60 + 30), u * 10 + i, u * 10 + i + 1,
+             {"origin": {"lon": 8.5, "lat": 47.4}, "dest": {"lon": 8.5, "lat": 47.4}})
+            for u in (1, 2) for i in range(4)
+        ],
+        "id long, user_id long, started_at timestamp, finished_at timestamp, "
+        "origin_staypoint_id long, destination_staypoint_id long, "
+        "geom struct<origin:struct<lon:double,lat:double>,dest:struct<lon:double,lat:double>>",
+    )
+    trips_out, tours = generate_tours(trips)
+    assert _shuffles(tours) == [
+        "hashpartitioning(user_id)",
+        "rangepartitioning(user_id ASC NULLS FIRST, seq ASC NULLS FIRST)",
+    ]
+    for out in (trips_out, tours):
+        names = {n.getClass().getSimpleName() for n in _physical_nodes(out)}
+        assert not any("Window" in n for n in names), names
+        assert not any("__session" in s for s in _shuffles(out))
 
 
 def test_distance_matrix_band_prefilter_before_trig(spark):

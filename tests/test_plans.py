@@ -61,7 +61,8 @@ def test_dense_id_runs_an_uncached_kernel_once_with_stable_ids(spark):
 def test_dense_id_leaves_a_caller_cache_and_frees_its_own_on_failure(spark):
     """The id pass frees only the input cache it made: a frame the
     caller cached is still cached after the helper's output is read,
-    and a kernel that raises inside the helper leaves nothing pinned."""
+    and a kernel that raises inside the helper leaves nothing pinned
+    and nothing registered for release."""
     import pytest
     from pyspark import StorageLevel
 
@@ -79,9 +80,11 @@ def test_dense_id_leaves_a_caller_cache_and_frees_its_own_on_failure(spark):
         raise ValueError("kernel failed")
 
     raw = mine.groupBy("user_id").applyInPandas(boom, schema="user_id long, t long")
+    registered = len(ids._ID_CACHES)
     with pytest.raises(Exception, match="kernel failed"):
         dense_id_by_user(raw, order_by=["t"])
     assert _pinned_ids(spark) <= before
+    assert len(ids._ID_CACHES) == registered
     ids.release_id_caches()
 
 

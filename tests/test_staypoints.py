@@ -124,6 +124,21 @@ def test_partition_count_invariance(spark):
     assert sorted(map(str, sp1.collect())) == sorted(map(str, sp7.collect()))
 
 
+def _gated_and_split(spark, rows):
+    """Staypoints of ``rows`` through the gated (single-group) path and
+    with every user forced through per-session splitting."""
+    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
+
+    pfs = make_pfs(spark, rows)
+    _, gated = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
+    spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")  # every user splits
+    try:
+        _, split = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
+    finally:
+        spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
+    return gated, split
+
+
 def test_session_salting_equivalence(spark):
     """Salted (per-session) kernel groups produce IDENTICAL staypoints:
     gap boundaries reset the anchor without emitting, so no state
@@ -136,19 +151,15 @@ def test_session_salting_equivalence(spark):
             i += 1
         rows.append((i, 1, _ts(block * 60 + 13), 8.5 + block * 0.2 + 0.1, 47.5))
         i += 1
-    pfs = make_pfs(spark, rows)
-    _, a = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15, salt_sessions=True)
-    _, b = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15, salt_sessions=False)
-    assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
-    assert a.count() == 3
+    gated, split = _gated_and_split(spark, rows)
+    assert sorted(map(str, split.collect())) == sorted(map(str, gated.collect()))
+    assert split.count() == 3
 
 
 def test_salting_gate_equivalence(spark):
     """The mega-user gate only changes the GROUPING, never the output:
     forcing every user through per-session splitting must equal the
     gated (single-group) path row for row."""
-    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
-
     rows = []
     i = 0
     for user in (1, 2):
@@ -156,16 +167,5 @@ def test_salting_gate_equivalence(spark):
             for m in range(0, 11, 2):
                 rows.append((i, user, _ts(block * 60 + m), 8.5 + block * 0.2, 47.4))
                 i += 1
-    pfs = make_pfs(spark, rows)
-
-    _, gated = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
-    spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")  # every user splits
-    try:
-        _, split = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
-    finally:
-        spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
-
-    cols = ["user_id", "started_at", "finished_at"]
-    assert sorted(map(tuple, gated.select(*cols).collect())) == sorted(
-        map(tuple, split.select(*cols).collect())
-    )
+    gated, split = _gated_and_split(spark, rows)
+    assert sorted(map(str, gated.collect())) == sorted(map(str, split.collect()))

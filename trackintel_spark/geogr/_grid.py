@@ -36,6 +36,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from trackintel_spark.plans.literals import sql_double
+
 # meters per degree of latitude under the haversine sphere
 # (R = 6,371,000 — functions/spatial.py and _pair_cost use the same R)
 DEG2M = math.pi / 180.0 * 6_371_000.0
@@ -48,54 +50,50 @@ def cell_size_deg(tau_m: float) -> float:
     return max(tau_m, 1.0) / DEG2M
 
 
-def _band_geometry(cy: Column, cell_deg: float) -> tuple[Column, Column]:
-    """(cos of the band's equator-near edge, cos of its pole-near edge),
-    both clamped away from 0 so polar bands divide cleanly."""
-    eq_edge = F.greatest(cy, -cy - 1).cast("double") * cell_deg
-    pole_edge = F.least(eq_edge + cell_deg, F.lit(90.0))
-    cos_eq = F.greatest(F.cos(F.radians(eq_edge)), F.lit(1e-9))
-    cos_pole = F.greatest(F.cos(F.radians(pole_edge)), F.lit(1e-9))
-    return cos_eq, cos_pole
+def _band_sql(band: str, deg: str) -> tuple[str, str, str]:
+    """SQL for a band's (cell count, cell width in lon degrees, cos of
+    its pole-near edge); ``band`` is the band index as a BIGINT SQL
+    expression, ``deg`` the band height as a DOUBLE literal. The count
+    is integral so the band tiles the circle exactly and indices alias
+    modulo the count across ±180°; cosines are clamped away from 0 so
+    polar bands divide cleanly. SQL text rather than Column trees: a
+    Column costs one py4j call per node, thousands per plan build."""
+    eq_edge = f"CAST(greatest({band}, -({band}) - 1) AS DOUBLE) * {deg}"
+    cos_eq = f"greatest(cos(radians({eq_edge})), 1.0E-9D)"
+    cos_pole = f"greatest(cos(radians(least({eq_edge} + {deg}, 90.0D))), 1.0E-9D)"
+    n = f"CAST(greatest(floor(360.0D / ({deg} / {cos_eq})), 1) AS BIGINT)"
+    return n, f"(360.0D / CAST({n} AS DOUBLE))", cos_pole
 
 
-def _band_cells(cy: Column, cell_deg: float) -> tuple[Column, Column]:
-    """(cell width in lon degrees, cell count) of a band — the count is
-    integral so the band tiles the circle exactly and indices alias
-    modulo the count across ±180°."""
-    cos_eq, _ = _band_geometry(cy, cell_deg)
-    w_ideal = F.lit(cell_deg) / cos_eq
-    n = F.greatest(F.floor(F.lit(360.0) / w_ideal), F.lit(1)).cast("long")
-    return F.lit(360.0) / n.cast("double"), n
+def own_cell(lon: str, lat: str, cell_deg: float) -> tuple[Column, Column]:
+    """The (cy, cx) cell of a point — the lean, non-exploded side.
+    ``lon``/``lat`` are SQL expressions (column names, say)."""
+    deg = sql_double(cell_deg)
+    cy = f"CAST(floor(({lat}) / {deg}) AS BIGINT)"
+    n, w, _ = _band_sql(cy, deg)
+    return F.expr(cy), F.expr(f"pmod(CAST(floor((({lon}) + 180.0D) / {w}) AS BIGINT), {n})")
 
 
-def own_cell(lon: Column, lat: Column, cell_deg: float) -> tuple[Column, Column]:
-    """The (cy, cx) cell of a point — the lean, non-exploded side."""
-    cy = F.floor(lat / cell_deg).cast("long")
-    w_t, n_t = _band_cells(cy, cell_deg)
-    cx = F.pmod(F.floor((lon + F.lit(180.0)) / w_t).cast("long"), n_t)
-    return cy, cx
-
-
-def probe_cells(lon: Column, lat: Column, cell_deg: float) -> Column:
+def probe_cells(lon: str, lat: str, cell_deg: float) -> Column:
     """Every cell the tau-disk around the point can touch, as one
     ``array<struct<cy, cx>>`` — the exploded side of the equi-join.
-    Indices are wrapped modulo the band's cell count, so probes near
-    ±180° alias onto the cells of points on the other side."""
-    cy = F.floor(lat / cell_deg).cast("long")
-
-    def _band(dy: int) -> Column:
-        t_cy = cy + F.lit(dy)
-        _, t_cos_pole = _band_geometry(t_cy, cell_deg)
-        w_t, n_t = _band_cells(t_cy, cell_deg)
-        r_deg = F.lit(cell_deg * 1.05) / t_cos_pole
-        lo = F.floor((lon + F.lit(180.0) - r_deg) / w_t).cast("long")
-        hi = F.floor((lon + F.lit(180.0) + r_deg) / w_t).cast("long")
-        # full-circle cap: when the disk spans the whole band, emit each
-        # cell exactly once; otherwise the consecutive range stays
-        # injective under pmod (range length < modulus), no dedup needed
-        rng = F.when(hi - lo + 1 >= n_t, F.sequence(F.lit(0).cast("long"), n_t - 1)).otherwise(
-            F.transform(F.sequence(lo, hi), lambda tx: F.pmod(tx, n_t))
-        )
-        return F.transform(rng, lambda tx: F.struct(t_cy.alias("cy"), tx.alias("cx")))
-
-    return F.concat(_band(-1), _band(0), _band(1))
+    ``lon``/``lat`` are SQL expressions (column names, say). Indices
+    are wrapped modulo the band's cell count, so probes near ±180°
+    alias onto the cells of points on the other side."""
+    deg = sql_double(cell_deg)
+    n, w, cos_pole = _band_sql("__t", deg)  # per target band __t
+    r = f"({sql_double(cell_deg * 1.05)} / {cos_pole})"
+    lo = f"CAST(floor((({lon}) + 180.0D - {r}) / {w}) AS BIGINT)"
+    hi = f"CAST(floor((({lon}) + 180.0D + {r}) / {w}) AS BIGINT)"
+    # full-circle cap: when the disk spans the whole band, emit each
+    # cell exactly once; otherwise the consecutive range stays
+    # injective under pmod (range length < modulus), no dedup needed
+    rng = (
+        f"CASE WHEN {hi} - {lo} + 1 >= {n} THEN sequence(CAST(0 AS BIGINT), {n} - 1)"
+        f" ELSE transform(sequence({lo}, {hi}), __x -> pmod(__x, {n})) END"
+    )
+    cy = f"CAST(floor(({lat}) / {deg}) AS BIGINT)"
+    return F.expr(
+        f"flatten(transform(array({cy} - 1, {cy}, {cy} + 1),"
+        f" __t -> transform({rng}, __x -> named_struct('cy', __t, 'cx', __x))))"
+    )

@@ -619,11 +619,11 @@ def trajectory_similarity_join(
         F.transform(geom_col, lambda p: p["lon"]).alias("lons"),
         F.transform(geom_col, lambda p: p["lat"]).alias("lats"),
     ).filter(F.col("id").isNotNull() & (F.size("lons") > 0))
-    s_lon, s_lat = F.element_at("lons", 1), F.element_at("lats", 1)
+    s_lon, s_lat = "element_at(lons, 1)", "element_at(lats, 1)"
     own_cy, own_cx = own_cell(s_lon, s_lat, cell_deg)
     rows = flat.select(
         "id", "lons", "lats",
-        s_lon.alias("s_lon"), s_lat.alias("s_lat"),
+        F.expr(s_lon).alias("s_lon"), F.expr(s_lat).alias("s_lat"),
         F.element_at("lons", -1).alias("e_lon"), F.element_at("lats", -1).alias("e_lat"),
         F.array_min("lons").alias("lon_min"), F.array_max("lons").alias("lon_max"),
         F.array_min("lats").alias("lat_min"), F.array_max("lats").alias("lat_max"),

@@ -25,10 +25,10 @@ Semantics reproduced exactly:
   (:162-164 — ids follow the per-user concat order);
 * the input pfs come back with a nullable ``staypoint_id`` (:168-175).
 
-Scale note: one task per user-hash partition; a single mega-user
-serializes into one task. ``session_salt_minutes`` optionally splits a
-user's stream at gaps > gap_threshold into independent kernel calls
-(gap boundaries reset the anchor anyway, so results are identical).
+Scale note: one task per user-hash partition. A user with more than
+``spark.trackintel.salt.minUserRows`` fixes is split at gaps >
+gap_threshold into independent kernel calls (gap boundaries reset the
+anchor anyway, so results are identical).
 """
 
 from __future__ import annotations
@@ -181,18 +181,18 @@ def generate_staypoints(
     gap_threshold: float = 15.0,
     include_last: bool = False,
     exclude_duplicate_pfs: bool = True,
-    salt_sessions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Detect staypoints in positionfixes; returns (pfs+staypoint_id, sp).
 
     Thresholds in the reference's units: dist meters, time/gap minutes.
 
-    ``salt_sessions`` splits each user's stream at recording gaps >
-    gap_threshold into independent kernel groups — results are
-    IDENTICAL (a gap resets the anchor without emitting, so no kernel
-    state crosses it) but a single mega-user no longer serializes into
-    one task. Disabled automatically with ``include_last`` (the
-    trailing-window emit is per user, not per session).
+    A user with more than ``spark.trackintel.salt.minUserRows`` fixes
+    (session salting) is split at recording gaps > gap_threshold into
+    independent kernel groups — results are IDENTICAL (a gap resets the
+    anchor without emitting, so no kernel state crosses it) but a
+    single mega-user no longer serializes into one task. Not with
+    ``include_last`` (the trailing-window emit is per user, not per
+    session).
     """
     if method != "sliding":
         raise ValueError(f"method unknown, only 'sliding' is supported, got {method!r}")
@@ -249,7 +249,7 @@ def generate_staypoints(
             elevation_flag=elevation_flag,
         )
 
-    if salt_sessions and not include_last:
+    if not include_last:
         salt_rows = salt_min_user_rows(kernel_in.sparkSession)
         # salting only pays off for mega-users: every applyInPandas
         # group costs a fixed Arrow dispatch (~1 ms), so splitting

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
 from trackintel_spark.plans.ids import dense_id_by_user
-from trackintel_spark.plans.literals import sql_double
+from trackintel_spark.plans.partitioning import kernel_partitions
 
 _TOUR_SCHEMA = T.StructType(
     [
@@ -139,11 +139,9 @@ def _scan_step(
     # newest stale candidate emits the exact same tours (tests pin
     # batch == reference == stream). With max_nr_gaps > 0 the prune is
     # DISABLED: the reference's gap-overflow slice is bottom-relative
-    # (candidates[j+1:] against the ABSOLUTE stack length — the same
-    # property that already restricts session salting to gap-free
-    # scans, see SCALE.md), so shortening the stack would shift that
-    # slice and change which tours close (caught by the round-12
-    # hypothesis battery).
+    # (candidates[j+1:] against the ABSOLUTE stack length), so
+    # shortening the stack would shift that slice and change which
+    # tours close (caught by the round-12 hypothesis battery).
     if max_nr_gaps == 0:
         j = -1  # forward index of the newest stale candidate
         for idx, cand in enumerate(candidates):
@@ -193,10 +191,8 @@ def _tour_row(members: list, seq: int, use_locations: bool) -> dict:
     }
 
 
-def _trip_records(pdf: pd.DataFrame, use_locations: bool, ctx_col: str | None = None) -> list:
-    """Time-ordered _Trip records from a kernel input frame. With
-    ``ctx_col``, returns (record, is_context) pairs instead — context
-    rows are session-salt seeds (see :func:`generate_tours`)."""
+def _trip_records(pdf: pd.DataFrame, use_locations: bool) -> list:
+    """Time-ordered _Trip records from a kernel input frame."""
     pdf = pdf.sort_values(["started_at", "id"], kind="stable").reset_index(drop=True)
     ids = pdf["id"].to_numpy()
     started = pdf["started_at"].astype("int64").to_numpy() // 1000
@@ -218,7 +214,7 @@ def _trip_records(pdf: pd.DataFrame, use_locations: bool, ctx_col: str | None = 
     def _i(v):
         return None if np.isnan(v) else int(v)
 
-    recs = [
+    return [
         _Trip(
             int(ids[i]), int(started[i]), int(finished[i]),
             _i(o_stp[i]), _i(d_stp[i]), _i(o_loc[i]), _i(d_loc[i]),
@@ -226,27 +222,12 @@ def _trip_records(pdf: pd.DataFrame, use_locations: bool, ctx_col: str | None = 
         )
         for i in range(len(pdf))
     ]
-    if ctx_col is None:
-        return recs
-    flags = pdf[ctx_col].to_numpy()
-    return [(r, bool(flags[i])) for i, r in enumerate(recs)]
 
 
 def _tours_kernel(pdf: pd.DataFrame, use_locations: bool, max_dist: float, max_time_s: float, max_nr_gaps: int) -> pd.DataFrame:
-    salted = "__ctx" in pdf.columns
     candidates: list = []
     out: list[dict] = []
-    for item in _trip_records(pdf, use_locations, ctx_col="__ctx" if salted else None):
-        rec, is_ctx = item if salted else (item, False)
-        if is_ctx:
-            # session-salt seed: the last trip BEFORE the max_time gap.
-            # After any trip's iteration the stack always ends with that
-            # trip, so candidates=[ctx] replicates the unsalted stack's
-            # observable state exactly (everything deeper is max_time-
-            # pruned before any scan can use it); its own tours were
-            # emitted by the previous session, so no scan runs here.
-            candidates = [rec]
-            continue
+    for rec in _trip_records(pdf, use_locations):
         candidates, members = _scan_step(
             candidates, rec, use_locations, max_dist, max_time_s, max_nr_gaps
         )
@@ -255,8 +236,6 @@ def _tours_kernel(pdf: pd.DataFrame, use_locations: bool, max_dist: float, max_t
 
     res = pd.DataFrame(out, columns=[f.name for f in _TOUR_SCHEMA.fields if f.name != "user_id"])
     res["user_id"] = pdf["user_id"].iloc[0] if len(pdf) else None
-    if salted:
-        res["__session"] = pdf["__session"].iloc[0] if len(pdf) else None
     return res
 
 
@@ -266,32 +245,16 @@ def generate_tours(
     max_dist: float = 100.0,
     max_time: float = 1440.0,
     max_nr_gaps: int = 0,
-    salt_sessions: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Generate tours; returns (trips+tour_id list, tours).
 
     ``max_time`` in minutes (reference default '1D').
 
-    ``salt_sessions`` splits each mega-user's trip stream at gaps where
-    consecutive trip starts are > ``max_time`` apart — no tour can span
-    such a gap (every cross-gap candidate is max_time-pruned), so a
-    years-long user no longer serializes into one kernel task. Each
-    session is seeded with the last pre-gap trip as a context row,
-    which makes the split EXACT for ``max_nr_gaps == 0`` (the unsalted
-    stack's last element is always that trip; everything deeper is
-    unreachable past the gap) — pinned by salted == unsalted tests
-    incl. a randomized fuzz. Gated on the per-user row count like the
-    staypoint kernel (``spark.trackintel.salt.minUserRows`` overrides):
-    ordinary users stay one group.
-
-    With ``max_nr_gaps > 0`` the reference scan's gap-budget slicing
-    (its verbatim ``candidates[j+1:]``, a BOTTOM-relative index —
-    preprocessing/trips.py:297) makes the surviving stack depend on the
-    absolute stack length, INCLUDING time-stale candidates below the
-    session boundary; no bounded context seed can reproduce that, so
-    salting silently degrades exactness. ``generate_tours`` therefore
-    ignores ``salt_sessions`` and runs the per-user kernel whenever
-    ``max_nr_gaps > 0`` (found by the randomized fuzz test).
+    Each user's trips run through one ``applyInPandas`` call of the
+    stack scan, as in the reference, so a user's whole history is one
+    task. With ``max_nr_gaps == 0`` the scan's work is linear in trips
+    times the candidates inside one ``max_time`` window (SCALE.md,
+    "tours kernel (mega-user)").
     """
     validate(trips, "trips")
     use_locations = staypoints is not None
@@ -355,62 +318,12 @@ def generate_tours(
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         return _tours_kernel(pdf, use_locations, max_dist, max_time_s, max_nr_gaps)
 
-    from trackintel_spark.plans.partitioning import kernel_partitions, salt_min_user_rows
-
-    if salt_sessions and max_nr_gaps > 0:
-        # the gap-budget slicing is bottom-relative (see docstring): a
-        # session split changes the stack length and silently changes
-        # the result — exactness wins, run per-user.
-        salt_sessions = False
-
-    if salt_sessions:
-        # same gate as the staypoints sliding kernel
-        salt_rows = salt_min_user_rows(kin.sparkSession)
-        base_cols = list(kin.columns)
-        _WG = "OVER (PARTITION BY user_id ORDER BY started_at, id)"
-        flagged = kin.selectExpr(
-            "*",
-            "CAST(coalesce(CAST(started_at AS double) - CAST(lag(started_at) "
-            f"{_WG} AS double) > {sql_double(max_time_s)}, true) AS long) AS __gap_flag",
-        ).selectExpr(
-            "*",
-            f"sum(__gap_flag) {_WG} AS __session0",
-            "count(1) OVER (PARTITION BY user_id) AS __user_n",
-        ).selectExpr(
-            *base_cols,
-            "__gap_flag",
-            f"CASE WHEN __user_n > {int(salt_rows)} THEN __session0 ELSE CAST(0 AS long) END AS __session",
-        )
-        # context rows: the previous trip, injected into the NEW session
-        # (same wgap exchange — the lags ride the existing sort)
-        ctx = flagged.selectExpr(
-            "*",
-            *[f"lag({c}) {_WG} AS __prev_{c}" for c in base_cols if c != "user_id"],
-        ).filter(
-            "__gap_flag = 1 AND __session > 0 AND __prev_started_at IS NOT NULL"
-        ).selectExpr(
-            *[(f"__prev_{c} AS {c}" if c != "user_id" else "user_id") for c in base_cols],
-            "__session",
-            "1 AS __ctx",
-        )
-        kin2 = flagged.selectExpr(*base_cols, "__session", "0 AS __ctx").unionByName(ctx)
-        group_cols = ["user_id", "__session"]
-        schema = T.StructType(
-            list(_TOUR_SCHEMA.fields) + [T.StructField("__session", T.LongType())]
-        )
-        order_by = ["__session", "seq"]
-    else:
-        kin2 = kin
-        group_cols = ["user_id"]
-        schema = _TOUR_SCHEMA
-        order_by = ["seq"]
-
     raw = (
-        kin2.repartition(kernel_partitions(kin2), *group_cols)
-        .groupBy(*group_cols)
-        .applyInPandas(_run, schema=schema)
+        kin.repartition(kernel_partitions(kin), "user_id")
+        .groupBy("user_id")
+        .applyInPandas(_run, schema=_TOUR_SCHEMA)
     )
-    tours = dense_id_by_user(raw, order_by=order_by, id_col="id").drop("seq", "__session")
+    tours = dense_id_by_user(raw, order_by=["seq"], id_col="id").drop("seq")
 
     links = tours.select(F.col("id").alias("tour_id"), F.explode("trips").alias("id"))
     tour_lists = links.groupBy("id").agg(F.sort_array(F.collect_list("tour_id")).alias("tour_id"))

@@ -51,7 +51,10 @@ def persist_owned(df: DataFrame, *args) -> DataFrame:
     frees it. For caches that outlive the call that made them (the
     returned plan reads them). A plan that is already registered (the
     same operator re-run on the same input) keeps its one entry."""
-    df = df.persist(*args)
+    return _register(df.persist(*args))
+
+
+def _register(df: DataFrame) -> DataFrame:
     key = df.semanticHash()
     with _ID_CACHES_LOCK:
         if not any(k == key and h.sameSemantics(df) for k, h in _ID_CACHES):
@@ -160,6 +163,10 @@ def dense_id_by_user(
     not run two passes with different sort keys over one uncached
     ``df`` at once: the first to finish drops the input cache under
     the other's unloaded sorted cache.
+
+    The sorted cache is registered for :func:`release_id_caches` only
+    once the counting job has succeeded: a failed job leaves neither
+    cache behind.
     """
     p = df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in [user_col, *order_by]]
@@ -167,16 +174,24 @@ def dense_id_by_user(
     if owned:
         df = df.persist()
     try:
-        d = persist_owned(
+        d = (
             df.repartitionByRange(p, *cols)
             .sortWithinPartitions(*cols)
             .withColumn("__p", F.spark_partition_id())
             .withColumn("__pos", F.monotonically_increasing_id() - F.shiftleft(F.col("__p").cast("long"), 33))
         )
-        counts = {r["__p"]: r["__n"] for r in d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")).collect()}
+        fresh = d.storageLevel == StorageLevel.NONE
+        d = d.persist()
+        try:
+            counts = {r["__p"]: r["__n"] for r in d.groupBy("__p").agg(F.count(F.lit(1)).alias("__n")).collect()}
+        except BaseException:
+            if fresh:
+                d.unpersist(blocking=False)
+            raise
     finally:
         if owned:
             df.unpersist(blocking=False)
+    _register(d)
     bases: list[str] = []
     acc = 0
     for pid in sorted(counts):

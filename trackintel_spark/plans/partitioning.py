@@ -92,17 +92,16 @@ def write_bucketed_by_user(
 #: SALT_MIN_USER_ROWS_CONF, "50000")``) without editing source.
 SALT_MIN_USER_ROWS_CONF = "spark.trackintel.salt.minUserRows"
 
-#: users below this row count run a sequential kernel as ONE group;
-#: above it, their stream splits at natural gaps (session salting) so
-#: no single task serializes a mega-user. 200k rows ≈ well under a
-#: second of kernel time per task.
+#: users up to this fix count run the staypoint kernel as ONE group;
+#: above it, their stream splits at recording gaps (session salting) so
+#: no single task serializes a mega-user (the sliding scan is a Python
+#: loop over the user's fixes; a 1 Hz device logs 200k in 2.3 days).
 DEFAULT_SALT_MIN_USER_ROWS = 200_000
 
 
 def salt_min_user_rows(spark) -> int:
-    """The per-user row threshold above which sequential kernels
-    (generate_staypoints' sliding window, generate_tours' stack scan)
-    split a user's stream at natural gaps. Reads
+    """The per-user fix count above which generate_staypoints' sliding
+    kernel splits a user's stream at recording gaps. Reads
     ``spark.trackintel.salt.minUserRows`` when set; falls back to
     :data:`DEFAULT_SALT_MIN_USER_ROWS` on absent/non-numeric values."""
     try:

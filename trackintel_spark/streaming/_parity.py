@@ -21,26 +21,39 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 
-class _FakeState:
-    """In-memory ``GroupState`` stand-in for the batch path: never
-    exists, accepts one update. (``get`` is an attribute-style method
-    rather than the real property — the kernels only touch it behind an
-    ``exists`` check, which is always False here.)"""
+class _InnerState:
+    """``GroupState`` stand-in for a state the runtime does not hold:
+    reads come from ``vals`` (``None``: the state does not exist),
+    writes are captured in ``updated``/``removed`` for the caller to
+    use. The batch path hands the kernel ``_InnerState(None)`` (each
+    group is seen once, so there is nothing to carry);
+    :func:`~trackintel_spark.streaming.reorder.apply_with_reorder`
+    hands it the kernel's slice of its combined state."""
 
-    exists = False
     hasTimedOut = False
 
-    def get(self):  # pragma: no cover - interface parity
-        raise ValueError
+    def __init__(self, vals: tuple | None):
+        self._vals = vals
+        self.exists = vals is not None
+        self.updated: tuple | None = None
+        self.removed = False
 
-    def update(self, v):
-        self._v = v
+    @property
+    def get(self) -> tuple:
+        if self._vals is None:
+            raise ValueError("state does not exist")
+        return self._vals
 
-    def remove(self):  # pragma: no cover - interface parity
-        self._v = None
+    def update(self, v) -> None:
+        self.updated = tuple(v)
+        self.removed = False
 
-    def setTimeoutDuration(self, ms):
-        # batch mode sees each group once; a TTL is vacuous
+    def remove(self) -> None:
+        self.removed = True
+        self.updated = None
+
+    def setTimeoutDuration(self, ms) -> None:
+        # no runtime holds this state, so a timeout is vacuous
         pass
 
 
@@ -54,7 +67,7 @@ def apply_with_batch_parity(
 ) -> DataFrame:
     """Run a stateful kernel on ``df`` grouped by ``key_cols`` —
     ``applyInPandasWithState`` (append mode) when ``df`` is streaming,
-    the same kernel via ``applyInPandas`` + :class:`_FakeState` when it
+    the same kernel via ``applyInPandas`` + ``_InnerState(None)`` when it
     is a batch frame. All current keys are integral columns; the batch
     key is coerced to python ints to match the streaming runtime's key
     tuples. Kernels that opt into a ``timeout`` other than ``NoTimeout``
@@ -68,7 +81,7 @@ def apply_with_batch_parity(
 
     def batch_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         key = tuple(int(pdf[c].iloc[0]) for c in key_cols)
-        frames = list(fn(key, iter([pdf]), _FakeState()))
+        frames = list(fn(key, iter([pdf]), _InnerState(None)))
         return (
             pd.concat(frames, ignore_index=True)
             if frames

@@ -56,41 +56,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from trackintel_spark.streaming._parity import apply_with_batch_parity
+from trackintel_spark.streaming._parity import _InnerState, apply_with_batch_parity
 
 # sentinel "no frontier yet" — below any real epoch-µs
 _NEG = -(1 << 62)
-
-
-class _InnerState:
-    """GroupState facade handed to the wrapped kernel: reads come from
-    the inner slice of the combined state tuple, writes are captured
-    for the wrapper to merge back."""
-
-    hasTimedOut = False
-
-    def __init__(self, vals: tuple | None):
-        self._vals = vals
-        self.exists = vals is not None
-        self.updated: tuple | None = None
-        self.removed = False
-
-    @property
-    def get(self) -> tuple:
-        if self._vals is None:
-            raise ValueError("state does not exist")
-        return self._vals
-
-    def update(self, v) -> None:
-        self.updated = tuple(v)
-        self.removed = False
-
-    def remove(self) -> None:
-        self.removed = True
-        self.updated = None
-
-    def setTimeoutDuration(self, ms) -> None:  # pragma: no cover - parity
-        pass
 
 
 def apply_with_reorder(

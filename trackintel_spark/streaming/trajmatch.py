@@ -82,7 +82,7 @@ def index_trajectory_corpus(
 
     cells = flat.select(
         "c_id", "c_s_lon", "c_s_lat", "c_e_lon", "c_e_lat",
-        F.explode(probe_cells(F.col("c_s_lon"), F.col("c_s_lat"), cell_deg)).alias("__c"),
+        F.explode(probe_cells("c_s_lon", "c_s_lat", cell_deg)).alias("__c"),
     ).select(
         F.col("__c.cy").alias("cy"), F.col("__c.cx").alias("cx"),
         "c_id", "c_s_lon", "c_s_lat", "c_e_lon", "c_e_lat",
@@ -112,7 +112,7 @@ def trajectory_match_stream(
 
     cell_deg = cell_size_deg(tau_m)
     q = _endpoints(_flatten(trajs, id_col, geom_col, "q_"), "q_")
-    cy, cx = own_cell(F.col("q_s_lon"), F.col("q_s_lat"), cell_deg)
+    cy, cx = own_cell("q_s_lon", "q_s_lat", cell_deg)
     q = q.withColumn("cy", cy).withColumn("cx", cx)
 
     d_ss = haversine_m(F.col("q_s_lon"), F.col("q_s_lat"), F.col("c_s_lon"), F.col("c_s_lat"))
