@@ -461,24 +461,6 @@ def test_tours_pinned_across_max_time_gaps(spark):
         }, f"max_nr_gaps={gaps}"
 
 
-def test_salt_min_user_rows_conf_knob(spark):
-    """The staypoint kernel's session-salting threshold comes from
-    plans.partitioning: the spark.trackintel.salt.minUserRows conf
-    overrides the module default; non-numeric values fall back."""
-    from trackintel_spark.plans.partitioning import (
-        DEFAULT_SALT_MIN_USER_ROWS, SALT_MIN_USER_ROWS_CONF, salt_min_user_rows,
-    )
-
-    assert salt_min_user_rows(spark) == DEFAULT_SALT_MIN_USER_ROWS == 200_000
-    try:
-        spark.conf.set(SALT_MIN_USER_ROWS_CONF, "123")
-        assert salt_min_user_rows(spark) == 123
-        spark.conf.set(SALT_MIN_USER_ROWS_CONF, "not-a-number")
-        assert salt_min_user_rows(spark) == 200_000  # graceful fallback
-    finally:
-        spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
-
-
 # -- journey flag (reference model/tours.py:25,30) -----------------------------
 
 

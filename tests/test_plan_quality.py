@@ -137,6 +137,24 @@ def test_spatial_filter_broadcasts_areas(spark):
     assert "Broadcast" in plan
 
 
+def test_staypoint_kernel_reads_one_user_exchange(spark):
+    """generate_staypoints runs its per-user sliding kernel behind the
+    operator's one user_id exchange: the duplicate drop and the kernel
+    groupBy add no shuffle, and the id pass adds its one range shuffle."""
+    from trackintel_spark.operators import generate_staypoints
+
+    ev = load_table(spark, SF, "events")
+    pfs = ev.select(
+        F.col("event_id").alias("id"), "user_id", F.col("ts").alias("tracked_at"),
+        F.struct((8.5 + F.col("value") % 3 * 0.05).alias("lon"), F.lit(47.4).alias("lat")).alias("geom"),
+    )
+    _, sp = generate_staypoints(pfs, dist_threshold=200, time_threshold=5, gap_threshold=120)
+    assert _shuffles(sp.select("id")) == [
+        "hashpartitioning(user_id)",
+        "rangepartitioning(user_id ASC NULLS FIRST, started_at ASC NULLS FIRST)",
+    ]
+
+
 def test_tripleg_kernel_reads_one_user_exchange(spark):
     """The per-user tripleg kernel reads the operator's single hash
     exchange on user_id; nothing re-shuffles the pfs on the way, and

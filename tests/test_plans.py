@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from trackintel_spark.plans.ids import dense_id_by_user
-from trackintel_spark.plans.partitioning import co_partition_by_user, write_bucketed_by_user
+from trackintel_spark.plans.partitioning import write_bucketed_by_user
 
 
 def test_dense_id_matches_global_row_number(spark):
@@ -239,16 +239,6 @@ def test_dense_id_partition_invariance(spark):
     a = {tuple(r) for r in dense_id_by_user(df.repartition(1), ["t", "user_id"], "id").collect()}
     b = {tuple(r) for r in dense_id_by_user(df.repartition(17), ["t", "user_id"], "id").collect()}
     assert a == b
-
-
-def test_co_partition_by_user(spark):
-    df = spark.createDataFrame([(i % 4, i) for i in range(40)], "user_id long, v long")
-    out = co_partition_by_user(df, num_partitions=4)
-    # all rows of one user land in one partition
-    parts = out.withColumn("__p", F.spark_partition_id()).groupBy("user_id").agg(
-        F.countDistinct("__p").alias("n")
-    )
-    assert all(r.n == 1 for r in parts.collect())
 
 
 def test_write_bucketed_by_user(spark, tmp_path):

@@ -124,48 +124,30 @@ def test_partition_count_invariance(spark):
     assert sorted(map(str, sp1.collect())) == sorted(map(str, sp7.collect()))
 
 
-def _gated_and_split(spark, rows):
-    """Staypoints of ``rows`` through the gated (single-group) path and
-    with every user forced through per-session splitting."""
-    from trackintel_spark.plans.partitioning import SALT_MIN_USER_ROWS_CONF
-
-    pfs = make_pfs(spark, rows)
-    _, gated = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
-    spark.conf.set(SALT_MIN_USER_ROWS_CONF, "0")  # every user splits
-    try:
-        _, split = generate_staypoints(pfs, dist_threshold=100, time_threshold=5, gap_threshold=15)
-    finally:
-        spark.conf.unset(SALT_MIN_USER_ROWS_CONF)
-    return gated, split
-
-
-def test_session_salting_equivalence(spark):
-    """Salted (per-session) kernel groups produce IDENTICAL staypoints:
-    gap boundaries reset the anchor without emitting, so no state
-    crosses them."""
+def test_gap_separated_bursts_of_two_users(spark):
+    """Three bursts per user, each closed by a far fix and separated by
+    gaps > gap_threshold: every burst is one staypoint, whichever fixes
+    of the user the kernel sees around it (a gap resets the anchor
+    without emitting), and ids run dense in (user_id, started_at)
+    order."""
     rows = []
     i = 0
-    for block in range(3):  # three bursts separated by >15-min gaps
-        for m in range(0, 11, 2):
-            rows.append((i, 1, _ts(block * 60 + m), 8.5 + block * 0.2, 47.4))
-            i += 1
-        rows.append((i, 1, _ts(block * 60 + 13), 8.5 + block * 0.2 + 0.1, 47.5))
-        i += 1
-    gated, split = _gated_and_split(spark, rows)
-    assert sorted(map(str, split.collect())) == sorted(map(str, gated.collect()))
-    assert split.count() == 3
-
-
-def test_salting_gate_equivalence(spark):
-    """The mega-user gate only changes the GROUPING, never the output:
-    forcing every user through per-session splitting must equal the
-    gated (single-group) path row for row."""
-    rows = []
-    i = 0
-    for user in (1, 2):
+    for user, offset in ((1, 0), (2, 30)):
         for block in range(3):
+            t0 = offset + block * 60
             for m in range(0, 11, 2):
-                rows.append((i, user, _ts(block * 60 + m), 8.5 + block * 0.2, 47.4))
+                rows.append((i, user, _ts(t0 + m), 8.5 + block * 0.2, 47.4))
                 i += 1
-    gated, split = _gated_and_split(spark, rows)
-    assert sorted(map(str, gated.collect())) == sorted(map(str, split.collect()))
+            rows.append((i, user, _ts(t0 + 13), 8.5 + block * 0.2 + 0.1, 47.5))
+            i += 1
+    _, sp = generate_staypoints(make_pfs(spark, rows), dist_threshold=100, time_threshold=5, gap_threshold=15)
+    got = [tuple(r) for r in sp.select("id", "user_id", "started_at", "finished_at").orderBy("id").collect()]
+    t = lambda m: T0 + timedelta(minutes=m)  # noqa: E731
+    assert got == [
+        (0, 1, t(0), t(13)),
+        (1, 1, t(60), t(73)),
+        (2, 1, t(120), t(133)),
+        (3, 2, t(30), t(43)),
+        (4, 2, t(90), t(103)),
+        (5, 2, t(150), t(163)),
+    ]

@@ -11,13 +11,16 @@ Generates inputs with ``spark.range`` (pure compute, no IO) and times
   units (the mega-user case of its per-user kernel);
 * ``generate_triplegs`` alone on ONE user with many positionfixes (the
   mega-user case of its per-user kernel);
+* ``generate_staypoints`` alone on the same ONE-user positionfixes (the
+  mega-user case of its sliding kernel);
 * ``trajectory_similarity_join`` on a dense corpus of short (2-7
   vertices) and long (50-55 vertices) trajectories.
 
 Usage::
 
     python tools/scale_probe.py [chain_rows ...] [--dbscan rows ...] [--trips-user units ...]
-        [--triplegs-user fixes ...] [--trajectory-join trajectories ...]
+        [--triplegs-user fixes ...] [--staypoints-user fixes ...]
+        [--trajectory-join trajectories ...]
 
 Only the named cases run; with no arguments, the chain at 1M and 10M
 positionfixes and DBSCAN at 1M and 4M points. Results go to SCALE.md's
@@ -212,22 +215,35 @@ def triplegs_user_input(spark, n: int):
     )
 
 
-def run_triplegs_user(spark, n: int) -> dict:
-    """``generate_triplegs`` over :func:`triplegs_user_input` with both
-    outputs written to the noop sink; the input is materialized first
-    so the wall is the operator alone."""
-    from trackintel_spark.operators import generate_triplegs
+def _run_pfs_user(spark, n: int, operator, out_name: str) -> dict:
+    """``operator(pfs, gap_threshold=60)`` over :func:`triplegs_user_input`
+    with both outputs written to the noop sink; the input is
+    materialized first so the wall is the operator alone."""
     from trackintel_spark.plans.ids import release_id_caches
 
     pfs = triplegs_user_input(spark, n).localCheckpoint()
     t0 = time.time()
-    pfs2, tpls = generate_triplegs(pfs, gap_threshold=60)
-    for d in (tpls, pfs2):
+    pfs2, out = operator(pfs, gap_threshold=60)
+    for d in (out, pfs2):
         d.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
-    n_tpls = tpls.count()
+    n_out = out.count()
     release_id_caches()
-    return {"fixes": n, "wall_s": round(wall, 1), "triplegs": n_tpls}
+    return {"fixes": n, "wall_s": round(wall, 1), out_name: n_out}
+
+
+def run_triplegs_user(spark, n: int) -> dict:
+    from trackintel_spark.operators import generate_triplegs
+
+    return _run_pfs_user(spark, n, generate_triplegs, "triplegs")
+
+
+def run_staypoints_user(spark, n: int) -> dict:
+    """The sliding kernel's mega-user case; the operator drops the
+    input's ``staypoint_id``."""
+    from trackintel_spark.operators import generate_staypoints
+
+    return _run_pfs_user(spark, n, generate_staypoints, "staypoints")
 
 
 def run_dbscan(spark, n: int) -> dict:
@@ -421,7 +437,8 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
 def main():
     from trackintel_spark import get_spark
 
-    groups = {"chain": [], "--dbscan": [], "--trips-user": [], "--triplegs-user": [], "--trajectory-join": []}
+    groups = {"chain": [], "--dbscan": [], "--trips-user": [], "--triplegs-user": [], "--staypoints-user": [],
+              "--trajectory-join": []}
     key = "chain"
     for a in sys.argv[1:]:
         if a in groups:
@@ -430,8 +447,8 @@ def main():
             groups[key].append(int(a))
     if len(sys.argv) == 1:
         groups.update({"chain": [1_000_000, 10_000_000], "--dbscan": [1_000_000, 4_000_000]})
-    chain_ns, db_ns, trips_ns, tpl_ns, tj_ns = (
-        groups[k] for k in ("chain", "--dbscan", "--trips-user", "--triplegs-user", "--trajectory-join"))
+    chain_ns, db_ns, trips_ns, tpl_ns, sp_ns, tj_ns = (groups[k] for k in (
+        "chain", "--dbscan", "--trips-user", "--triplegs-user", "--staypoints-user", "--trajectory-join"))
 
     os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark()
@@ -444,6 +461,8 @@ def main():
         print("trips_user", run_trips_user(spark, n), flush=True)
     for n in tpl_ns:
         print("triplegs_user", run_triplegs_user(spark, n), flush=True)
+    for n in sp_ns:
+        print("staypoints_user", run_staypoints_user(spark, n), flush=True)
     for n in tj_ns:
         for leg in (2, 50):
             print(f"trajectory_join leg={leg}", run_trajectory_join(spark, n, leg_len=leg), flush=True)

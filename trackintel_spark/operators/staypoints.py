@@ -25,10 +25,9 @@ Semantics reproduced exactly:
   (:162-164 — ids follow the per-user concat order);
 * the input pfs come back with a nullable ``staypoint_id`` (:168-175).
 
-Scale note: one task per user-hash partition. A user with more than
-``spark.trackintel.salt.minUserRows`` fixes is split at gaps >
-gap_threshold into independent kernel calls (gap boundaries reset the
-anchor anyway, so results are identical).
+Scale note: one kernel call per user behind one ``user_id`` exchange, as
+in the other generate_* operators and the streaming staypoint operator;
+a user's whole fix history is one pandas group.
 """
 
 from __future__ import annotations
@@ -43,7 +42,6 @@ from pyspark.sql import types as T
 
 from trackintel_spark.model.schemas import validate
 from trackintel_spark.plans.ids import dense_id_by_user
-from trackintel_spark.plans.literals import sql_double
 
 _KERNEL_SCHEMA = T.StructType(
     [
@@ -79,7 +77,7 @@ def _sliding_kernel(
     tail_out: list | None = None,
 ) -> pd.DataFrame:
     """Exact port of the Li et al. scan (preprocessing/positionfixes.py:478-535),
-    one pandas group per (user[, session]) partition.
+    one pandas group per user.
 
     ``tail_out``: when a list is passed, the scan's final anchor index is
     appended to it — the open candidate window ``[tail_start:]`` that a
@@ -186,13 +184,8 @@ def generate_staypoints(
 
     Thresholds in the reference's units: dist meters, time/gap minutes.
 
-    A user with more than ``spark.trackintel.salt.minUserRows`` fixes
-    (session salting) is split at recording gaps > gap_threshold into
-    independent kernel groups — results are IDENTICAL (a gap resets the
-    anchor without emitting, so no kernel state crosses it) but a
-    single mega-user no longer serializes into one task. Not with
-    ``include_last`` (the trailing-window emit is per user, not per
-    session).
+    Each user's fixes are one kernel call, so a mega-user runs in one
+    task (SCALE.md, "staypoints kernel (mega-user)").
     """
     if method != "sliding":
         raise ValueError(f"method unknown, only 'sliding' is supported, got {method!r}")
@@ -202,15 +195,13 @@ def generate_staypoints(
 
     pfs = pfs.drop("staypoint_id")
 
-    from trackintel_spark.plans.partitioning import kernel_partitions, salt_min_user_rows
+    from trackintel_spark.plans.partitioning import kernel_partitions
 
     # ONE user_id exchange serves the whole operator (r12, guide §2.4):
-    # the duplicate-drop aggregation, the salt windows, the kernel
-    # groupBy and the link-back join's pfs side all require only
-    # clustering by a key set CONTAINING user_id, so hash(user_id)
-    # satisfies every one of them — the previous shape paid four
-    # full-table exchanges (dedup keys, window, kernel keys, join id).
-    # Explicit repartition => AQE cannot coalesce the kernel stage.
+    # the duplicate-drop aggregation, the kernel groupBy and the
+    # link-back join's pfs side all require only clustering by a key
+    # set CONTAINING user_id, so hash(user_id) satisfies every one of
+    # them. Explicit repartition => AQE cannot coalesce the kernel stage.
     kp = kernel_partitions(pfs)
     pfs = pfs.repartition(kp, "user_id")
 
@@ -249,46 +240,7 @@ def generate_staypoints(
             elevation_flag=elevation_flag,
         )
 
-    if not include_last:
-        salt_rows = salt_min_user_rows(kernel_in.sparkSession)
-        # salting only pays off for mega-users: every applyInPandas
-        # group costs a fixed Arrow dispatch (~1 ms), so splitting
-        # ordinary users at their gaps multiplies overhead for zero
-        # parallelism gain. Gate on the per-user row count (an
-        # unordered window over the SAME exchange — no extra shuffle):
-        # small users run as one group, big users split per session.
-        # Results are identical either way — the kernel resets its
-        # anchor at gaps without emitting, so no state crosses one.
-        _WG = "OVER (PARTITION BY user_id ORDER BY tracked_at, id)"
-        kernel_in = kernel_in.selectExpr(
-            "*",
-            "CAST(coalesce(CAST(tracked_at AS double) - CAST(lag(tracked_at) "
-            f"{_WG} AS double) > {sql_double(gap_threshold_s)}, true) AS long) AS __gap_flag",
-        ).selectExpr(
-            "*",
-            f"sum(__gap_flag) {_WG} AS __session0",
-            "count(1) OVER (PARTITION BY user_id) AS __user_n",
-        ).selectExpr(
-            "id",
-            "user_id",
-            "tracked_at",
-            "lon",
-            "lat",
-            "elevation",
-            f"CASE WHEN __user_n > {int(salt_rows)} THEN __session0 ELSE CAST(0 AS long) END AS __session",
-        )
-        group_cols = ["user_id", "__session"]
-        # the salt exchange stays: it is what spreads a mega-user's
-        # sessions across tasks (the whole point of salting) — but it
-        # now carries only the 7 narrow kernel columns, and it is the
-        # ONLY extra exchange in the operator.
-        kernel_in = kernel_in.repartition(kp, *group_cols)
-    else:
-        # hash(user_id) from the operator-top exchange already clusters
-        # the kernel groups — no further shuffle.
-        group_cols = ["user_id"]
-
-    raw_sp = kernel_in.groupBy(*group_cols).applyInPandas(_run, schema=_KERNEL_SCHEMA)
+    raw_sp = kernel_in.groupBy("user_id").applyInPandas(_run, schema=_KERNEL_SCHEMA)
     # the id pass caches its input for its counting job, and its sorted
     # cache then feeds the sp and link-back branches and every
     # downstream operator: the sliding scan runs once

@@ -24,13 +24,6 @@ def kernel_partitions(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def co_partition_by_user(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Hash-repartition by user_id (in-plan co-location for one job)."""
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("user_id"))
-    return df.repartition(F.col("user_id"))
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -86,25 +79,3 @@ def write_bucketed_by_user(
     for scan pruning (see :func:`write_bucketed`)."""
     write_bucketed(df, table_name, ("user_id",), num_buckets, sort_cols, partition_cols)
 
-
-#: Spark conf key overriding the session-salting row threshold — lets a
-#: cluster operator tune skew splitting (e.g. ``spark.conf.set(
-#: SALT_MIN_USER_ROWS_CONF, "50000")``) without editing source.
-SALT_MIN_USER_ROWS_CONF = "spark.trackintel.salt.minUserRows"
-
-#: users up to this fix count run the staypoint kernel as ONE group;
-#: above it, their stream splits at recording gaps (session salting) so
-#: no single task serializes a mega-user (the sliding scan is a Python
-#: loop over the user's fixes; a 1 Hz device logs 200k in 2.3 days).
-DEFAULT_SALT_MIN_USER_ROWS = 200_000
-
-
-def salt_min_user_rows(spark) -> int:
-    """The per-user fix count above which generate_staypoints' sliding
-    kernel splits a user's stream at recording gaps. Reads
-    ``spark.trackintel.salt.minUserRows`` when set; falls back to
-    :data:`DEFAULT_SALT_MIN_USER_ROWS` on absent/non-numeric values."""
-    try:
-        return int(spark.conf.get(SALT_MIN_USER_ROWS_CONF, str(DEFAULT_SALT_MIN_USER_ROWS)))
-    except (TypeError, ValueError):
-        return DEFAULT_SALT_MIN_USER_ROWS
